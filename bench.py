@@ -91,7 +91,7 @@ def time_pipeline(spark, path: str, n_parts: int, fused: bool = True) -> dict:
     """Full filter chain over the cached clips parquet; returns wall + tput.
 
     fused=True uses the manifest scan (scan+rules+decode in one Python
-    stage); False times the transfer path (JVM scan -> Arrow -> decode UDF).
+    stage); False times the transfer path (JVM scan -> Arrow -> label kernel).
     Both produce identical labels (tests/test_scan_decode.py).
     """
     from pyspark.sql import functions as F

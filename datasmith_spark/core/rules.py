@@ -1,9 +1,9 @@
 """Heuristic quality-rule constants + the pure-python evaluation kernel.
 
-The thresholds here are the single source of truth: the Spark operator
-(datasmith_spark/operators/rules.py) builds native Column expressions from
-these SAME constants, and the oracle evaluates this python kernel — the two
-must agree exactly on every row (verified by tests/test_rules.py at sf0.01).
+The thresholds and this python kernel are the single source of truth: the
+Spark label kernel (datasmith_spark/operators/scan_decode.py) and the
+single-process oracle both evaluate rule_reasons/decode_reasons, so they
+agree exactly on every row (edge cases in tests/test_rules.py).
 
 Ancestry: null-hostile boolean-mask filter
 (/root/reference/src/datasmith/scrape/filter_dashboards.py:113-121, nulls fail
@@ -39,7 +39,6 @@ LANG_PROB_MIN = 0.80
 # per-language ppl band is frozen into the model artifact (core/lm.py)
 
 SYMBOL_RE = re.compile(r"[^A-Za-z0-9 ]")
-SYMBOL_PATTERN_SQL = "[^A-Za-z0-9 ]"  # same class, Java & RE2 dialect-safe
 WS_SPLIT_RE = re.compile(r"\s+")
 
 # canonical stage names (lineage/metrics keys)
@@ -56,8 +55,7 @@ def repetition_score(words: list[str]) -> float:
 
     Length-independent detector of adjacent-phrase repetition (a phrase of
     length p repeated back-to-back matches itself at lag p). Natural Zipf text
-    scores ~ sum(p_word^2) << 0.5. Exactly mirrored by the Spark side with
-    zip_with(slice(w,1,n-p), slice(w,p+1,n-p), ==) aggregates.
+    scores ~ sum(p_word^2) << 0.5.
 
     >>> repetition_score(["buy"] * 10)          # lag-1 stutter
     1.0

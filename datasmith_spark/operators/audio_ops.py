@@ -26,7 +26,6 @@ cap, a sandbox-only I/O-serialization workaround).
 from __future__ import annotations
 
 import hashlib
-import os
 import zlib
 from collections.abc import Callable, Iterator
 
@@ -1123,9 +1122,6 @@ def logmel_features(
 
 # ----------------------------------------------------- fused manifest path
 
-_CLIP_COLUMNS = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
-
-
 def _manifest_scan(
     spark: SparkSession,
     input_dir: str,
@@ -1135,36 +1131,18 @@ def _manifest_scan(
     scan_parallelism: int | None = None,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Fused worker-side parquet scan (shape of scan_decode.scan_rules_decode):
-    file paths are the only rows the JVM ever sees; each task opens its files
-    with pyarrow memory_map and streams bounded row-group batches through
-    per_pdf. Heavy binary columns stay entirely inside the Python worker.
+    """scan_decode.manifest_scan over input_dir's parquet files: each task
+    streams bounded pyarrow batches through per_pdf, so heavy binary
+    columns stay entirely inside the Python worker.
 
     columns defaults to the clip-table layout; the image lane passes its own
     (operators/multimodal.py image_digest_scan)."""
-    from .scan_decode import list_manifest
+    from .scan_decode import CLIP_COLUMNS, list_manifest, manifest_scan
 
-    manifest = list_manifest(input_dir)
-    if scan_parallelism is None:
-        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
-        scan_parallelism = max(
-            1, min(len(manifest), spark.sparkContext.defaultParallelism, cap)
-        )
-    read_cols = _CLIP_COLUMNS if columns is None else columns
-    paths = spark.createDataFrame([(p,) for p in manifest], "path string").repartition(
-        max(scan_parallelism, 1)
+    return manifest_scan(
+        spark, list_manifest(input_dir), per_pdf, schema, batch_rows, scan_parallelism,
+        CLIP_COLUMNS if columns is None else columns,
     )
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for path in b["path"]:
-                pf = pq.ParquetFile(path, memory_map=True)
-                for rb in pf.iter_batches(batch_size=batch_rows, columns=read_cols):
-                    yield per_pdf(rb.to_pandas())
-
-    return paths.mapInPandas(_scan, schema=schema)
 
 
 def _kernel_parallelism(spark: SparkSession, input_dir: str) -> int:

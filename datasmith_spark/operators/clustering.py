@@ -199,21 +199,20 @@ def kmeans_quality(
         def _pp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # numpy mirror of the earlier array_sort/array_position form:
             # cluster = FIRST minimum (lowest cid on ties), d1/d2 = the two
-            # smallest distances by VALUE — exact int64 via _sq_dists_np
+            # smallest distances by VALUE — exact int64 via _sq_dists_np;
+            # with a single centroid there is no second distance: d2 is null
             for pdf in batches:
                 if not len(pdf):
                     continue
                 X = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["xq"]])
                 D = _sq_dists_np(X, C)
                 j = np.argmin(D, axis=1)
-                two = np.partition(D, 1, axis=1)[:, :2]
-                yield pd.DataFrame(
-                    {
-                        "cluster": j.astype(np.int32),
-                        "d1": two[:, 0],
-                        "d2": two[:, 1],
-                    }
-                )
+                if D.shape[1] > 1:
+                    two = np.partition(D, 1, axis=1)
+                    d1, d2 = two[:, 0], two[:, 1]
+                else:
+                    d1, d2 = D[:, 0], pd.array([None] * len(D), dtype="Int64")
+                yield pd.DataFrame({"cluster": j.astype(np.int32), "d1": d1, "d2": d2})
 
         per_point = pts.mapInPandas(_pp, schema="cluster int, d1 bigint, d2 bigint")
         out = (

@@ -199,9 +199,9 @@ def jaccard_verify(sh: DataFrame, cand: DataFrame, threshold: float = 0.6) -> Da
     fewer shuffled rows at sf>=1 candidate volumes. Pairs with an empty
     intersection produce jaccard 0.0 and are dropped by the threshold
     filter exactly like the old inner-join form dropped them (threshold is
-    always > 0 here)."""
-    sets = sh.groupBy("id").agg(
-        F.collect_list("s").alias("_ts"), F.count("*").alias("sz")
+    always > 0 here). A shingle repeated within a doc counts once."""
+    sets = sh.groupBy("id").agg(F.collect_set("s").alias("_ts")).withColumn(
+        "sz", F.size("_ts")
     )
     return jaccard_verify_sets(sets, cand, threshold)
 

@@ -1,6 +1,7 @@
 """Multimodal binary-payload plumbing: images / video frames as opaque bytes.
 
-The audio path (decode_stage) is this engine's fully-real multimodal lane.
+The audio path (the label kernel's decode head, scan_decode.label_head_pdf)
+is this engine's fully-real multimodal lane.
 This module generalizes the same Spark-side plumbing — typed binary column +
 metadata columns + Arrow-batched mapInPandas feature extraction with bounded
 batch sizes — to image/video payloads.

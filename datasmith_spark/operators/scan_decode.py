@@ -1,46 +1,59 @@
-"""Fused scan+rules+decode over a parquet file manifest.
+"""The labelling kernel and the fused manifest scan that feeds it.
 
-The default pipeline path scans clips through the JVM and ships `bytes` to
-Python over the Arrow socket. For audio-heavy rows (~300 KB each) that
-transfer is pure waste: the decode stage immediately reduces each blob to
-five floats. This operator fuses scan -> rules -> decode inside ONE
-mapInPandas over a manifest of parquet files — pyarrow reads the row groups
-directly in the Python worker, so the audio bytes never cross a process
-boundary. Downstream stages (langid/ppl/scrub) see the identical post-decode
-schema and compose unchanged.
+`label_batch_pdf` is the whole filter chain (rules -> decode -> langid ->
+ppl -> scrub) over one pandas batch of raw clip rows, in two halves:
 
-This is the standard multimodal-scan pattern (decode co-located with the
-scan, manifest-distributed): at 10^12-clip scale it removes the largest
-byte-movement term from the plan; in this sandbox it also sidesteps the
-JVM->Python socket bottleneck (measured ~5x on the end-to-end chain).
+  * `label_head_pdf` — part_id, stage-R rules, audio decode features and
+    the decode-stage drop; `bytes` is consumed here, so its output rows are
+    ~100 bytes (POST_DECODE_SCHEMA);
+  * `label_tail_pdf` — langid, perplexity and scrub over post-decode rows,
+    producing the final labels (LABELS_SCHEMA).
 
-Parity: the per-row kernels are the SAME functions the transfer path and the
-single-process oracle use (core.rules.rule_reasons for stage R,
-stages.decode_features_pdf + stages.decode_epilogue for stage D), and
-part_id uses zlib.crc32 which matches F.crc32 bit-for-bit — so both paths
-produce identical labels (asserted by tests/test_scan_decode.py).
+Every source runs the kernel in ONE mapInPandas: `pipeline.label_clips`
+over any clips DataFrame (JVM parquet scan, file-source stream, in-memory
+frame), and `scan_labels` over a manifest of parquet files that pyarrow
+reads inside the worker, so audio bytes never cross a process boundary.
+`scan_rules_decode` runs the head alone; the q27/q28 queries persist its
+output and run the tail over it.
 
-Trade-off vs the JVM scan: no Catalyst row-group pruning / predicate
-pushdown into this scan. Use it when the query consumes effectively all rows
-and the payload column dominates row width (true for the curation pipeline);
-use the transfer path when selective predicates would prune the scan.
+Parity: the per-row kernels are the same core functions the single-process
+oracle uses (core.rules, core.audio, core.langid, core.lm, core.scrub), and
+part_id uses zlib.crc32, which matches F.crc32 bit-for-bit — so every source
+produces labels identical to oracle.oracle_labels (tests/test_pipeline.py,
+tests/test_scan_decode.py, tests/test_streaming.py).
+
+Trade-off of the manifest scan vs the JVM scan: no Catalyst row-group
+pruning / predicate pushdown. Use it when the query consumes effectively
+all rows and the payload column dominates row width (true for the curation
+pipeline); use label_clips over a JVM scan when selective predicates would
+prune it.
 """
 
 from __future__ import annotations
 
 import os
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..core import audio
 from ..core import rules as R
-from .stages import _DECODE_FIELDS, decode_epilogue, decode_features_pdf
 
 CLIP_COLUMNS = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
+
+DECODE_FEATURE_COLS = ("n_samples", "rms", "peak", "clip_rate", "finite_frac", "decode_ok")
+_DECODE_FIELDS = [
+    T.StructField("n_samples", T.LongType()),
+    T.StructField("rms", T.DoubleType()),
+    T.StructField("peak", T.DoubleType()),
+    T.StructField("clip_rate", T.DoubleType()),
+    T.StructField("finite_frac", T.DoubleType()),
+    T.StructField("decode_ok", T.BooleanType()),
+]
 
 POST_DECODE_SCHEMA = T.StructType(
     [
@@ -56,39 +69,6 @@ POST_DECODE_SCHEMA = T.StructType(
     + _DECODE_FIELDS
 )
 _POST_COLS = [f.name for f in POST_DECODE_SCHEMA.fields]
-
-
-def list_manifest(input_dir: str) -> list[str]:
-    """All parquet leaf files under input_dir (non-recursive, sorted)."""
-    return sorted(
-        os.path.join(input_dir, f)
-        for f in os.listdir(input_dir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-
-
-def _rules_decode_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
-    """Stage R (python kernel, parity-tested vs the Column exprs) + stage D."""
-    part_ids, stages, reasons = [], [], []
-    for row in pdf.itertuples(index=False):
-        part_ids.append(zlib.crc32(row.clip_id.encode("utf-8")) % n_parts)
-        # null int32 columns arrive from pyarrow's to_pandas as float64 NaN,
-        # not None — pd.isna covers both (None and NaN)
-        rs = R.rule_reasons(
-            None if pd.isna(row.codec) else row.codec,
-            None if pd.isna(row.sr_hz) else int(row.sr_hz),
-            None if pd.isna(row.dur_ms) else int(row.dur_ms),
-            None if row.bytes is None else len(row.bytes),
-            None if pd.isna(row.transcript) else row.transcript,
-        )
-        stages.append(R.STAGE_RULES if rs else None)
-        reasons.append(rs)
-    pdf = pdf.copy(deep=False)
-    pdf["part_id"] = pd.array(part_ids, dtype="int32")
-    pdf["drop_stage"] = pd.array(stages, dtype="string")
-    pdf["drop_reasons"] = reasons
-    return decode_features_pdf(pdf)[_POST_COLS]
-
 
 LABELS_SCHEMA = T.StructType(
     [
@@ -109,29 +89,81 @@ LABELS_SCHEMA = T.StructType(
 _LABEL_COLS = [f.name for f in LABELS_SCHEMA.fields]
 
 
-def label_batch_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
-    """Whole filter chain for one Arrow batch of raw clips rows.
+def list_manifest(input_dir: str) -> list[str]:
+    """All parquet leaf files under input_dir (non-recursive, sorted)."""
+    return sorted(
+        os.path.join(input_dir, f)
+        for f in os.listdir(input_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
-    Python analogue of the staged chain (with_rule_stage -> decode_stage ->
-    langid_stage -> ppl_stage -> scrub_stage) composed from the SAME core
-    kernels, with identical stage precedence and identical retained values
-    (a row dropped at stage k keeps every enrichment computed at stages < k
-    plus the one that failed it, exactly like the staged Column logic).
-    Fusing the chain into one batch kernel removes three JVM<->Python hops
-    per row — the python-side analogue of whole-stage codegen.
+
+def decode_features_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Per-batch decode kernel: add feature columns, drop `bytes`.
+
+    Rows already dropped (drop_stage set) are skipped and get null features.
     """
-    from ..core import langid as L
-    from ..core import lm as M
-    from ..core.scrub import count_words, scrub_text
+    n = len(pdf)
+    ns = np.zeros(n, dtype=np.int64)
+    rms = np.zeros(n, dtype=np.float64)
+    peak = np.zeros(n, dtype=np.float64)
+    clip = np.zeros(n, dtype=np.float64)
+    fin = np.zeros(n, dtype=np.float64)
+    ok = np.zeros(n, dtype=bool)
+    alive = pdf["drop_stage"].isna().to_numpy()
+    bufs = pdf["bytes"].to_numpy()
+    codecs = pdf["codec"].to_numpy()
+    for i in np.flatnonzero(alive):
+        pcm = audio.decode(bufs[i], codecs[i])
+        ok[i] = pcm is not None
+        # integer codecs decode to finite float64 by construction: skip the
+        # isfinite scan (bitwise-identical result, audio.pcm_features)
+        ns[i], rms[i], peak[i], clip[i], fin[i] = audio.pcm_features(
+            pcm, assume_finite=codecs[i] != "float32"
+        )
+    out = pdf.drop(columns=["bytes"])
+    out["n_samples"] = ns
+    out["rms"] = rms
+    out["peak"] = peak
+    out["clip_rate"] = clip
+    out["finite_frac"] = fin
+    out["decode_ok"] = ok
+    # dead rows: feature columns are meaningless -> null them
+    dead = ~alive
+    if dead.any():
+        for c in DECODE_FEATURE_COLS:
+            out[c] = out[c].astype(object)
+            out.loc[dead, c] = None
+    return out
 
-    post = _rules_decode_pdf(pdf.reset_index(drop=True), n_parts)
-    n = len(post)
-    stage = np.array([None if pd.isna(s) else s for s in post["drop_stage"]], dtype=object)
-    reasons = list(post["drop_reasons"])
-    # decode-stage drop (mirrors stages.decode_epilogue / rules.decode_reasons)
-    for i in range(n):
-        if stage[i] is not None:
-            continue
+
+def label_head_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
+    """Stages R and D for one batch of raw clip rows -> post-decode rows.
+
+    Adds part_id, runs core.rules.rule_reasons, decodes the audio of the
+    rows that pass, and applies core.rules.decode_reasons to the features.
+    """
+    part_ids, stages, reasons = [], [], []
+    for row in pdf.itertuples(index=False):
+        part_ids.append(zlib.crc32(row.clip_id.encode("utf-8")) % n_parts)
+        # null int32 columns arrive in pandas as float64 NaN, not None —
+        # pd.isna covers both (None and NaN)
+        rs = R.rule_reasons(
+            None if pd.isna(row.codec) else row.codec,
+            None if pd.isna(row.sr_hz) else int(row.sr_hz),
+            None if pd.isna(row.dur_ms) else int(row.dur_ms),
+            None if row.bytes is None else len(row.bytes),
+            None if pd.isna(row.transcript) else row.transcript,
+        )
+        stages.append(R.STAGE_RULES if rs else None)
+        reasons.append(rs)
+    pdf = pdf.reset_index(drop=True)
+    pdf["part_id"] = pd.array(part_ids, dtype="int32")
+    pdf["drop_stage"] = stages
+    pdf["drop_reasons"] = reasons
+    post = decode_features_pdf(pdf)[_POST_COLS]
+
+    for i in np.flatnonzero(post["drop_stage"].isna().to_numpy()):
         d = R.decode_reasons(
             bool(post["decode_ok"].iat[i]),
             float(post["rms"].iat[i]),
@@ -139,16 +171,35 @@ def label_batch_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
             float(post["finite_frac"].iat[i]),
         )
         if d:
-            stage[i] = R.STAGE_DECODE
+            stages[i] = R.STAGE_DECODE
             reasons[i] = d
+    post["drop_stage"] = pd.array(stages, dtype="string")
+    post["drop_reasons"] = reasons
+    return post
+
+
+def label_tail_pdf(post: pd.DataFrame) -> pd.DataFrame:
+    """Stages L, P and S over post-decode rows (label_head_pdf's output,
+    from the head directly or read back from Spark) -> final labels.
+
+    Stage precedence and retained values match the oracle: a row dropped at
+    stage k keeps every enrichment computed at stages < k plus the one that
+    failed it; rows dropped earlier pass through untouched.
+    """
+    from ..core import langid as L
+    from ..core import lm as M
+    from ..core.scrub import count_words, scrub_text
+
+    n = len(post)
+    stage = np.array([None if pd.isna(s) else s for s in post["drop_stage"]], dtype=object)
+    reasons = [list(r) for r in post["drop_reasons"]]
 
     lid = L.model()
     lm_ = M.model()
     texts = post["transcript"].to_numpy(dtype=object)
     lang = np.full(n, None, dtype=object)
-    # lang_prob: object (None for never-scored) -> null, matching the staged
-    # langid UDF; ppl: float64 (NaN for never-scored), matching the staged
-    # ppl UDF's float series
+    # never-scored rows carry None (lang_prob) / NaN (ppl, counts); both
+    # reach Spark as null
     prob: list = [None] * n
     ppl = np.full(n, np.nan)
     pii = np.full(n, np.nan)
@@ -208,6 +259,85 @@ def label_batch_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
     return out[_LABEL_COLS]
 
 
+def label_batch_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
+    """Whole filter chain for one batch of raw clip rows (CLIP_COLUMNS)."""
+    return label_tail_pdf(label_head_pdf(pdf, n_parts))
+
+
+def manifest_scan(
+    spark: SparkSession,
+    manifest: list[str],
+    per_pdf: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: T.StructType | str,
+    batch_rows: int = 256,
+    scan_parallelism: int | None = None,
+    columns: list[str] = CLIP_COLUMNS,
+) -> DataFrame:
+    """Distributed worker-side parquet scan: manifest entries spread over
+    scan tasks, pyarrow reads `columns` of each file in bounded batches,
+    and per_pdf maps every batch — file paths are the only rows the JVM
+    ever sees, so heavy binary columns stay inside the Python worker.
+
+    scan_parallelism: concurrent scan tasks. Default: min(files, session
+    parallelism, $SPARK_GRAFT_SCAN_PAR or 8). The cap exists for hosts whose
+    kernel serializes page faults/file I/O globally: there decode
+    throughput INVERTS beyond ~8 concurrent readers (measured at local[32]
+    on a 32-core host: 8-way 1,340-1,370 clips/s vs 16-way 814-917 on the
+    identical job; BASELINE.md); on a real cluster set SPARK_GRAFT_SCAN_PAR
+    high — the operator itself is width-agnostic and each task streams row
+    groups at bounded memory.
+    """
+    if scan_parallelism is None:
+        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
+        scan_parallelism = max(1, min(len(manifest), spark.sparkContext.defaultParallelism, cap))
+    paths = spark.createDataFrame([(p,) for p in manifest], "path string").repartition(
+        max(scan_parallelism, 1)
+    )
+
+    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            for path in b["path"]:
+                # memory_map: page-cache-resident files skip the read()
+                # path entirely (measured 13x at 32-way concurrency)
+                pf = pq.ParquetFile(path, memory_map=True)
+                for rb in pf.iter_batches(batch_size=batch_rows, columns=columns):
+                    out = per_pdf(rb.to_pandas())
+                    # a batch with no pending rows (resume pruning) emits
+                    # nothing: an empty frame's array columns infer float64,
+                    # which Arrow cannot convert to array<string>
+                    if len(out):
+                        yield out
+
+    return paths.mapInPandas(_scan, schema=schema)
+
+
+def _kernel_scan(
+    spark: SparkSession,
+    manifest: list[str],
+    kernel: Callable[[pd.DataFrame, int], pd.DataFrame],
+    schema: T.StructType,
+    n_parts: int,
+    batch_rows: int,
+    parts_filter: list[int] | None,
+    scan_parallelism: int | None,
+) -> DataFrame:
+    """manifest_scan of the clip columns through a label kernel.
+
+    parts_filter: optional part_id subset (checkpoint resume) — applied
+    worker-side before the kernel, so resumed runs do not decode
+    already-done partitions."""
+    wanted = None if parts_filter is None else {int(p) for p in parts_filter}
+
+    def per_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
+        if wanted is not None:
+            pdf = pdf[[zlib.crc32(c.encode("utf-8")) % n_parts in wanted for c in pdf["clip_id"]]]
+        return kernel(pdf, n_parts)
+
+    return manifest_scan(spark, manifest, per_pdf, schema, batch_rows, scan_parallelism)
+
+
 def scan_labels(
     spark: SparkSession,
     manifest: list[str],
@@ -217,35 +347,11 @@ def scan_labels(
     scan_parallelism: int | None = None,
 ) -> DataFrame:
     """Fully-fused pipeline: parquet manifest -> final labels in ONE
-    mapInPandas stage (scan+rules+decode+langid+ppl+scrub). Same label
-    output as the staged chain (tests/test_scan_decode.py)."""
-    if scan_parallelism is None:
-        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
-        scan_parallelism = max(1, min(len(manifest), spark.sparkContext.defaultParallelism, cap))
-    paths = spark.createDataFrame([(p,) for p in manifest], "path string").repartition(
-        max(scan_parallelism, 1)
+    mapInPandas stage (scan + label_batch_pdf)."""
+    return _kernel_scan(
+        spark, manifest, label_batch_pdf, LABELS_SCHEMA, n_parts, batch_rows,
+        parts_filter, scan_parallelism,
     )
-    wanted = None if parts_filter is None else set(int(p) for p in parts_filter)
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for path in b["path"]:
-                pf = pq.ParquetFile(path, memory_map=True)
-                for rb in pf.iter_batches(batch_size=batch_rows, columns=CLIP_COLUMNS):
-                    pdf = rb.to_pandas()
-                    if wanted is not None:
-                        keep_mask = [
-                            zlib.crc32(c.encode("utf-8")) % n_parts in wanted
-                            for c in pdf["clip_id"]
-                        ]
-                        pdf = pdf[keep_mask]
-                        if not len(pdf):
-                            continue
-                    yield label_batch_pdf(pdf, n_parts)
-
-    return paths.mapInPandas(_scan, schema=LABELS_SCHEMA)
 
 
 def scan_rules_decode(
@@ -256,49 +362,9 @@ def scan_rules_decode(
     parts_filter: list[int] | None = None,
     scan_parallelism: int | None = None,
 ) -> DataFrame:
-    """Distributed fused scan: manifest entries spread over scan tasks,
-    pyarrow row-group reads inside the worker, rules+decode applied before
-    anything is emitted.
-
-    parts_filter: optional part_id subset (checkpoint resume) — applied
-    worker-side right after part_id is computed, before decode, so resumed
-    runs do not decode already-done partitions.
-
-    scan_parallelism: concurrent scan tasks. Default: min(files, session
-    parallelism, $SPARK_GRAFT_SCAN_PAR or 8). The cap exists because this
-    sandbox's kernel serializes page faults/file I/O globally and decode
-    throughput INVERTS beyond ~8 concurrent readers (measured at local[32]:
-    8-way 1,340-1,370 clips/s vs 16-way 814-917 on the identical job;
-    BASELINE.md "Sandbox scaling protocol"); on a real cluster set SPARK_GRAFT_SCAN_PAR high or
-    pass None-equivalent explicitly — the operator itself is width-agnostic
-    and each task streams row groups at bounded memory.
-    """
-    if scan_parallelism is None:
-        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
-        scan_parallelism = max(1, min(len(manifest), spark.sparkContext.defaultParallelism, cap))
-    paths = spark.createDataFrame([(p,) for p in manifest], "path string").repartition(
-        max(scan_parallelism, 1)
+    """Parquet manifest -> post-decode rows (scan + label_head_pdf);
+    label_tail_pdf over its output gives scan_labels' labels."""
+    return _kernel_scan(
+        spark, manifest, label_head_pdf, POST_DECODE_SCHEMA, n_parts, batch_rows,
+        parts_filter, scan_parallelism,
     )
-    wanted = None if parts_filter is None else set(int(p) for p in parts_filter)
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for path in b["path"]:
-                # memory_map: page-cache-resident files skip the sandboxed
-                # read() path entirely (measured 13x at 32-way concurrency)
-                pf = pq.ParquetFile(path, memory_map=True)
-                for rb in pf.iter_batches(batch_size=batch_rows, columns=CLIP_COLUMNS):
-                    pdf = rb.to_pandas()
-                    if wanted is not None:
-                        keep_mask = [
-                            zlib.crc32(c.encode("utf-8")) % n_parts in wanted
-                            for c in pdf["clip_id"]
-                        ]
-                        pdf = pdf[keep_mask]
-                        if not len(pdf):
-                            continue
-                    yield _rules_decode_pdf(pdf, n_parts)
-
-    return decode_epilogue(paths.mapInPandas(_scan, schema=POST_DECODE_SCHEMA))

@@ -7,9 +7,10 @@ metrics side tables.
 Scale design (10^12 clips / 1000 executors):
   * part_id = crc32(clip_id) % n_parts — uniform hash partitioning; the
     labels table is directory/bucket-partitioned by it.
-  * the whole filter chain is narrow: scan -> codegen'd rule exprs ->
-    Arrow UDF stages; Python sees survivors only; `bytes` is dropped at the
-    decode stage so everything downstream moves ~100-byte rows.
+  * the whole filter chain is narrow: scan -> ONE mapInPandas running
+    the label kernel (operators/scan_decode.label_batch_pdf), so each row
+    crosses the JVM<->Python boundary once (JVM scan) or never (fused
+    manifest scan); the kernel decodes survivors of the rules only.
   * resume = parts whose latest checkpoint row is 'done' AND whose stored
     per-part input fingerprint still matches the current input are skipped
     (reference cache semantics incl. the pickled-arg cache key,
@@ -27,23 +28,26 @@ Scale design (10^12 clips / 1000 executors):
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
+from collections.abc import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core import rules as R
 from .logging_config import configure, stage_timer
-from .operators.rules import with_rule_stage
-from .operators.stages import decode_stage, langid_stage, ppl_stage, scrub_stage
+from .operators.scan_decode import (
+    CLIP_COLUMNS,
+    LABELS_SCHEMA,
+    label_batch_pdf,
+    list_manifest,
+    scan_labels,
+)
 from .tables import TableLayer
 
-LABEL_COLS = [
-    "clip_id", "part_id", "codec", "keep", "drop_stage", "drop_reasons",
-    "lang", "lang_prob", "ppl", "pii_count", "tox_count", "scrubbed_transcript",
-]
+LABEL_COLS = LABELS_SCHEMA.fieldNames()
 
 ARROW_BATCH = 256  # bytes-carrying rows are ~0.2-1 MB; keep Arrow batches bounded
 
@@ -99,13 +103,15 @@ def part_fingerprints(clips: DataFrame, n_parts: int, payload: bool = False) -> 
 
 
 def label_clips(clips: DataFrame, n_parts: int = 32) -> DataFrame:
-    """Full filter chain; returns the labels DataFrame (one row per clip)."""
-    df = with_rule_stage(clips, n_parts)
-    df = decode_stage(df)
-    df = langid_stage(df)
-    df = ppl_stage(df)
-    df = scrub_stage(df)
-    return df.withColumn("keep", F.col("drop_stage").isNull()).select(*LABEL_COLS)
+    """Full filter chain over any clips DataFrame (batch or streaming):
+    ONE mapInPandas running label_batch_pdf; returns the labels DataFrame
+    (one row per clip)."""
+
+    def _label(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield label_batch_pdf(pdf, n_parts)
+
+    return clips.select(*CLIP_COLUMNS).mapInPandas(_label, schema=LABELS_SCHEMA)
 
 
 def label_clips_fused(
@@ -114,13 +120,11 @@ def label_clips_fused(
     n_parts: int = 32,
     parts_filter: list[int] | None = None,
 ) -> DataFrame:
-    """Full filter chain fused into ONE mapInPandas stage over the parquet
-    manifest (scan+rules+decode+langid+ppl+scrub) — audio bytes never cross
-    a process boundary and label rows take zero JVM<->Python hops; see
-    operators/scan_decode.py. Produces labels identical to label_clips()
-    over the same parquet directory (tests/test_scan_decode.py)."""
-    from .operators.scan_decode import list_manifest, scan_labels
-
+    """label_clips with the parquet scan moved into the Python worker: the
+    same kernel over a file manifest read by pyarrow, so audio bytes never
+    cross a process boundary; see operators/scan_decode.py. Produces labels
+    identical to label_clips() over the same parquet directory
+    (tests/test_scan_decode.py)."""
     return scan_labels(spark, list_manifest(input_dir), n_parts, parts_filter=parts_filter)
 
 
@@ -350,6 +354,3 @@ def run_pipeline(
         "wall_sec": wall,
     }
 
-
-def default_out_dir(tag: str) -> str:
-    return os.path.join("/root/repo/.data/out", tag)

@@ -973,16 +973,17 @@ def _clips_post_decode(spark: SparkSession, sf_dir: str):
 
 
 def _clips_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full label frame over the session-persisted post-decode frame: the
-    ONE definition of the langid->ppl->scrub tail and of `keep`
-    (drop_stage IS NULL), shared by q27 and q83 so the keep semantics
-    cannot drift between the summary and the drift monitor."""
-    from .operators.stages import langid_stage, ppl_stage, scrub_stage
+    """Full label frame: the label kernel's tail (langid -> ppl -> scrub,
+    scan_decode.label_tail_pdf) in one mapInPandas over the
+    session-persisted post-decode frame, shared by q27, q68, q83 and the
+    later label consumers so they all read the same labels."""
+    from .operators.scan_decode import LABELS_SCHEMA, label_tail_pdf
 
-    post = _clips_post_decode(spark, sf_dir)
-    return scrub_stage(ppl_stage(langid_stage(post))).withColumn(
-        "keep", F.col("drop_stage").isNull()
-    )
+    def _tail(batches):
+        for pdf in batches:
+            yield label_tail_pdf(pdf)
+
+    return _clips_post_decode(spark, sf_dir).mapInPandas(_tail, schema=LABELS_SCHEMA)
 
 
 @register(
@@ -3044,8 +3045,8 @@ def q67_langid_train_counts(spark, sf_dir):
 )
 def q68_ppl_band_calibration(spark, sf_dir):
     """Perplexity keep-band calibration from corpus quantiles: score every
-    clip's transcript under its detected language's LM (the live fused
-    langid+ppl chain), then derive per-language keep bands as
+    clip's transcript under its detected language's LM (the label kernel's
+    langid+ppl tail, _clips_labels), then derive per-language keep bands as
     lo = min(ppl) * 0.35 / hi = max(ppl) * 2.50 — the exact held-out
     calibration rule core/lm.py freezes at train time (_BAND_LO/HI_FACTOR),
     recomputed distributed over a real corpus. With q66/q67 (distributed
@@ -3058,10 +3059,7 @@ def q68_ppl_band_calibration(spark, sf_dir):
     Oracle: aggregates the committed independent single-process labels
     fixture (the q27 pattern) — the min/max/factor arithmetic re-derived
     in SQL; per-row ppl equality is pinned by test_pipeline.py."""
-    from .operators.stages import langid_stage, ppl_stage
-
-    post = _clips_post_decode(spark, sf_dir)
-    scored = ppl_stage(langid_stage(post))
+    scored = _clips_labels(spark, sf_dir)
     inf = F.lit(float("inf"))
     return (
         scored.filter(F.col("lang").isNotNull() & (F.col("ppl") < inf))

@@ -35,15 +35,18 @@ _MALLOC_ENV = {
 }
 
 
+# the directory holding the datasmith_spark package (the checkout root)
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _set_malloc_env() -> None:
     for k, v in _MALLOC_ENV.items():
         os.environ.setdefault(k, v)
     # the preloading worker daemon (datasmith_spark/daemon.py) must be
     # importable from the forked python processes
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
-    if repo_root not in pp.split(":"):
-        os.environ["PYTHONPATH"] = f"{repo_root}:{pp}" if pp else repo_root
+    if _REPO_ROOT not in pp.split(":"):
+        os.environ["PYTHONPATH"] = f"{_REPO_ROOT}:{pp}" if pp else _REPO_ROOT
 
 
 _set_malloc_env()
@@ -65,6 +68,7 @@ def get_spark(
     # page faults across threads, so lazy faulting caps a 32-thread parquet
     # scan at ~70 MB/s; pre-touched it runs at >1 GB/s (measured 15x).
     xms = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
+    tmp_dir = os.path.join(_REPO_ROOT, ".data", "tmp")
     b = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -101,8 +105,8 @@ def get_spark(
         .config("spark.python.daemon.module", "datasmith_spark.daemon")
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Djava.io.tmpdir=/root/repo/.data/tmp {xms}",
+            f"-Djava.io.tmpdir={tmp_dir} {xms}",
         )
     )
-    os.makedirs("/root/repo/.data/tmp", exist_ok=True)
+    os.makedirs(tmp_dir, exist_ok=True)
     return b.getOrCreate()

@@ -3,14 +3,15 @@
 The reference is entirely batch (SURVEY.md §2.9) — its incremental behavior
 is re-download-skip + memo-cache (/root/reference/src/datasmith/utils.py:85-119,
 /root/reference/src/datasmith/scrape/utils.py:116-125). On Spark the same
-filter chain lifts unchanged onto a file-source stream: the stage UDFs are
+filter chain lifts unchanged onto a file-source stream: label_clips is ONE
+mapInPandas of the label kernel (operators/scan_decode.label_batch_pdf),
 stateless per row, so `readStream -> label_clips -> foreachBatch(write)` is
-the streaming analogue of the batch pipeline, with exactly-once sink
-semantics provided by the streaming checkpoint + idempotent per-batch
-writes: every output table is partitioned by batch_id and written with
-dynamic partition OVERWRITE, so a batch replayed after a crash (append
-landed, checkpoint commit didn't) rewrites exactly its own partitions
-instead of duplicating rows.
+the streaming analogue of the batch pipeline (each micro-batch's rows
+cross into Python once), with exactly-once sink semantics provided by the
+streaming checkpoint + idempotent per-batch writes: every output table is
+partitioned by batch_id and written with dynamic partition OVERWRITE, so a
+batch replayed after a crash (append landed, checkpoint commit didn't)
+rewrites exactly its own partitions instead of duplicating rows.
 
 Scale design: at 10^12-clip scale this is the continuous-ingest front door —
 new clip files land in the source directory (or an Iceberg table with

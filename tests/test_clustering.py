@@ -199,3 +199,16 @@ class TestKmeansQuality:
         # the 4 midpoint stragglers sit near the decision surface of the
         # two blob centroids -> exactly they flag as boundary
         assert out.n_boundary.sum() == 4
+
+    def test_single_centroid_has_no_second_distance(self, spark):
+        """k=1: no second-closest centroid exists, so d2 is null and the
+        boundary count is null (not a crash in the per-point pass)."""
+        from datasmith_spark.operators.clustering import kmeans_quality
+
+        rows = [(i, [float(i) / 10.0] * 4) for i in range(5)]
+        embs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        out = kmeans_quality(embs, k=1, iters=2).toPandas()
+        assert len(out) == 1
+        assert int(out.n.iloc[0]) == 5
+        assert out.sse.iloc[0] > 0
+        assert pd.isna(out.n_boundary.iloc[0])

@@ -115,10 +115,12 @@ def test_partition_count_invariance(spark, clips_path, oracle_pdf, n_partitions)
 
 
 def test_no_shuffle_in_label_chain(spark, clips_path):
-    """The filter chain must be a single narrow stage: no Exchange operator."""
+    """The filter chain must be a single narrow stage: no Exchange operator,
+    and one Python hop (the label kernel's mapInPandas, no chained UDFs)."""
     clips = spark.read.parquet(clips_path)
     plan = label_clips(clips, n_parts=N_PARTS)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas") == 1 and "EvalPython" not in plan, plan
 
 
 def test_oracle_fixture_is_honest():

@@ -1,36 +1,17 @@
-"""Native rule Column exprs vs the python kernel — row-exact on real data."""
+"""Stage-R rules through the Spark label kernel vs the python kernel."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from datasmith_spark.core import rules as R
-from datasmith_spark.operators.rules import with_rule_stage
+from datasmith_spark.pipeline import label_clips
 
 from .conftest import N_PARTS
 
 
-def test_native_rules_match_python_kernel(spark, clips_path, clips_pdf):
-    clips = spark.read.parquet(clips_path)
-    got = (
-        with_rule_stage(clips, N_PARTS)
-        .select("clip_id", "drop_reasons")
-        .toPandas()
-        .sort_values("clip_id")
-        .reset_index(drop=True)
-    )
-    exp = [
-        R.rule_reasons(r.codec, int(r.sr_hz), int(r.dur_ms), len(r.bytes), r.transcript)
-        for r in clips_pdf.itertuples(index=False)
-    ]
-    bad = [
-        (i, list(a), e)
-        for i, (a, e) in enumerate(zip(got.drop_reasons, exp))
-        if list(a) != e
-    ]
-    assert not bad, bad[:5]
-
-
 def test_rule_edge_cases(spark):
+    """Edge rows through label_clips (JVM Arrow batches into the label
+    kernel, nulls included): a row whose rule reasons are non-empty drops at
+    stage R with exactly those reasons; every other row passes stage R."""
     rows = [
         # codec, sr, dur, payload, transcript
         ("pcm16", 16000, 1000, b"\x00" * 32000, "hello world one two three"),  # clean
@@ -51,9 +32,10 @@ def test_rule_edge_cases(spark):
     sdf = spark.createDataFrame(
         pdf, "codec string, sr_hz int, dur_ms int, bytes binary, transcript string, clip_id string"
     )
+    labels = label_clips(sdf, N_PARTS).select("clip_id", "drop_stage", "drop_reasons").collect()
     got = {
-        r.clip_id: list(r.drop_reasons)
-        for r in with_rule_stage(sdf, N_PARTS).select("clip_id", "drop_reasons").collect()
+        r.clip_id: list(r.drop_reasons) if r.drop_stage == R.STAGE_RULES else []
+        for r in labels
     }
     exp = {
         f"edge_{i}": R.rule_reasons(

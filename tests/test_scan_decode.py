@@ -1,12 +1,13 @@
-"""Fused manifest scan (scan+rules+decode in one Python stage) parity.
+"""Fused manifest scan (pyarrow scan + label kernel in one Python stage) parity.
 
-The fused path must produce labels identical to the transfer path
-(JVM scan -> rule Column exprs -> decode mapInPandas) over the same parquet
-directory — same kernels, different data movement.
+The manifest scan must produce labels identical to label_clips over a JVM
+parquet scan of the same directory — the same label kernel, fed by two
+different sources (pyarrow batches in the worker vs JVM Arrow batches).
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datasmith_spark.operators.scan_decode import list_manifest, scan_rules_decode
@@ -44,7 +45,7 @@ def test_fused_labels_match_batch(spark, clips_path):
 def test_fused_labels_null_ints(spark, tmp_path):
     """Null int32/string columns (which pyarrow's to_pandas maps to float64
     NaN, not None) must not crash the fused scan and must drop identically
-    to the transfer path's null-hostile Column rules."""
+    to label_clips over the JVM scan."""
     import os
 
     import pyarrow as pa
@@ -105,10 +106,13 @@ def test_run_pipeline_fused_resume(spark, clips_path, tmp_path):
     pd.testing.assert_frame_equal(lab(one), lab(res))
 
 
-def test_parts_filter_prunes_scan(spark, clips_path):
-    """Resume pruning: only requested part_ids come back from the fused scan."""
-    pending = [0, 3, 7]
-    df = scan_rules_decode(spark, list_manifest(clips_path), N_PARTS, parts_filter=pending)
+@pytest.mark.parametrize("pending,batch_rows", [([0, 3, 7], 256), ([5], 8)])
+def test_parts_filter_prunes_scan(spark, clips_path, pending, batch_rows):
+    """Resume pruning: only requested part_ids come back from the fused scan,
+    also when whole batches hold no pending row."""
+    df = scan_rules_decode(
+        spark, list_manifest(clips_path), N_PARTS, batch_rows=batch_rows, parts_filter=pending
+    )
     parts = {r.part_id for r in df.select("part_id").distinct().collect()}
     assert parts <= set(pending)
     n_all = (

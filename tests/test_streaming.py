@@ -1,7 +1,8 @@
-"""Structured Streaming lift: stream output == batch output, restart resumes.
+"""Structured Streaming lift: stream output == oracle labels, restart resumes.
 
-The stage UDFs are stateless per row, so draining the same clips through
-readStream+foreachBatch must reproduce the batch labels exactly.
+label_clips is one stateless-per-row mapInPandas of the label kernel, so
+draining the clips through readStream+foreachBatch must reproduce the
+single-process oracle labels exactly.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 
 from datasmith_spark.pipeline import LABEL_COLS, label_clips
 from datasmith_spark.streaming import run_streaming_pipeline
-from tests.conftest import cache_dir
+from tests.conftest import assert_frames_exact, cache_dir
 
 N_PARTS = 16
 
@@ -38,7 +39,7 @@ def stream_dirs(spark, clips_path):
     return str(inp), str(out)
 
 
-def test_stream_matches_batch(spark, clips_path, stream_dirs):
+def test_stream_matches_batch(spark, stream_dirs, oracle_pdf):
     inp, out = stream_dirs
     shutil.rmtree(out, ignore_errors=True)
     run_streaming_pipeline(spark, inp, out, n_parts=N_PARTS, max_files_per_trigger=4)
@@ -50,17 +51,9 @@ def test_stream_matches_batch(spark, clips_path, stream_dirs):
         .sort_values("clip_id")
         .reset_index(drop=True)
     )
-    want = (
-        label_clips(spark.read.parquet(clips_path), n_parts=N_PARTS)
-        .toPandas()
-        .sort_values("clip_id")
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want)
-    for c in ("clip_id", "keep", "drop_stage", "lang", "scrubbed_transcript"):
-        a = got[c].fillna("<null>").astype(str)
-        b = want[c].fillna("<null>").astype(str)
-        assert (a == b).all(), f"{c} mismatch"
+    want = oracle_pdf.sort_values("clip_id").reset_index(drop=True)
+    assert list(want.columns) == LABEL_COLS
+    assert_frames_exact(got, want)
     # metrics side table written per batch
     m = spark.read.parquet(f"{out}/metrics")
     assert m.count() > 0 and m.filter(F.col("run_id").startswith("stream-")).count() > 0

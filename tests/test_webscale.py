@@ -46,6 +46,20 @@ def test_minhash_finds_planted_dups(spark, corpus, planted):
     assert caught_near and min(caught_near) >= 0.6
 
 
+def test_jaccard_verify_counts_repeated_shingles_once(spark):
+    """Set semantics on both sides of the ratio: a shingle repeated within
+    a doc must not inflate that doc's size (|{a,b,c} & {a,b,d}| / |union|
+    = 2/4, not 2/5 from a double-counted `a`)."""
+    from datasmith_spark.operators.dedup import jaccard_verify
+
+    sh = spark.createDataFrame(
+        [(1, "a"), (1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b"), (2, "d")],
+        "id long, s string",
+    )
+    cand = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    assert [tuple(r) for r in jaccard_verify(sh, cand, 0.5).collect()] == [(1, 2, 0.5)]
+
+
 def test_simhash_finds_planted_dups(spark, corpus, planted):
     from datasmith_spark.operators.dedup import simhash_candidate_pairs
 
