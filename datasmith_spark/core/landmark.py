@@ -73,7 +73,7 @@ import zlib
 import numpy as np
 
 from .audio import decode, encode
-from .resample import add_noise, resample
+from .resample import add_noise
 
 LM_SR = 16000  # common analysis rate (same as FP_SR): hashes comparable
 LM_NFFT = 512
@@ -173,18 +173,6 @@ def landmark_hashes16(x16: np.ndarray) -> list[tuple[int, int]]:
             if fan >= LM_FANOUT:
                 break
     return sorted(out)
-
-
-def landmark_hashes(pcm: np.ndarray, sr: int) -> list[tuple[int, int]]:
-    """landmark_hashes16 over source-rate PCM: truncate to the LM_MAX_S
-    head (source domain, same rule as fp_keys), resample to LM_SR via the
-    shared Lanczos kernel, landmark the exact LM_MAX_S*LM_SR-sample head."""
-    if sr <= 0:
-        return []
-    x = np.asarray(pcm, dtype=np.float64)[: int(round(LM_MAX_S * sr))]
-    if sr != LM_SR:
-        x = resample(x, sr, LM_SR)
-    return landmark_hashes16(x[: int(LM_MAX_S * LM_SR)])
 
 
 def delayed_variant16(x16: np.ndarray, delay_samples: int) -> np.ndarray:

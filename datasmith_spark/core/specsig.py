@@ -114,14 +114,6 @@ def tone_peaks16(x16: np.ndarray) -> list[int]:
     return sorted(int(b) for b in idx[p[idx] * SS_REL >= pm])
 
 
-def ratio_keys(peaks: list[int]) -> list[int]:
-    """Distinct scale-invariant intra-clip ratio keys, sorted."""
-    out = {
-        (SS_QR * a) // b for a in peaks for b in peaks if a != b
-    }
-    return sorted(out)
-
-
 def rate_hypothesis(
     pa: list[int], pb: list[int], tol: int = SS_TOL
 ) -> tuple[int, int] | None:

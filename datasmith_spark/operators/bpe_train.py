@@ -62,7 +62,8 @@ def bpe_train_distributed(
     Scale-adaptive: the ONLY corpus-sized pass is word_counts; training
     itself runs over the bounded distinct-word table. When that table is
     small enough to collect (<= SPARK_GRAFT_BPE_LOCAL_VOCAB rows, default
-    2^16 — checked with one cheap count), the merge loop runs in-process
+    2^16 — one bounded collect of at most cap+1 rows both checks the size
+    and fetches the table), the merge loop runs in-process
     via the serial reference kernel (core/bpe.bpe_train), which pytest
     pins as merge-for-merge identical to the distributed loop: this
     replaces n_merges x (aggregate-job + rewrite-checkpoint-job) of
@@ -74,11 +75,11 @@ def bpe_train_distributed(
 
     wc = word_counts(docs, text_col)
     local_cap = int(os.environ.get("SPARK_GRAFT_BPE_LOCAL_VOCAB", str(1 << 16)))
-    if wc.limit(local_cap + 1).count() <= local_cap:
+    rows = wc.limit(local_cap + 1).collect()
+    if len(rows) <= local_cap:
         from ..core.bpe import bpe_train
 
-        table = {r["w"]: int(r["freq"]) for r in wc.collect()}
-        return bpe_train(table, n_merges)
+        return bpe_train({r["w"]: int(r["freq"]) for r in rows}, n_merges)
     seqs = wc.select(
         F.concat(F.split("w", ""), F.array(F.lit(EOW))).alias("seq"), "freq"
     ).localCheckpoint(eager=True)

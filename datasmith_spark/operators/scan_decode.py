@@ -290,7 +290,9 @@ def manifest_scan(
     if scan_parallelism is None:
         cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
         scan_parallelism = max(1, min(len(manifest), spark.sparkContext.defaultParallelism, cap))
-    paths = spark.createDataFrame([(p,) for p in manifest], "path string").repartition(
+    # built from pandas (Arrow): a list of tuples would add a Python
+    # re-serialise stage in front of the scan
+    paths = spark.createDataFrame(pd.DataFrame({"path": manifest}), "path string").repartition(
         max(scan_parallelism, 1)
     )
 

@@ -77,10 +77,6 @@ def seq_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / F.sqrt(dot_col(a, a) * dot_col(b, b))
-
-
 def _seq_dots_np(M: np.ndarray, v: np.ndarray) -> np.ndarray:
     """Row-wise dot of M against v with the EXACT sequential-fold order of
     dot_col / seq_dot_udf / DuckDB list_dot_product (np.cumsum accumulates

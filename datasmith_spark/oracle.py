@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import zlib
 
-import numpy as np
 import pandas as pd
 
 from .core import audio, langid, lm, rules
@@ -108,10 +107,3 @@ def oracle_labels(clips: pd.DataFrame, n_parts: int = 32) -> pd.DataFrame:
     df["ppl"] = df["ppl"].astype("float64")
     return df
 
-
-def oracle_decode(clips: pd.DataFrame) -> dict[str, np.ndarray | None]:
-    """clip_id -> decoded PCM (None if undecodable); for SNR parity tests."""
-    return {
-        row.clip_id: audio.decode(row.bytes, row.codec)
-        for row in clips.itertuples(index=False)
-    }

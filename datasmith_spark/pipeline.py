@@ -1,8 +1,8 @@
 """The composed curation pipeline: rules -> decode -> langid -> ppl -> scrub.
 
-One narrow Spark chain (zero shuffles until the metrics rollup), partition-
-level checkpoint/resume, per-partition lineage and salted per-(lang, codec)
-metrics side tables.
+One narrow Spark chain (no shuffle in the labelling pass), partition-level
+checkpoint/resume, and per-partition lineage and per-(lang, codec) metrics
+side tables from one aggregate over the written labels.
 
 Scale design (10^12 clips / 1000 executors):
   * part_id = crc32(clip_id) % n_parts — uniform hash partitioning; the
@@ -21,9 +21,12 @@ Scale design (10^12 clips / 1000 executors):
     stale labels directory dropped explicitly after the overwrite (the
     parquet-mode analogue of the Iceberg MERGE / reference INSERT OR
     REPLACE upsert).
-  * metrics rollup: two-phase salted aggregation (partial on (lang, codec,
-    salt), final on (lang, codec)) so the Zipf-hot language bucket cannot
-    straggle a reducer; AQE skew handling stays on as backstop.
+  * side tables: one grouping-sets aggregate over the labels, sets
+    (part_id) and (lang, codec), reads them once; its at most parts +
+    langs x codecs rows are collected, and lineage, metrics and the
+    checkpoint done-marker are written back from them through Arrow, one
+    file each. Spark's partial aggregate combines map-side, so the
+    Zipf-hot (en, pcm16) key needs no salt.
 """
 
 from __future__ import annotations
@@ -68,6 +71,15 @@ _FP_ANY = "<unfingerprinted>"
 _CP_SCHEMA = (
     "part_id int, status string, run_id string, had_rows int, "
     "fingerprint string, n_parts int"
+)
+_LINEAGE_SCHEMA = (
+    "part_id int, n_in bigint, n_keep bigint, "
+    + "".join(f"drop_{s} bigint, " for s in R.STAGES)
+    + "run_id string"
+)
+_METRICS_SCHEMA = (
+    "lang string, codec string, n bigint, n_keep bigint, pii_total bigint, "
+    "tox_total bigint, keep_rate double, run_id string"
 )
 
 
@@ -128,8 +140,21 @@ def label_clips_fused(
     return scan_labels(spark, list_manifest(input_dir), n_parts, parts_filter=parts_filter)
 
 
-def _set_arrow_batch(spark: SparkSession) -> None:
+def _set_arrow(spark: SparkSession) -> None:
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
+
+
+def _append_rows(
+    spark: SparkSession, tl: TableLayer, name: str, ddl: str, rows: list[tuple]
+) -> None:
+    """Append collected rows (columns as in `ddl`, plus `ts`) as ONE file,
+    so a done-marker commits with one rename. Built from pandas, i.e. through
+    Arrow, not a Python-worker job; object dtype keeps ints exact."""
+    cols = [f.split()[0] for f in ddl.split(",")]
+    pdf = pd.DataFrame(rows, columns=cols, dtype=object)
+    df = spark.createDataFrame(pdf, ddl).withColumn("ts", F.current_timestamp())
+    tl.append(df.coalesce(1), name)
 
 
 def run_pipeline(
@@ -172,7 +197,7 @@ def run_pipeline(
     (see tables.TableLayer); out_dir is then only a log tag.
     """
     t0 = time.time()
-    _set_arrow_batch(spark)
+    _set_arrow(spark)
     tl = TableLayer(out_dir, catalog=catalog)
     run_id = uuid.uuid4().hex[:12]
     log = configure()
@@ -235,11 +260,9 @@ def run_pipeline(
                 }
                 adopted = [p for p, f in stored.items() if f == _FP_ANY and p in fps]
                 if adopted:
-                    adopt = spark.createDataFrame(
-                        [(int(p), "done", run_id, 1, fps[p], n_parts) for p in adopted],
-                        _CP_SCHEMA,
-                    ).withColumn("ts", F.current_timestamp())
-                    tl.append(adopt.coalesce(1), "checkpoints")
+                    _append_rows(spark, tl, "checkpoints", _CP_SCHEMA, [
+                        (p, "done", run_id, 1, fps[p], n_parts) for p in adopted
+                    ])
             # checkpoints written before fingerprints existed: treat all as
             # stale (recompute is idempotent; serving stale labels is not)
         else:
@@ -280,65 +303,48 @@ def run_pipeline(
             )
             tl.drop_partitions("labels", "part_id", emptied)
 
-    # ---- lineage: per-partition counts + stage drop breakdown (one shuffle,
-    # uniform key => no skew concern). Explicit schema: stays well-defined
-    # even when this run labeled zero rows.
+    # ---- side tables: ONE grouping-sets aggregate over the labels this run
+    # wrote, collected (at most parts + langs x codecs rows). by_lang = 0
+    # rows are per-part lineage, = 1 rows per-(lang, codec) metrics; codec
+    # rides along in labels, so no join back against the clips table.
     lab = tl.read(spark, "labels", schema=labels.schema).filter(F.col("part_id").isin(pending))
-    lineage = lab.groupBy("part_id").agg(
-        F.count("*").alias("n_in"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        *[
-            F.sum((F.col("drop_stage") == s).cast("long")).alias(f"drop_{s}")
-            for s in R.STAGES
-        ],
-    ).withColumns({"run_id": F.lit(run_id), "ts": F.current_timestamp()})
-    with stage_timer(log, "lineage", run_id=run_id):
-        tl.append(lineage, "lineage")
-
-    # ---- metrics: per-(lang, codec) keep rates; two-phase salted agg for the
-    # Zipf-hot (en, pcm16) bucket. codec rides along in labels, so no join
-    # back against the (huge) clips table is ever needed.
-    salt = F.pmod(F.crc32(F.col("clip_id").cast("binary")), F.lit(16))
-    partial = lab.groupBy(
-        F.coalesce(F.col("lang"), F.lit("?")).alias("lang"), F.col("codec"), salt.alias("_salt")
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.sum("pii_count").alias("pii_total"),
-        F.sum("tox_count").alias("tox_total"),
-    )
-    metrics = (
-        partial.groupBy("lang", "codec")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("n_keep").alias("n_keep"),
-            F.sum("pii_total").alias("pii_total"),
-            F.sum("tox_total").alias("tox_total"),
+    with stage_timer(log, "side tables", run_id=run_id):
+        rows = (
+            lab.withColumn("lang", F.coalesce(F.col("lang"), F.lit("?")))
+            .groupingSets([["part_id"], ["lang", "codec"]], "part_id", "lang", "codec")
+            .agg(
+                F.grouping("part_id").alias("by_lang"),
+                F.count("*").alias("n"),
+                F.sum(F.col("keep").cast("long")).alias("n_keep"),
+                F.sum("pii_count").alias("pii_total"),
+                F.sum("tox_count").alias("tox_total"),
+                *[
+                    F.sum((F.col("drop_stage") == s).cast("long")).alias(f"drop_{s}")
+                    for s in R.STAGES
+                ],
+            )
+            .withColumn("keep_rate", F.col("n_keep") / F.col("n"))
+            .collect()
         )
-        .withColumns({
-            "keep_rate": F.col("n_keep") / F.col("n"),
-            "run_id": F.lit(run_id),
-            "ts": F.current_timestamp(),
-        })
-    )
-    with stage_timer(log, "metrics", run_id=run_id):
-        tl.append(metrics, "metrics")
+        lineage = [r for r in rows if not r.by_lang]
+        _append_rows(spark, tl, "lineage", _LINEAGE_SCHEMA, [
+            (r.part_id, r.n, r.n_keep, *[r[f"drop_{s}"] for s in R.STAGES], run_id)
+            for r in lineage
+        ])
+        _append_rows(spark, tl, "metrics", _METRICS_SCHEMA, [
+            (r.lang, r.codec, r.n, r.n_keep, r.pii_total, r.tox_total, r.keep_rate, run_id)
+            for r in rows if r.by_lang
+        ])
 
     # ---- checkpoints last (a crash before this point leaves parts pending =>
     # they are recomputed and idempotently overwritten on resume)
-    n_labeled = lab.count()
-    counted = {r.part_id for r in lab.select("part_id").distinct().collect()}
-    cp = spark.createDataFrame(
-        [
-            (int(p), "done", run_id, int(p in counted),
-             fps.get(p, _FP_EMPTY) if fingerprint else _FP_ANY, n_parts)
-            for p in pending
-        ],
-        _CP_SCHEMA,
-    ).withColumn("ts", F.current_timestamp())
-    # coalesce(1): the done-marker lands as ONE parquet file, so the commit
-    # is a single atomic rename (no partially-visible checkpoint append)
-    tl.append(cp.coalesce(1), "checkpoints")
+    n_labeled = sum(r.n for r in lineage)
+    counted = {r.part_id for r in lineage}
+    _append_rows(spark, tl, "checkpoints", _CP_SCHEMA, [
+        (p, "done", run_id, int(p in counted),
+         fps.get(p, _FP_EMPTY) if fingerprint else _FP_ANY, n_parts)
+        for p in pending
+    ])
 
     wall = time.time() - t0
     log.info(

@@ -3241,12 +3241,6 @@ def _kmeans_sql_ctes(src: str, k: int, iters: int, dims: int = 64) -> str:
     return ",\n    ".join(parts)
 
 
-def _km_consts():
-    from .operators.clustering import KM_ITERS, KM_K
-
-    return KM_K, KM_ITERS
-
-
 @register(
     "q73_kmeans_clusters",
     f"""

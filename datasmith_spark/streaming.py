@@ -296,8 +296,10 @@ def make_batch_sink(tl: TableLayer):
                 .partitionBy("batch_id", "part_id")
                 .parquet(tl.path("labels"))
             )
+            # lang keyed as in run_pipeline: rows dropped before langid
+            # count under "?", not under a null lang
             metrics = (
-                batch_df.groupBy("lang", "codec")
+                batch_df.groupBy(F.coalesce(F.col("lang"), F.lit("?")).alias("lang"), "codec")
                 .agg(
                     F.count("*").alias("n"),
                     F.sum(F.col("keep").cast("long")).alias("n_keep"),

@@ -283,8 +283,6 @@ class TableLayer:
         if self.catalog is not None:
             self._active_spark().sql(f"DROP TABLE IF EXISTS {self.ident(name)}")
             return
-        import shutil
-
         shutil.rmtree(self.path(name), ignore_errors=True)
 
     def read_unified(self, spark: SparkSession, name: str, schema=None) -> DataFrame:

@@ -14,7 +14,7 @@ import pathlib
 import pandas as pd
 import pytest
 
-REPO = pathlib.Path("/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
 N_TEST = 2000
 N_PARTS = 16
 

@@ -64,19 +64,6 @@ def test_pipeline_chain_is_shuffle_free(spark, clips_path):
     assert plan_fused.count("+- Exchange") <= 1, plan_fused
 
 
-def test_metrics_rollup_is_two_phase(spark, clips_path):
-    """Salted metrics agg: partial on (lang, codec, salt), final on
-    (lang, codec) — two HashAggregate pairs, no single-stage hot-key agg."""
-    from datasmith_spark.pipeline import label_clips
-
-    lab = label_clips(spark.read.parquet(clips_path), n_parts=16)
-    salt = F.pmod(F.crc32(F.col("clip_id").cast("binary")), F.lit(16))
-    partial = lab.groupBy("lang", "codec", salt.alias("_salt")).agg(F.count("*").alias("n"))
-    final = partial.groupBy("lang", "codec").agg(F.sum("n").alias("n"))
-    plan = _plan(final)
-    assert plan.count("HashAggregate") >= 4  # partial+final for both phases
-
-
 def test_pair_joins_have_no_nested_loops(spark):
     """Every pair-generating dedup/ANN query must plan as equi-joins on
     band/cell keys — no CartesianProduct / BroadcastNestedLoopJoin anywhere

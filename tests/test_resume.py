@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from datasmith_spark.core.rules import STAGES
 from datasmith_spark.pipeline import run_pipeline
 from datasmith_spark.tables import TableLayer
 
@@ -63,27 +64,50 @@ def test_resume_is_idempotent(spark, clips_path, outdirs):
     pd.testing.assert_frame_equal(a, _labels_pdf(spark, resumed_dir))
 
 
-def test_lineage_counts_consistent(spark, clips_path, outdirs):
+def test_lineage_counts_consistent(spark, clips_path, oracle_pdf, outdirs):
+    """Lineage and metrics equal, row for row, a pandas groupby of the
+    oracle labels, with Spark's null-sum semantics: a sum over only nulls
+    is null (drop_<stage> of a part with no row dropped there, pii/tox
+    totals of the "?" lang group)."""
     single_dir, _ = outdirs
     clips = spark.read.parquet(clips_path)
-    run_pipeline(spark, clips, single_dir, n_parts=N_PARTS)
+    r = run_pipeline(spark, clips, single_dir, n_parts=N_PARTS)
+    assert r["n_labeled"] == len(oracle_pdf)
     tl = TableLayer(single_dir)
 
-    lineage = tl.read(spark, "lineage")
-    agg = lineage.agg(
-        F.sum("n_in").alias("n_in"),
-        F.sum("n_keep").alias("n_keep"),
-        *[F.sum(f"drop_{s}").alias(f"drop_{s}") for s in ("rules", "decode", "langid", "ppl", "scrub")],
-    ).collect()[0]
-    assert agg.n_in == clips.count()
-    drops = sum(agg[f"drop_{s}"] for s in ("rules", "decode", "langid", "ppl", "scrub"))
-    assert agg.n_keep + drops == agg.n_in
-    # no duplicate lineage rows per (part, run)
-    assert lineage.groupBy("part_id", "run_id").count().filter("count > 1").count() == 0
+    ora = oracle_pdf.assign(
+        n_keep=oracle_pdf["keep"].astype("int64"),
+        lang=oracle_pdf["lang"].fillna("?"),
+        **{f"drop_{s}": (oracle_pdf["drop_stage"] == s).astype("int64")
+           .where(oracle_pdf["drop_stage"].notna()) for s in STAGES},
+    )
 
-    metrics = tl.read(spark, "metrics")
-    m = metrics.agg(F.sum("n").alias("n"), F.sum("n_keep").alias("k")).collect()[0]
-    assert m.n == agg.n_in and m.k == agg.n_keep
+    def _rollup(keys, sums):
+        want = ora.groupby(keys, dropna=False).agg(
+            n=("clip_id", "size"), **{c: (src, lambda x: x.sum(min_count=1)) for c, src in sums}
+        )
+        return want.reset_index()
+
+    def _got(name, cols):
+        got = tl.read(spark, name).select(*cols).toPandas()
+        return got.sort_values(cols[:2]).reset_index(drop=True)
+
+    drops = [f"drop_{s}" for s in STAGES]
+    lin = _rollup("part_id", [(c, c) for c in ["n_keep", *drops]]).rename(columns={"n": "n_in"})
+    got = _got("lineage", ["part_id", "n_in", "n_keep", *drops])
+    pd.testing.assert_frame_equal(got, lin[got.columns], check_dtype=False)
+    # no duplicate lineage rows per (part, run)
+    assert tl.read(spark, "lineage").groupBy("part_id", "run_id").count().filter("count > 1").count() == 0
+
+    met = _rollup(
+        ["lang", "codec"],
+        [("n_keep", "n_keep"), ("pii_total", "pii_count"), ("tox_total", "tox_count")],
+    )
+    met["keep_rate"] = met["n_keep"] / met["n"]
+    cols = ["lang", "codec", "n", "n_keep", "pii_total", "tox_total", "keep_rate"]
+    got = _got("metrics", cols)
+    assert got.loc[got["lang"] == "?", ["pii_total", "tox_total"]].isna().all().all()
+    pd.testing.assert_frame_equal(got, met[cols], check_dtype=False)
 
 
 def test_fingerprint_invalidates_changed_part(spark, clips_path, tmp_path):

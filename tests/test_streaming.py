@@ -54,9 +54,12 @@ def test_stream_matches_batch(spark, stream_dirs, oracle_pdf):
     want = oracle_pdf.sort_values("clip_id").reset_index(drop=True)
     assert list(want.columns) == LABEL_COLS
     assert_frames_exact(got, want)
-    # metrics side table written per batch
+    # metrics side table written per batch, keyed like run_pipeline's: rows
+    # dropped before langid count under "?", and every labelled row once
     m = spark.read.parquet(f"{out}/metrics")
     assert m.count() > 0 and m.filter(F.col("run_id").startswith("stream-")).count() > 0
+    assert m.filter(F.col("lang").isNull()).count() == 0
+    assert m.agg(F.sum("n")).first()[0] == len(got)
 
 
 def test_stream_restart_is_noop(spark, stream_dirs):
