@@ -96,7 +96,10 @@ def _panel_scores(
     caller applies F.round in the JVM so HALF_UP rounding semantics stay
     engine-side. With match_col set, panel entries are (id, emb, val) and
     a corpus row is scored against a query only when its match_col equals
-    the query's val (the IVF nprobe=1 cell restriction)."""
+    the query's val (the IVF nprobe=1 cell restriction). A null embedding
+    or a null match_col value scores nothing, on either side (the
+    equi-join this replaced dropped null keys)."""
+    panel = [r for r in panel if r[1] is not None and (not match_col or r[2] is not None)]
     qids = np.asarray([r[0] for r in panel], dtype=np.int64)
     Q = (
         np.asarray([np.asarray(r[1], dtype=np.float64) for r in panel])
@@ -109,6 +112,10 @@ def _panel_scores(
 
     def _score(batches):
         for pdf in batches:
+            ok = pdf["embedding"].notna()
+            if match_col:
+                ok &= pdf[match_col].notna()
+            pdf = pdf[ok]
             if not len(pdf) or not len(qids):
                 continue
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)

@@ -9,25 +9,34 @@ stateless per row, so `readStream -> label_clips -> foreachBatch(write)` is
 the streaming analogue of the batch pipeline (each micro-batch's rows
 cross into Python once), with exactly-once sink semantics provided by the
 streaming checkpoint + idempotent per-batch writes: every output table is
-partitioned by batch_id and written with dynamic partition OVERWRITE, so a
-batch replayed after a crash (append landed, checkpoint commit didn't)
-rewrites exactly its own partitions instead of duplicating rows.
+partitioned by batch_id, so a batch replayed after a crash (append landed,
+checkpoint commit didn't) rewrites exactly its own partitions instead of
+duplicating rows. Each micro-batch runs ONE Spark job (the labels write,
+dynamic partition overwrite); its metrics are rolled up in the driver from
+the committed labels partition and written under a deterministic name.
 
 Scale design: at 10^12-clip scale this is the continuous-ingest front door —
 new clip files land in the source directory (or an Iceberg table with
 incremental scan), `maxFilesPerTrigger` bounds micro-batch size so decode
 memory stays flat, and the labels sink is directory-partitioned by
-(batch_id, part_id) — batch_id is what makes batch replay idempotent, so
-the streaming layout carries one extra partition column vs the batch
-path's part_id-only layout. TableLayer.read_unified reads EITHER layout
-back in batch shape (drops batch_id when present), keeping batch and
-streaming output interchangeable downstream.
+batch_id alone — batch_id is what makes batch replay idempotent; part_id
+stays a data column (splitting a micro-batch of a few dozen clips over up
+to n_parts directories costs a file per part and lowers burst throughput).
+The batch path is partitioned by part_id instead. TableLayer.read_unified
+reads EITHER layout back in batch shape (drops batch_id when present),
+keeping batch and streaming output interchangeable downstream. A stream
+out dir written with the earlier (batch_id, part_id) layout cannot be
+resumed: Spark's partition discovery rejects the mixed directory depths.
 """
 
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -267,15 +276,61 @@ def stream_clips_contract(
     return clips_contract(stream_clips(spark, input_dir, max_files_per_trigger))
 
 
-def make_batch_sink(tl: TableLayer):
-    """foreachBatch sink with idempotent-per-batch semantics.
+def _write_batch_metrics(tl: TableLayer, batch_id: int) -> None:
+    """Roll the committed labels partition `batch_id=N` up per (lang, codec)
+    in the driver and write it as the metrics partition's one file.
 
-    Both output tables are partitioned by batch_id and written with dynamic
-    partition overwrite: if the job dies after the write but before the
-    streaming checkpoint commits, the replayed batch (same batch_id, same
-    offsets) overwrites exactly the partitions it wrote before — no
-    duplicate label or metrics rows. Factored out so tests can replay a
-    batch directly (tests/test_streaming.py::test_batch_replay_idempotent).
+    Reads 5 narrow columns with pyarrow and keeps Spark's aggregate
+    semantics: `lang` keyed as in run_pipeline (rows dropped before langid
+    count under "?"), null keys form their own group, and a sum over only
+    nulls is null. The file has a deterministic name and lands by tmp file +
+    rename, so a replayed batch overwrites it."""
+    labels = os.path.join(tl.path("labels"), f"batch_id={batch_id}")
+    if not os.path.isdir(labels):  # an empty batch writes no partition
+        return
+    t = pq.read_table(labels, columns=["lang", "codec", "keep", "pii_count", "tox_count"])
+    t = pa.table({
+        "lang": pc.coalesce(t["lang"], pa.scalar("?")),
+        "codec": t["codec"],
+        "keep": t["keep"].cast(pa.int64()),
+        "pii_count": t["pii_count"],
+        "tox_count": t["tox_count"],
+    })
+    g = t.group_by(["lang", "codec"]).aggregate([
+        ([], "count_all"), ("keep", "sum"), ("pii_count", "sum"), ("tox_count", "sum"),
+    ])
+    n, n_keep = g["count_all"], g["keep_sum"]
+    out = pa.table({
+        "lang": g["lang"],
+        "codec": g["codec"],
+        "n": n,
+        "n_keep": n_keep,
+        "pii_total": g["pii_count_sum"],
+        "tox_total": g["tox_count_sum"],
+        "keep_rate": pc.divide(n_keep.cast(pa.float64()), n.cast(pa.float64())),
+        "run_id": pa.array([f"stream-{batch_id}"] * len(g), pa.string()),
+        "ts": pa.array([datetime.now(timezone.utc)] * len(g), pa.timestamp("us", tz="UTC")),
+    })
+    d = os.path.join(tl.path("metrics"), f"batch_id={batch_id}")
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, ".metrics.parquet.tmp")  # hidden from readers
+    pq.write_table(out, tmp)
+    os.replace(tmp, os.path.join(d, "metrics.parquet"))
+
+
+def make_batch_sink(tl: TableLayer):
+    """foreachBatch sink with idempotent-per-batch semantics, one Spark job
+    per micro-batch.
+
+    Labels are written partitioned by batch_id (part_id stays a data
+    column) with dynamic partition overwrite: if the job dies after the
+    write but before the streaming checkpoint commits, the replayed batch
+    (same batch_id, same offsets) overwrites exactly the partition it wrote
+    before. The batch's metrics are then rolled up in the driver from that
+    committed partition (_write_batch_metrics) and written under a
+    deterministic name that a replay overwrites — no duplicate label or
+    metrics rows, and no second Spark job. Factored out so tests can replay
+    a batch directly (tests/test_streaming.py::test_batch_replay_idempotent).
 
     Path-mode only: the replay-idempotence contract here is built on
     path-level dynamic partition overwrite; catalog-mode streaming would
@@ -287,40 +342,14 @@ def make_batch_sink(tl: TableLayer):
         )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            (
-                batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "part_id")
-                .parquet(tl.path("labels"))
-            )
-            # lang keyed as in run_pipeline: rows dropped before langid
-            # count under "?", not under a null lang
-            metrics = (
-                batch_df.groupBy(F.coalesce(F.col("lang"), F.lit("?")).alias("lang"), "codec")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.col("keep").cast("long")).alias("n_keep"),
-                    F.sum("pii_count").alias("pii_total"),
-                    F.sum("tox_count").alias("tox_total"),
-                )
-                .withColumns({
-                    "keep_rate": F.col("n_keep") / F.col("n"),
-                    "run_id": F.lit(f"stream-{batch_id}"),
-                    "ts": F.current_timestamp(),
-                    "batch_id": F.lit(int(batch_id)),
-                })
-            )
-            (
-                metrics.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(tl.path("metrics"))
-            )
-        finally:
-            batch_df.unpersist()
+        (
+            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(tl.path("labels"))
+        )
+        _write_batch_metrics(tl, int(batch_id))
 
     return _sink
 
@@ -690,8 +719,8 @@ def run_streaming_pipeline(
     the caller stops the query.
 
     Each micro-batch writes its labels and metrics into batch_id-keyed
-    partitions with dynamic partition overwrite (idempotent under batch
-    replay); the streaming checkpoint (out_dir/_stream_checkpoint) makes
+    partitions that a replayed batch overwrites (make_batch_sink); the
+    streaming checkpoint (out_dir/_stream_checkpoint) makes
     restarts resume from the last committed batch without reprocessing.
     """
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))

@@ -287,10 +287,11 @@ class TableLayer:
 
     def read_unified(self, spark: SparkSession, name: str, schema=None) -> DataFrame:
         """Read a table in BATCH shape regardless of which writer produced
-        it: the streaming sink partitions by (batch_id, part_id) for
-        idempotent batch replay, so a streaming-written labels dir carries an
-        extra batch_id partition column — this reader drops it, making batch
-        and streaming outputs interchangeable downstream."""
+        it: the batch pipeline partitions labels by part_id, the streaming
+        sink by batch_id (for idempotent batch replay) with part_id as a data
+        column, so a streaming-written labels dir carries an extra batch_id
+        column — this reader drops it, making batch and streaming outputs
+        interchangeable downstream."""
         df = self.read(spark, name, schema=schema)
         return df.drop("batch_id") if "batch_id" in df.columns else df
 

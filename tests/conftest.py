@@ -55,13 +55,12 @@ def clips_path(spark) -> str:
 
 
 @pytest.fixture(scope="session")
-def clips_pdf(clips_path, spark) -> pd.DataFrame:
-    return (
-        spark.read.parquet(clips_path)
-        .toPandas()
-        .sort_values("clip_id")
-        .reset_index(drop=True)
-    )
+def clips_pdf(clips_path) -> pd.DataFrame:
+    """The clips table in the driver, read with pyarrow: payloads included
+    it is ~84 MB per Arrow batch, which a toPandas() would stage in the JVM."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(clips_path).to_pandas().sort_values("clip_id").reset_index(drop=True)
 
 
 @pytest.fixture(scope="session")

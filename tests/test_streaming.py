@@ -40,6 +40,8 @@ def stream_dirs(spark, clips_path):
 
 
 def test_stream_matches_batch(spark, stream_dirs, oracle_pdf):
+    import pandas as pd
+
     inp, out = stream_dirs
     shutil.rmtree(out, ignore_errors=True)
     run_streaming_pipeline(spark, inp, out, n_parts=N_PARTS, max_files_per_trigger=4)
@@ -54,12 +56,27 @@ def test_stream_matches_batch(spark, stream_dirs, oracle_pdf):
     want = oracle_pdf.sort_values("clip_id").reset_index(drop=True)
     assert list(want.columns) == LABEL_COLS
     assert_frames_exact(got, want)
-    # metrics side table written per batch, keyed like run_pipeline's: rows
-    # dropped before langid count under "?", and every labelled row once
+    # metrics side table: per batch, a rollup of that batch's labels keyed
+    # like run_pipeline's (rows dropped before langid count under "?"), with
+    # Spark's null-sum semantics (a sum over only nulls is null)
     m = spark.read.parquet(f"{out}/metrics")
-    assert m.count() > 0 and m.filter(F.col("run_id").startswith("stream-")).count() > 0
-    assert m.filter(F.col("lang").isNull()).count() == 0
-    assert m.agg(F.sum("n")).first()[0] == len(got)
+    assert m.schema.simpleString() == (
+        "struct<lang:string,codec:string,n:bigint,n_keep:bigint,pii_total:bigint,"
+        "tox_total:bigint,keep_rate:double,run_id:string,ts:timestamp,batch_id:int>"
+    )
+    lab = spark.read.parquet(f"{out}/labels").toPandas()
+    lab = lab.assign(n_keep=lab["keep"].astype("int64"), lang=lab["lang"].fillna("?"))
+    sums = {"n_keep": "n_keep", "pii_total": "pii_count", "tox_total": "tox_count"}
+    want_m = lab.groupby(["batch_id", "lang", "codec"], dropna=False).agg(
+        n=("clip_id", "size"), **{c: (src, lambda x: x.sum(min_count=1)) for c, src in sums.items()}
+    ).reset_index()
+    want_m["keep_rate"] = want_m["n_keep"] / want_m["n"]
+    want_m["run_id"] = "stream-" + want_m["batch_id"].astype(str)
+    cols = ["batch_id", "lang", "codec", "n", *sums, "keep_rate", "run_id"]
+    got_m = m.select(*cols).toPandas().sort_values(cols[:3]).reset_index(drop=True)
+    want_m = want_m[cols].sort_values(cols[:3]).reset_index(drop=True)
+    assert lab["batch_id"].nunique() > 1 and want_m["pii_total"].isna().any()
+    pd.testing.assert_frame_equal(got_m, want_m, check_dtype=False)
 
 
 def test_stream_restart_is_noop(spark, stream_dirs):
@@ -277,7 +294,7 @@ def test_stateful_sessionize_out_of_order_late_event(spark, tmp_path):
 def test_read_unified_reads_both_layouts(spark, tmp_path):
     """TableLayer.read_unified must return the same batch-shape frame from a
     batch-written labels dir (part_id partitions) and a streaming-sink dir
-    ((batch_id, part_id) partitions)."""
+    (batch_id partitions, part_id a data column)."""
     from datasmith_spark.streaming import make_batch_sink
     from datasmith_spark.tables import TableLayer
 

@@ -248,6 +248,28 @@ def test_seq_dot_udf_edge_cases(spark):
     assert vals == [0.0, 0.0]
 
 
+def test_panel_scores_skip_null_embeddings_and_keys(spark):
+    """A null embedding or a null match key scores nothing on either side:
+    the panel stack must not crash, and a null query key must not match
+    null corpus keys (the equi-join _panel_scores replaced dropped them)."""
+    from datasmith_spark.operators.similarity import _panel_scores
+
+    e = {0: [1.0, 0.0], 2: [0.0, 1.0], 3: [1.0, 1.0], 4: [2.0, 1.0]}
+    df = spark.createDataFrame(
+        [(0, e[0], "a"), (1, None, "a"), (2, e[2], "a"), (3, e[3], None), (4, e[4], None)],
+        "vec_id bigint, embedding array<double>, bucket string",
+    )
+    panel = [(0, e[0], "a"), (1, None, "a"), (4, e[4], None)]
+
+    def pairs(match_col):
+        rows = _panel_scores(df, panel, match_col=match_col).collect()
+        assert all(np.isfinite(r._cos_raw) for r in rows)
+        return sorted((r.query_id, r.neighbor_id) for r in rows)
+
+    assert pairs("bucket") == [(0, 2)]
+    assert pairs(None) == [(0, 2), (0, 3), (0, 4), (4, 0), (4, 2), (4, 3)]
+
+
 def test_detection_method_registry(spark):
     """Pluggable strategy lookup mirrors the reference's get_detection_method
     contract: known methods dispatch, unknown raises ValueError."""
