@@ -4,12 +4,26 @@ local[N] in the sandbox; the same conf set is what we'd ship for a real
 multi-executor cluster (AQE, skew-join handling, Arrow batching, dynamic
 partition overwrite). Everything the pipeline strictly requires is also set
 at runtime (spark.conf.set) so entry() works under a driver-created session.
+
+The session's `file:` file system is datasmith.fs (Java sources in
+datasmith_spark/jvm, compiled with javac on first use into .data/jvm/):
+Hadoop's local file system with permissions and link lookups done through
+java.nio. Without Hadoop's native library the stock class spawns a `chmod`
+process from the driver JVM for every file and directory a write creates,
+and a `readlink` for every streaming-checkpoint status lookup. Without a
+javac the stock class stays.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Keep freed large buffers in the glibc heap instead of munmap/mmap churn.
@@ -51,6 +65,47 @@ def _set_malloc_env() -> None:
 
 _set_malloc_env()
 
+# datasmith.fs (datasmith_spark/jvm): the local filesystem without Hadoop's
+# per-call chmod/readlink processes, each of which the driver JVM spawns
+_JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_LOCAL_FS = {
+    "spark.hadoop.fs.file.impl": "datasmith.fs.NioRawLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "datasmith.fs.NioLocalFs",
+}
+
+
+def _local_fs_classes() -> str | None:
+    """Class directory of the compiled datasmith.fs sources, built once per
+    source and Hadoop version under <checkout>/.data/jvm/. None when the sources (a
+    zipped package), Spark's Hadoop jar or a javac are missing; the session
+    then uses Hadoop's RawLocalFileSystem."""
+    srcs = sorted(glob.glob(os.path.join(_JVM_SRC, "datasmith", "fs", "*.java")))
+    jars = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    javac = shutil.which("javac")
+    if not (srcs and jars and javac):
+        return None
+    h = hashlib.sha256(os.path.basename(jars[0]).encode())
+    for src in srcs:
+        with open(src, "rb") as f:
+            h.update(f.read())
+    root = os.path.join(_REPO_ROOT, ".data", "jvm")
+    out = os.path.join(root, h.hexdigest()[:12])
+    if os.path.isdir(out):
+        return out
+    os.makedirs(root, exist_ok=True)
+    tmp = tempfile.mkdtemp(dir=root, prefix=".build-")
+    r = subprocess.run([javac, "--release", "17", "-nowarn", "-cp", jars[0], "-d", tmp, *srcs],
+                       capture_output=True)
+    try:
+        if r.returncode != 0:
+            return None
+        os.replace(tmp, out)
+    except OSError:  # another session built it first
+        pass
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
 
 def get_spark(
     app: str = "datasmith_spark",
@@ -69,6 +124,7 @@ def get_spark(
     # scan at ~70 MB/s; pre-touched it runs at >1 GB/s (measured 15x).
     xms = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
     tmp_dir = os.path.join(_REPO_ROOT, ".data", "tmp")
+    fs_classes = _local_fs_classes()
     b = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -108,5 +164,12 @@ def get_spark(
             f"-Djava.io.tmpdir={tmp_dir} {xms}",
         )
     )
+    if fs_classes:
+        # the same, with permissions and link lookups in-process: every file
+        # or directory Hadoop creates otherwise costs a `chmod` process
+        # spawned from this multi-GB JVM (~90 per run_pipeline call)
+        b = b.config("spark.driver.extraClassPath", fs_classes)
+        for k, v in _LOCAL_FS.items():
+            b = b.config(k, v)
     os.makedirs(tmp_dir, exist_ok=True)
     return b.getOrCreate()
