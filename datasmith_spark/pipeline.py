@@ -53,6 +53,7 @@ from .tables import TableLayer
 LABEL_COLS = LABELS_SCHEMA.fieldNames()
 
 ARROW_BATCH = 256  # bytes-carrying rows are ~0.2-1 MB; keep Arrow batches bounded
+_PARQUET_BATCH = "spark.sql.parquet.columnarReaderBatchSize"
 
 # columns hashed into the per-part input fingerprint. Deliberately excludes
 # the audio payload: at 100 TB the fingerprint pre-scan must stay a
@@ -105,12 +106,27 @@ def part_fingerprints(clips: DataFrame, n_parts: int, payload: bool = False) -> 
             F.coalesce(F.crc32(F.substring(F.col("bytes"), 1, 4096)).cast("string"), F.lit("<null>"))
         )
     row_h = F.crc32(F.concat_ws("|", *fields).cast("binary"))
-    rows = (
+    sums = (
         clips.select(part.alias("part_id"), row_h.alias("h"))
         .groupBy("part_id")
         .agg(F.sum("h").alias("s"), F.count("*").alias("c"))
-        .collect()
     )
+    if not payload:
+        rows = sums.collect()
+    else:
+        # the vectorized parquet reader reserves a whole batch of `bytes`
+        # (default 4,096 rows of ~0.2-1 MB payloads) contiguously in the
+        # driver heap: read the payload pre-scan in Arrow-sized batches
+        conf = clips.sparkSession.conf
+        prev = conf.get(_PARQUET_BATCH, None)
+        conf.set(_PARQUET_BATCH, str(ARROW_BATCH))
+        try:
+            rows = sums.collect()
+        finally:
+            if prev is None:
+                conf.unset(_PARQUET_BATCH)
+            else:
+                conf.set(_PARQUET_BATCH, prev)
     return {r.part_id: f"{r.s}:{r.c}" for r in rows}
 
 

@@ -15,10 +15,15 @@ Conventions:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# the directory holding the datasmith_spark package (the checkout root):
+# committed fixtures under fixtures/, generated caches under .data/
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -902,7 +907,7 @@ def q26_simhash_candidates(spark, sf_dir):
 # --------------------------------------------------------------- clips ops
 
 _CLIPS_N = 4000  # fixed clip count: matches the committed oracle fixture
-_ORACLE_FIXTURE = f"/root/repo/fixtures/oracle_labels_n{_CLIPS_N}.parquet"
+_ORACLE_FIXTURE = f"{_REPO}/fixtures/oracle_labels_n{_CLIPS_N}.parquet"
 
 
 def _clips_cache_path(spark: SparkSession, sf_dir: str) -> str:
@@ -922,7 +927,7 @@ def _clips_cache_path(spark: SparkSession, sf_dir: str) -> str:
     # 15 uneven files capped them at ~5x effective on 32 cores. Row
     # CONTENT is a pure function of the row index (datagen.clips_df), so
     # the layout change cannot move any committed fixture digest.
-    path = f"/root/repo/.data/clips_cache/n{_CLIPS_N}_p64"
+    path = f"{_REPO}/.data/clips_cache/n{_CLIPS_N}_p64"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         datagen.clips_df(spark, _CLIPS_N, n_partitions=64).write.mode(
             "overwrite"
@@ -1357,7 +1362,7 @@ def q35_ivf_ann_search(spark, sf_dir):
 
 # ------------------------------------------------------- audio prep ops
 
-_AUDIO_OPS_FIXTURE = f"/root/repo/fixtures/oracle_audio_ops_n{_CLIPS_N}.parquet"
+_AUDIO_OPS_FIXTURE = f"{_REPO}/fixtures/oracle_audio_ops_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -1409,7 +1414,7 @@ def q37_logmel_features(spark, sf_dir):
     return logmel_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_IMAGES_FIXTURE = f"/root/repo/fixtures/oracle_images_n{_CLIPS_N}.parquet"
+_IMAGES_FIXTURE = f"{_REPO}/fixtures/oracle_images_n{_CLIPS_N}.parquet"
 
 
 def _images_cache_path(spark: SparkSession, sf_dir: str) -> str:
@@ -1419,7 +1424,7 @@ def _images_cache_path(spark: SparkSession, sf_dir: str) -> str:
 
     from .operators.multimodal import synth_images
 
-    path = f"/root/repo/.data/images_cache/n{_CLIPS_N}"
+    path = f"{_REPO}/.data/images_cache/n{_CLIPS_N}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         synth_images(spark, _CLIPS_N).write.mode("overwrite").parquet(path)
     return path
@@ -1451,7 +1456,7 @@ def q39_image_decode_digest(spark, sf_dir):
     return image_digest_scan(spark, _images_cache_path(spark, sf_dir))
 
 
-_AUDIO_FP_FIXTURE = f"/root/repo/fixtures/oracle_audio_fp_n{_CLIPS_N}.parquet"
+_AUDIO_FP_FIXTURE = f"{_REPO}/fixtures/oracle_audio_fp_n{_CLIPS_N}.parquet"
 
 _FP_KEYS_CACHE: dict = {}
 
@@ -1530,7 +1535,7 @@ def q38_audio_fp_neardup(spark, sf_dir):
     )
 
 
-_AUDIO_FP_BALL_FIXTURE = f"/root/repo/fixtures/oracle_audio_fp_ball_n{_CLIPS_N}.parquet"
+_AUDIO_FP_BALL_FIXTURE = f"{_REPO}/fixtures/oracle_audio_fp_ball_n{_CLIPS_N}.parquet"
 _FP_BALL_NUM, _FP_BALL_DEN = 4, 100  # symmetric radius-1 hit-ratio threshold
 
 
@@ -1643,7 +1648,7 @@ def q40_audio_fp_mulaw_neardup(spark, sf_dir):
 
 # ------------------------------------------------- audio + text quality
 
-_AUDIO_VAD_FIXTURE = f"/root/repo/fixtures/oracle_audio_vad_n{_CLIPS_N}.parquet"
+_AUDIO_VAD_FIXTURE = f"{_REPO}/fixtures/oracle_audio_vad_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -1822,7 +1827,7 @@ def q45_stratified_sample(spark, sf_dir):
 
 
 _AUDIO_QUALITY_FIXTURE = (
-    f"/root/repo/fixtures/oracle_audio_quality_n{_CLIPS_N}.parquet"
+    f"{_REPO}/fixtures/oracle_audio_quality_n{_CLIPS_N}.parquet"
 )
 
 
@@ -1981,7 +1986,7 @@ def q49_sequence_packing(spark, sf_dir):
     )
 
 
-_AUDIO_NORM_FIXTURE = f"/root/repo/fixtures/oracle_audio_norm_n{_CLIPS_N}.parquet"
+_AUDIO_NORM_FIXTURE = f"{_REPO}/fixtures/oracle_audio_norm_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -2230,7 +2235,7 @@ def q53_leakage_safe_split(spark, sf_dir):
     )
 
 
-_AUDIO_SPEED_FIXTURE = f"/root/repo/fixtures/oracle_audio_speed_n{_CLIPS_N}.parquet"
+_AUDIO_SPEED_FIXTURE = f"{_REPO}/fixtures/oracle_audio_speed_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -2264,7 +2269,7 @@ def q54_speed_perturb(spark, sf_dir):
     return speed_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_AUDIO_SEGMENT_FIXTURE = f"/root/repo/fixtures/oracle_audio_segment_n{_CLIPS_N}.parquet"
+_AUDIO_SEGMENT_FIXTURE = f"{_REPO}/fixtures/oracle_audio_segment_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -2298,7 +2303,7 @@ def q55_segment_clips(spark, sf_dir):
     return segment_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_AUDIO_CMVN_FIXTURE = f"/root/repo/fixtures/oracle_audio_cmvn_n{_CLIPS_N}.parquet"
+_AUDIO_CMVN_FIXTURE = f"{_REPO}/fixtures/oracle_audio_cmvn_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -2330,7 +2335,7 @@ def q56_cmvn_features(spark, sf_dir):
     return cmvn_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_AUDIO_SPECAUG_FIXTURE = f"/root/repo/fixtures/oracle_audio_specaug_n{_CLIPS_N}.parquet"
+_AUDIO_SPECAUG_FIXTURE = f"{_REPO}/fixtures/oracle_audio_specaug_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -2774,7 +2779,7 @@ def q62_text_curation_report(spark, sf_dir):
     )
 
 
-_AUDIO_NOISE_FIXTURE = f"/root/repo/fixtures/oracle_audio_noise_n{_CLIPS_N}.parquet"
+_AUDIO_NOISE_FIXTURE = f"{_REPO}/fixtures/oracle_audio_noise_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -2803,7 +2808,7 @@ def q63_noise_augment(spark, sf_dir):
     return noise_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_AUDIO_TEMPO_FIXTURE = f"/root/repo/fixtures/oracle_audio_tempo_n{_CLIPS_N}.parquet"
+_AUDIO_TEMPO_FIXTURE = f"{_REPO}/fixtures/oracle_audio_tempo_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -2834,7 +2839,7 @@ def q64_tempo_perturb(spark, sf_dir):
     return tempo_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_IMAGE_FP_FIXTURE = f"/root/repo/fixtures/oracle_image_fp_n{_CLIPS_N}.parquet"
+_IMAGE_FP_FIXTURE = f"{_REPO}/fixtures/oracle_image_fp_n{_CLIPS_N}.parquet"
 _IMG_MAX_HAMMING = 10  # near-dup verify threshold (of 64 dHash bits)
 
 
@@ -3143,7 +3148,7 @@ def q70_vocab_topk(spark, sf_dir):
     return topk.select(F.row_number().over(w).alias("rank"), "token", "n")
 
 
-_AUDIO_REVERB_FIXTURE = f"/root/repo/fixtures/oracle_audio_reverb_n{_CLIPS_N}.parquet"
+_AUDIO_REVERB_FIXTURE = f"{_REPO}/fixtures/oracle_audio_reverb_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -3327,7 +3332,7 @@ def q74_semdedup_pairs(spark, sf_dir):
 
 
 _BPE_MERGES_N = 24
-_BPE_FIXTURE = f"/root/repo/fixtures/oracle_bpe_n{_CLIPS_N}_m{_BPE_MERGES_N}.parquet"
+_BPE_FIXTURE = f"{_REPO}/fixtures/oracle_bpe_n{_CLIPS_N}_m{_BPE_MERGES_N}.parquet"
 
 
 @register(
@@ -3363,7 +3368,7 @@ def q75_bpe_train(spark, sf_dir):
 
 
 _BPE_ENCODE_FIXTURE = (
-    f"/root/repo/fixtures/oracle_bpe_encode_n{_CLIPS_N}_m{_BPE_MERGES_N}.parquet"
+    f"{_REPO}/fixtures/oracle_bpe_encode_n{_CLIPS_N}_m{_BPE_MERGES_N}.parquet"
 )
 
 
@@ -3462,7 +3467,7 @@ def q77_vocab_coverage(spark, sf_dir):
     )
 
 
-_AUDIO_TRANSCODE_FIXTURE = f"/root/repo/fixtures/oracle_audio_transcode_n{_CLIPS_N}.parquet"
+_AUDIO_TRANSCODE_FIXTURE = f"{_REPO}/fixtures/oracle_audio_transcode_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -3490,7 +3495,7 @@ def q78_transcode_normalize(spark, sf_dir):
     return transcode_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_IMAGE_THUMB_FIXTURE = f"/root/repo/fixtures/oracle_image_thumb_n{_CLIPS_N}.parquet"
+_IMAGE_THUMB_FIXTURE = f"{_REPO}/fixtures/oracle_image_thumb_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -3765,7 +3770,7 @@ def q83_keep_rate_drift(spark, sf_dir):
     )
 
 
-_AUDIO_PITCH_FIXTURE = f"/root/repo/fixtures/oracle_audio_pitch_n{_CLIPS_N}.parquet"
+_AUDIO_PITCH_FIXTURE = f"{_REPO}/fixtures/oracle_audio_pitch_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -4012,7 +4017,7 @@ def q88_cms_heavy_hitters(spark, sf_dir):
     return cms_heavy_hitters(toks, "tok", threshold=_CMS_HH_THR)
 
 
-_AUDIO_MIX_FIXTURE = f"/root/repo/fixtures/oracle_audio_mix_n{_CLIPS_N}.parquet"
+_AUDIO_MIX_FIXTURE = f"{_REPO}/fixtures/oracle_audio_mix_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -7688,7 +7693,7 @@ def q155_ks_drift(spark, sf_dir):
     )
 
 
-_AUDIO_XCORR_FIXTURE = f"/root/repo/fixtures/oracle_audio_xcorr_n{_CLIPS_N}.parquet"
+_AUDIO_XCORR_FIXTURE = f"{_REPO}/fixtures/oracle_audio_xcorr_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -7723,7 +7728,7 @@ def q156_xcorr_align(spark, sf_dir):
     return align_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_AUDIO_LM_FIXTURE = f"/root/repo/fixtures/oracle_audio_lm_n{_CLIPS_N}.parquet"
+_AUDIO_LM_FIXTURE = f"{_REPO}/fixtures/oracle_audio_lm_n{_CLIPS_N}.parquet"
 _LM_MIN_VOTES = 24  # weakest plant pools 34; sub-threshold accidents pool <= 16
 _LM_STOP_HASH = 32  # landmark stop-hash budget (operators/landmark.py docstring)
 _LM_DOM_NUM, _LM_DOM_DEN = 11, 5  # dominance 2.2x: plants >= 2.83, tonal FPs <= 1.71
@@ -7818,7 +7823,7 @@ def q157_landmark_shift_neardup(spark, sf_dir):
     )
 
 
-_AUDIO_SNIP_FIXTURE = f"/root/repo/fixtures/oracle_audio_snip_n{_CLIPS_N}.parquet"
+_AUDIO_SNIP_FIXTURE = f"{_REPO}/fixtures/oracle_audio_snip_n{_CLIPS_N}.parquet"
 
 _LM_KEYS_CACHE: dict = {}
 
@@ -7928,7 +7933,7 @@ def q158_landmark_snippet_lookup(spark, sf_dir):
     )
 
 
-_AUDIO_SIG_FIXTURE = f"/root/repo/fixtures/oracle_audio_sig_n{_CLIPS_N}.parquet"
+_AUDIO_SIG_FIXTURE = f"{_REPO}/fixtures/oracle_audio_sig_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8010,7 +8015,7 @@ def q159_speed_robust_neardup(spark, sf_dir):
     return speed_neardup_pairs(sigs)
 
 
-_AUDIO_MFCC_FIXTURE = f"/root/repo/fixtures/oracle_audio_mfcc_n{_CLIPS_N}.parquet"
+_AUDIO_MFCC_FIXTURE = f"{_REPO}/fixtures/oracle_audio_mfcc_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8038,7 +8043,7 @@ def q160_mfcc_features(spark, sf_dir):
     return mfcc_digest_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_AUDIO_LMNZ_FIXTURE = f"/root/repo/fixtures/oracle_audio_lmnz_n{_CLIPS_N}.parquet"
+_AUDIO_LMNZ_FIXTURE = f"{_REPO}/fixtures/oracle_audio_lmnz_n{_CLIPS_N}.parquet"
 
 _LMNZ_KEYS_CACHE: dict = {}
 
@@ -8159,7 +8164,7 @@ def q162_kmv_vocab_overlap(spark, sf_dir):
     return kmv_vocab_overlap(_t(spark, sf_dir, "documents"))
 
 
-_COMPRESS_FIXTURE = f"/root/repo/fixtures/oracle_compress_n{_CLIPS_N}.parquet"
+_COMPRESS_FIXTURE = f"{_REPO}/fixtures/oracle_compress_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8188,7 +8193,7 @@ def q163_transcript_compressibility(spark, sf_dir):
     return transcript_compressibility(clips)
 
 
-_PITCH_FIXTURE = f"/root/repo/fixtures/oracle_pitch_n{_CLIPS_N}.parquet"
+_PITCH_FIXTURE = f"{_REPO}/fixtures/oracle_pitch_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8217,7 +8222,7 @@ def q164_pitch_stats(spark, sf_dir):
     return pitch_stats_scan(spark, _clips_cache_path(spark, sf_dir))
 
 
-_CODESWITCH_FIXTURE = f"/root/repo/fixtures/oracle_codeswitch_n{_CLIPS_N}.parquet"
+_CODESWITCH_FIXTURE = f"{_REPO}/fixtures/oracle_codeswitch_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8252,7 +8257,7 @@ def q165_codeswitch_transcripts(spark, sf_dir):
     return codeswitch_clips(clips, aug_every=40)
 
 
-_INTEGRITY_FIXTURE = f"/root/repo/fixtures/oracle_integrity_n{_CLIPS_N}.parquet"
+_INTEGRITY_FIXTURE = f"{_REPO}/fixtures/oracle_integrity_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8401,7 +8406,7 @@ def q168_gate_attribution(spark, sf_dir):
     )
 
 
-_ELECTRICAL_FIXTURE = f"/root/repo/fixtures/oracle_electrical_n{_CLIPS_N}.parquet"
+_ELECTRICAL_FIXTURE = f"{_REPO}/fixtures/oracle_electrical_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8491,7 +8496,7 @@ def q169_homoglyph_audit(spark, sf_dir):
     return homoglyph_audit(_t(spark, sf_dir, "documents"), plant_every=40)
 
 
-_CLIPPING_FIXTURE = f"/root/repo/fixtures/oracle_clipping_n{_CLIPS_N}.parquet"
+_CLIPPING_FIXTURE = f"{_REPO}/fixtures/oracle_clipping_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8532,7 +8537,7 @@ def q171_clipping_audit(spark, sf_dir):
     return clipping_scan(spark, _clips_cache_path(spark, sf_dir), aug_every=40)
 
 
-_BITDEPTH_FIXTURE = f"/root/repo/fixtures/oracle_bitdepth_n{_CLIPS_N}.parquet"
+_BITDEPTH_FIXTURE = f"{_REPO}/fixtures/oracle_bitdepth_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8572,7 +8577,7 @@ def q172_bitdepth_audit(spark, sf_dir):
     return bitdepth_scan(spark, _clips_cache_path(spark, sf_dir), aug_every=40)
 
 
-_LOOPING_FIXTURE = f"/root/repo/fixtures/oracle_looping_n{_CLIPS_N}.parquet"
+_LOOPING_FIXTURE = f"{_REPO}/fixtures/oracle_looping_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8606,9 +8611,6 @@ def q173_looping_audit(spark, sf_dir):
     from .operators.audio_ops import looping_scan
 
     return looping_scan(spark, _clips_cache_path(spark, sf_dir), aug_every=40)
-
-
-_INTEGRITY_FIXTURE = f"/root/repo/fixtures/oracle_integrity_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -8790,7 +8792,7 @@ def q176_embedding_hygiene(spark, sf_dir):
     )
 
 
-_REUSE_FIXTURE = f"/root/repo/fixtures/oracle_reuse_n{_CLIPS_N}.parquet"
+_REUSE_FIXTURE = f"{_REPO}/fixtures/oracle_reuse_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -9102,8 +9104,8 @@ def _qstats_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _session_cached(_QSTATS_CACHE, spark, path, build)
 
 
-_FEATURE_QSTATS_FIXTURE = f"/root/repo/fixtures/oracle_feature_qstats_n{_CLIPS_N}.parquet"
-_CORPUS_CMVN_FIXTURE = f"/root/repo/fixtures/oracle_corpus_cmvn_n{_CLIPS_N}.parquet"
+_FEATURE_QSTATS_FIXTURE = f"{_REPO}/fixtures/oracle_feature_qstats_n{_CLIPS_N}.parquet"
+_CORPUS_CMVN_FIXTURE = f"{_REPO}/fixtures/oracle_corpus_cmvn_n{_CLIPS_N}.parquet"
 
 
 @register(
@@ -9286,7 +9288,7 @@ def q185_pagerank_copurchase(spark, sf_dir):
 
 
 _BPE_FERTILITY_FIXTURE = (
-    f"/root/repo/fixtures/oracle_bpe_fertility_n{_CLIPS_N}_m{_BPE_MERGES_N}.parquet"
+    f"{_REPO}/fixtures/oracle_bpe_fertility_n{_CLIPS_N}_m{_BPE_MERGES_N}.parquet"
 )
 
 
@@ -10038,7 +10040,7 @@ def q194_frequent_triples(spark, sf_dir):
     return tri
 
 
-_ISOTONIC_FIXTURE = f"/root/repo/fixtures/oracle_isotonic_n{_CLIPS_N}.parquet"
+_ISOTONIC_FIXTURE = f"{_REPO}/fixtures/oracle_isotonic_n{_CLIPS_N}.parquet"
 
 
 @register(

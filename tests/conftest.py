@@ -1,5 +1,11 @@
 """Shared fixtures: one SparkSession + cached deterministic clips/oracle data.
 
+The session is sized from the host: cores from get_spark's own default
+($SPARK_GRAFT_CPUS, else all), and a driver heap of a quarter of the host's
+memory (physical, or the cgroup limit where lower), the JDK's default
+maximum heap (-XX:MaxRAMPercentage=25). That heap fits, so get_spark
+pre-touches it as it does in production.
+
 The clips table and oracle labels are pure functions of the code (seed=42),
 so they are cached under .data/test_cache keyed by a fingerprint of the
 generating modules — edits to datagen/core auto-invalidate the cache.
@@ -35,9 +41,9 @@ def cache_dir() -> pathlib.Path:
 
 @pytest.fixture(scope="session")
 def spark():
-    from datasmith_spark.session import get_spark
+    from datasmith_spark.session import _host_memory_bytes, get_spark
 
-    s = get_spark(app="datasmith-tests", cores=8, driver_mem="16g")
+    s = get_spark(app="datasmith-tests", driver_mem=f"{_host_memory_bytes() // 4 >> 20}m")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -14,6 +14,8 @@ from datasmith_spark.core.audio_fp import (
     fp_keys,
 )
 
+from .conftest import REPO
+
 
 def _tone(sr: int, secs: float, f: float = 523.0, seed: int = 11) -> np.ndarray:
     rng = np.random.default_rng(seed)
@@ -225,10 +227,10 @@ class TestBallLane:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_fp_ball_fixture as mbf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_fp_ball_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_fp_ball_n4000.parquet")
         lo, hi = 480, 680  # covers 50 base clips incl. 5 mulaw derivations
         fresh = mbf.oracle_rows(range(lo, hi))
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {
@@ -253,10 +255,10 @@ class TestFixture:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_fp_fixture as maf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_fp_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_fp_n4000.parquet")
         lo, hi = 480, 680  # covers 50 base clips incl. 5 aug derivations
         fresh = maf.oracle_rows(range(lo, hi))
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

@@ -8,6 +8,8 @@ import pytest
 from datasmith_spark.core.audio import decode, snr_db
 from datasmith_spark.core.resample import logmel, mel_filterbank, resample
 
+from .conftest import REPO
+
 
 def _sine(freq: float, sr: int, sec: float = 0.5) -> np.ndarray:
     t = np.arange(int(sr * sec), dtype=np.float64) / sr
@@ -174,10 +176,10 @@ class TestFixtureAndDigests:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_ops_fixture as maf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_ops_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_ops_n4000.parquet")
         assert len(fix) == 4000
         idx = list(range(0, 4000, 29))  # 138-row deterministic sample
         fresh = maf.oracle_rows(idx).reset_index(drop=True)
@@ -340,10 +342,10 @@ class TestMixOverlay:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_mix_fixture as mmf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_mix_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_mix_n4000.parquet")
         assert len(fix) == 2000
         idx = list(range(0, 2000, 67))  # 30-row deterministic sample
         fresh = mmf.oracle_rows(idx).reset_index(drop=True)
@@ -431,10 +433,10 @@ class TestXcorrAlign:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_xcorr_fixture as mxf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_xcorr_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_xcorr_n4000.parquet")
         assert len(fix) == 4000
         # decodable clips must recover the planted lag exactly
         assert bool(fix.loc[fix["ok"], "hit"].all())

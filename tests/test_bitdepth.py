@@ -15,6 +15,8 @@ from datasmith_spark.core.bitdepth import (
     bitdepth_variant,
 )
 
+from .conftest import REPO
+
 
 def _tone(sr: int = 16000, sec: float = 1.0, f: float = 211.0, amp: float = 0.5):
     t = np.arange(int(sr * sec)) / sr
@@ -118,10 +120,10 @@ class TestOperator:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_bitdepth_fixture as mbf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_bitdepth_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_bitdepth_n4000.parquet")
         lo, hi = 1100, 1300
         fresh = mbf.oracle_rows(range(lo, hi)).reset_index(drop=True)
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

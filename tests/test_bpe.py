@@ -8,6 +8,8 @@ import pytest
 
 from datasmith_spark.core.bpe import EOW, bpe_train, best_pair, merge_seq, symbolize
 
+from .conftest import REPO
+
 
 class TestKernel:
     def test_symbolize_and_overlap_rule(self):
@@ -78,7 +80,7 @@ class TestFixtureHonesty:
     def test_committed_fixture_matches_retrained_prefix(self):
         from scripts.make_bpe_fixture import transcript_word_counts
 
-        fx = pd.read_parquet("/root/repo/fixtures/oracle_bpe_n4000_m24.parquet")
+        fx = pd.read_parquet(f"{REPO}/fixtures/oracle_bpe_n4000_m24.parquet")
         # retrain the first 8 merges over the same word table — a prefix of
         # BPE training is exact (later merges never affect earlier ones)
         merges = bpe_train(transcript_word_counts(4000), 8)
@@ -176,10 +178,10 @@ class TestBpeFertility:
         from datasmith_spark.core.bpe import encode_word
 
         fx = pd.read_parquet(
-            "/root/repo/fixtures/oracle_bpe_fertility_n4000_m24.parquet"
+            f"{REPO}/fixtures/oracle_bpe_fertility_n4000_m24.parquet"
         ).set_index("lang")
-        labels = pd.read_parquet("/root/repo/fixtures/oracle_labels_n4000.parquet")
-        merges_fx = pd.read_parquet("/root/repo/fixtures/oracle_bpe_n4000_m24.parquet")
+        labels = pd.read_parquet(f"{REPO}/fixtures/oracle_labels_n4000.parquet")
+        merges_fx = pd.read_parquet(f"{REPO}/fixtures/oracle_bpe_n4000_m24.parquet")
         merges = [(r["left"], r["right"]) for _, r in merges_fx.iterrows()]
         sub = labels[labels.lang == "ru"]
         n_words = n_tokens = n_chars = 0

@@ -17,6 +17,8 @@ from datasmith_spark.core.clipping import (
     clipping_variant,
 )
 
+from .conftest import REPO
+
 
 def _tone(sr: int = 16000, sec: float = 1.0, f: float = 211.0, amp: float = 0.5):
     t = np.arange(int(sr * sec)) / sr
@@ -139,10 +141,10 @@ class TestOperator:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_clipping_fixture as mcf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_clipping_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_clipping_n4000.parquet")
         lo, hi = 1100, 1300
         fresh = mcf.oracle_rows(range(lo, hi)).reset_index(drop=True)
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

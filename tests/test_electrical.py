@@ -18,6 +18,8 @@ from datasmith_spark.core.electrical import (
     electrical_variant,
 )
 
+from .conftest import REPO
+
 
 def _tone(sr: int = 16000, sec: float = 2.0, f: float = 173.0) -> np.ndarray:
     t = np.arange(int(sr * sec)) / sr
@@ -132,10 +134,10 @@ class TestOperator:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_electrical_fixture as mef
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_electrical_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_electrical_n4000.parquet")
         lo, hi = 1100, 1300
         fresh = mef.oracle_rows(range(lo, hi)).reset_index(drop=True)
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

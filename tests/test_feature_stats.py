@@ -16,8 +16,10 @@ from datasmith_spark.core.resample import (
     logmel_qstats,
 )
 
-FIXTURE = "/root/repo/fixtures/oracle_feature_qstats_n4000.parquet"
-CMVN_FIXTURE = "/root/repo/fixtures/oracle_corpus_cmvn_n4000.parquet"
+from .conftest import REPO
+
+FIXTURE = f"{REPO}/fixtures/oracle_feature_qstats_n4000.parquet"
+CMVN_FIXTURE = f"{REPO}/fixtures/oracle_corpus_cmvn_n4000.parquet"
 
 
 def _sine(freq: float, sr: int, sec: float = 0.5) -> np.ndarray:
@@ -139,7 +141,7 @@ class TestSparkOperator:
             )
         )
         for parts in (3, 11):
-            path = f"/root/repo/.data/qstats_test/n200_p{parts}"
+            path = f"{REPO}/.data/qstats_test/n200_p{parts}"
             datagen.clips_df(spark, 200, n_partitions=parts).write.mode(
                 "overwrite"
             ).parquet(path)

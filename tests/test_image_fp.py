@@ -16,6 +16,8 @@ from datasmith_spark.core.image_fp import (
 )
 from datasmith_spark.operators.multimodal import decode_image, synth_image_record
 
+from .conftest import REPO
+
 
 def _img(i: int) -> np.ndarray:
     rng = np.random.default_rng([991, i])
@@ -108,7 +110,7 @@ class TestFixtureHonesty:
     def test_committed_fixture_matches_regenerated_sample(self):
         from datasmith_spark.operators.image_fp import IMG_AUG_EVERY, _hash_rows
 
-        fx = pd.read_parquet("/root/repo/fixtures/oracle_image_fp_n4000.parquet")
+        fx = pd.read_parquet(f"{REPO}/fixtures/oracle_image_fp_n4000.parquet")
         sample = list(range(0, 200))
         regen = _hash_rows(
             pd.DataFrame([synth_image_record(i) for i in sample]),
@@ -124,7 +126,7 @@ class TestFixtureHonesty:
         pd.testing.assert_frame_equal(sub, regen)
 
     def test_fixture_planted_pairs_separate_cleanly(self):
-        fx = pd.read_parquet("/root/repo/fixtures/oracle_image_fp_n4000.parquet")
+        fx = pd.read_parquet(f"{REPO}/fixtures/oracle_image_fp_n4000.parquet")
         byid = {r.img_id: [r.b0, r.b1, r.b2, r.b3] for r in fx.itertuples()}
         augs = [i for i in byid if i.startswith("imgaug_")]
         assert len(augs) == 98
@@ -137,7 +139,7 @@ class TestFixtureHonesty:
     def test_decoded_fixture_row_matches_codec_path(self):
         # a PNG row (i=9) and a JPEG row (i=17) hash identically through
         # decode_image as the fixture records — pins codec+hash integration
-        fx = pd.read_parquet("/root/repo/fixtures/oracle_image_fp_n4000.parquet")
+        fx = pd.read_parquet(f"{REPO}/fixtures/oracle_image_fp_n4000.parquet")
         for i in (9, 17):
             r = synth_image_record(i)
             img = decode_image(r["bytes"], r["width"], r["height"], r["fmt"])
@@ -163,7 +165,7 @@ class TestThumbnails:
     def test_fixture_honesty(self):
         from scripts.make_image_thumb_fixture import oracle_rows
 
-        fx = pd.read_parquet("/root/repo/fixtures/oracle_image_thumb_n4000.parquet")
+        fx = pd.read_parquet(f"{REPO}/fixtures/oracle_image_thumb_n4000.parquet")
         regen = oracle_rows(range(0, 150))
         pd.testing.assert_frame_equal(fx.iloc[:150].reset_index(drop=True), regen)
 

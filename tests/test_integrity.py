@@ -16,6 +16,8 @@ from datasmith_spark.core.integrity import (
     integrity_metrics,
 )
 
+from .conftest import REPO
+
 
 def _tone(sr: int = 16000, sec: float = 1.0) -> np.ndarray:
     t = np.arange(int(sr * sec)) / sr
@@ -93,10 +95,10 @@ class TestOperator:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_integrity_fixture as mif
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_integrity_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_integrity_n4000.parquet")
         lo, hi = 1200, 1400
         fresh = mif.oracle_rows(range(lo, hi)).reset_index(drop=True)
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

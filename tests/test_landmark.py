@@ -22,6 +22,8 @@ from datasmith_spark.core.landmark import (
     spectrogram16,
 )
 
+from .conftest import REPO
+
 
 def _sig(secs: float = 2.0, seed: int = 11) -> np.ndarray:
     """Harmonically-rich deterministic test signal at 16 kHz."""
@@ -271,10 +273,10 @@ class TestFixture:
         regeneration on a deterministic clip-index sample."""
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_lm_fixture as mal
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_lm_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_lm_n4000.parquet")
         lo, hi = 480, 680  # covers 25 base clips incl. 5 del_ derivations
         fresh = mal.oracle_rows(range(lo, hi))
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {
@@ -364,10 +366,10 @@ class TestSnippetLookup:
     def test_planted_probe_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_snip_fixture as mas
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_snip_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_snip_n4000.parquet")
         lo, hi = 400, 720  # covers 8 snip_ derivations
         fresh = mas.oracle_rows(range(lo, hi))
         ids = {f"snip_{i:012d}" for i in range(lo, hi)}
@@ -481,10 +483,10 @@ class TestNoiseLane:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_lmnz_fixture as mnz
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_lmnz_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_lmnz_n4000.parquet")
         lo, hi = 480, 680
         fresh = mnz.oracle_rows(range(lo, hi))
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

@@ -14,6 +14,8 @@ from datasmith_spark.core.looping import (
     looping_variant,
 )
 
+from .conftest import REPO
+
 
 def _noisy(n: int = 16000, seed: int = 7) -> np.ndarray:
     rng = np.random.default_rng(seed)
@@ -97,10 +99,10 @@ class TestOperator:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_looping_fixture as mlf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_looping_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_looping_n4000.parquet")
         lo, hi = 1100, 1300
         fresh = mlf.oracle_rows(range(lo, hi)).reset_index(drop=True)
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

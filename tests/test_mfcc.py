@@ -9,6 +9,8 @@ import pytest
 
 from datasmith_spark.core.resample import _dct_basis, delta, logmel, mfcc
 
+from .conftest import REPO
+
 
 def _sine(freq: float, sr: int, sec: float = 0.5) -> np.ndarray:
     t = np.arange(int(sr * sec), dtype=np.float64) / sr
@@ -101,10 +103,10 @@ class TestMfccOperator:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_mfcc_fixture as mmf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_mfcc_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_mfcc_n4000.parquet")
         assert len(fix) == 4000
         idx = list(range(0, 4000, 31))
         fresh = mmf.oracle_rows(idx).reset_index(drop=True)

@@ -14,7 +14,7 @@ from datasmith_spark import datagen
 from datasmith_spark.core import audio
 from datasmith_spark.pipeline import label_clips
 
-from .conftest import N_PARTS, assert_frames_exact
+from .conftest import N_PARTS, REPO, assert_frames_exact
 
 
 @pytest.fixture(scope="module")
@@ -130,10 +130,10 @@ def test_oracle_fixture_is_honest():
 
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, f"{REPO}/scripts")
     import make_oracle_fixture as mof
 
-    fix = pd.read_parquet("/root/repo/fixtures/oracle_labels_n4000.parquet")
+    fix = pd.read_parquet(f"{REPO}/fixtures/oracle_labels_n4000.parquet")
     assert len(fix) == 4000
     idx = list(range(0, 4000, 17))  # 236-row deterministic sample
     fresh = mof.oracle_rows(idx).reset_index(drop=True)

@@ -9,6 +9,8 @@ import pytest
 from datasmith_spark.core.audio import encode
 from datasmith_spark.core.pitch import PITCH_SR, frame_lags16, pitch_stats
 
+from .conftest import REPO
+
 
 def _tone(f0: float, sr: int = 16000, sec: float = 1.0, amp: float = 0.4) -> np.ndarray:
     t = np.arange(int(sr * sec)) / sr
@@ -76,10 +78,10 @@ class TestOperator:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_pitch_fixture as mpf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_pitch_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_pitch_n4000.parquet")
         assert len(fix) == 4000
         idx = list(range(0, 4000, 41))
         fresh = mpf.oracle_rows(idx).reset_index(drop=True)

@@ -8,6 +8,7 @@ which does both through java.nio."""
 
 from __future__ import annotations
 
+import logging
 import os
 import stat
 import threading
@@ -109,3 +110,43 @@ def test_set_permission_and_link_status(spark, tmp_path):
 def test_no_javac_leaves_stock_file_system(monkeypatch):
     monkeypatch.setattr(session.shutil, "which", lambda name: None)
     assert session._local_fs_classes() is None
+
+
+class _Records(logging.Handler):
+    def __init__(self) -> None:
+        super().__init__()
+        self.messages: list[str] = []
+
+    def emit(self, record: logging.LogRecord) -> None:
+        self.messages.append(record.getMessage())
+
+
+def test_pretouch_only_a_heap_that_fits(monkeypatch):
+    monkeypatch.setattr(session, "_host_memory_bytes", lambda: 4 << 30)
+    # on the module's own logger: a configured "datasmith_spark" parent does
+    # not propagate to the root logger
+    log, seen = logging.getLogger(session.__name__), _Records()
+    log.addHandler(seen)
+    try:
+        assert session._pretouch_opts("3g") == " -Xms3g -XX:+AlwaysPreTouch"
+        assert session._pretouch_opts("4096m") == " -Xms4096m -XX:+AlwaysPreTouch"
+        assert not seen.messages
+        assert session._pretouch_opts("12g") == ""
+        assert session._pretouch_opts("4194305k") == ""
+    finally:
+        log.removeHandler(seen)
+    assert seen.messages == [
+        "driver_mem=12g exceeds the host's 4096 MiB of memory: heap not pre-touched",
+        "driver_mem=4194305k exceeds the host's 4096 MiB of memory: heap not pre-touched",
+    ]
+
+
+def test_host_memory_is_the_lower_of_physical_and_cgroup(monkeypatch, tmp_path):
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    unset, limited = tmp_path / "memory.max", tmp_path / "memory.limit_in_bytes"
+    unset.write_text("max\n")
+    limited.write_text(f"{1 << 30}\n")
+    monkeypatch.setattr(session, "_CGROUP_LIMITS", (str(unset), str(tmp_path / "missing")))
+    assert session._host_memory_bytes() == phys
+    monkeypatch.setattr(session, "_CGROUP_LIMITS", (str(unset), str(limited)))
+    assert session._host_memory_bytes() == min(phys, 1 << 30)

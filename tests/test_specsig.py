@@ -20,6 +20,8 @@ from datasmith_spark.core.specsig import (
     tone_peaks16,
 )
 
+from .conftest import REPO
+
 
 def _tones(freqs, secs=3.0, seed=11, noise=0.03):
     rng = np.random.default_rng(seed)
@@ -206,10 +208,10 @@ class TestFixture:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_sig_fixture as mas
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_sig_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_sig_n4000.parquet")
         lo, hi = 480, 680
         fresh = mas.oracle_rows(range(lo, hi))
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

@@ -18,6 +18,8 @@ from datasmith_spark.core.spectral import (
     spectral_metrics,
 )
 
+from .conftest import REPO
+
 
 def _tone(sr: int, secs: float, freq: float, amp: float = 0.5) -> np.ndarray:
     t = np.arange(int(sr * secs), dtype=np.float64) / sr
@@ -155,10 +157,10 @@ class TestSpectralSpark:
         deterministic row sample (same protocol as the q41 fixture)."""
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_quality_fixture as mqf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_quality_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_quality_n4000.parquet")
         assert len(fix) == 4000
         # each rule actually splits the corpus
         assert 0 < fix.snr_ok.sum() < 4000
@@ -274,10 +276,10 @@ class TestNormalize:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_norm_fixture as mnf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_norm_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_norm_n4000.parquet")
         assert len(fix) == 4000
         assert 0 < fix.normalized.sum() < 4000
         idx = list(range(0, 4000, 29))

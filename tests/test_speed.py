@@ -11,6 +11,8 @@ import pytest
 from datasmith_spark.core.audio import decode, encode
 from datasmith_spark.operators.audio_ops import SPEED_FACTORS, _speed_pdf
 
+from .conftest import REPO
+
 
 def _tone_pdf(sr: int = 16000, f: float = 440.0, secs: float = 2.0) -> pd.DataFrame:
     t = np.arange(int(sr * secs)) / sr
@@ -126,10 +128,10 @@ class TestSpeedSpark:
     def test_speed_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_speed_fixture as msf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_speed_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_speed_n4000.parquet")
         assert len(fix) == 12000
         idx = list(range(0, 4000, 31))
         fresh = msf.oracle_rows(idx).reset_index(drop=True)
@@ -227,10 +229,10 @@ class TestSegmentKernel:
     def test_segment_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_segment_fixture as msg
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_segment_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_segment_n4000.parquet")
         idx = list(range(0, 4000, 41))
         fresh = msg.oracle_rows(idx).reset_index(drop=True)
         sample = (
@@ -319,10 +321,10 @@ class TestCmvn:
         )
         assert list(got.feats_md5) == list(want.feats_md5)
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_cmvn_fixture as mcf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_cmvn_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_cmvn_n4000.parquet")
         idx = list(range(0, 4000, 43))
         fresh = mcf.oracle_rows(idx).reset_index(drop=True)
         sample = fix.iloc[idx].reset_index(drop=True)
@@ -384,10 +386,10 @@ class TestSpecAugment:
         )
         assert list(got.feats_md5) == list(want.feats_md5)
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_specaug_fixture as msa
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_specaug_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_specaug_n4000.parquet")
         idx = list(range(0, 4000, 47))
         fresh = msa.oracle_rows(idx).reset_index(drop=True)
         sample = fix.iloc[idx].reset_index(drop=True)
@@ -442,10 +444,10 @@ class TestNoiseAugment:
         assert list(got.payload_md5) == list(want.payload_md5)
         assert list(got.augmented) == list(want.augmented)
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_noise_fixture as mnf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_noise_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_noise_n4000.parquet")
         idx = list(range(0, 4000, 53))
         fresh = mnf.oracle_rows(idx).reset_index(drop=True)
         sample = fix.iloc[idx].reset_index(drop=True)
@@ -520,10 +522,10 @@ class TestTempoPerturb:
         )
         assert list(got.payload_md5) == list(want.payload_md5)
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_tempo_fixture as mtf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_tempo_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_tempo_n4000.parquet")
         idx = list(range(0, 4000, 59))
         fresh = mtf.oracle_rows(idx).reset_index(drop=True)
         rows = sorted(i * 2 + j for i in idx for j in range(2))
@@ -604,7 +606,7 @@ class TestReverbAugment:
 
         from scripts.make_audio_reverb_fixture import oracle_rows
 
-        fx = pd.read_parquet("/root/repo/fixtures/oracle_audio_reverb_n4000.parquet")
+        fx = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_reverb_n4000.parquet")
         regen = oracle_rows(range(0, 120))
         sub = fx.iloc[:120].reset_index(drop=True)
         pd.testing.assert_frame_equal(sub, regen)
@@ -664,7 +666,7 @@ class TestTranscode:
         from scripts.make_audio_transcode_fixture import oracle_rows
 
         fx = pd.read_parquet(
-            "/root/repo/fixtures/oracle_audio_transcode_n4000.parquet"
+            f"{REPO}/fixtures/oracle_audio_transcode_n4000.parquet"
         )
         regen = oracle_rows(range(0, 150))
         pd.testing.assert_frame_equal(fx.iloc[:150].reset_index(drop=True), regen)
@@ -740,10 +742,10 @@ class TestPitchPerturb:
         )
         assert list(got.payload_md5) == list(want.payload_md5)
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_pitch_fixture as mpf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_pitch_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_pitch_n4000.parquet")
         idx = list(range(0, 4000, 59))
         fresh = mpf.oracle_rows(idx).reset_index(drop=True)
         rows = sorted(i * 2 + j for i in idx for j in range(2))

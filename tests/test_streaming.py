@@ -572,27 +572,33 @@ def test_stream_features_matches_batch(spark, clips_path, stream_dirs, tmp_path)
     """The fused decode->logmel->cmvn->specaugment featurization lifted onto
     a stream reproduces the batch operator bit-for-bit (stateless chain;
     SpecAugment masks depend only on clip_id, never on batch composition)."""
+    import pyarrow.parquet as pq
+
     from datasmith_spark.operators.audio_ops import specaug_features
     from datasmith_spark.streaming import stream_features
 
+    # ~420 MB of float64 features per side: both go to parquet files and are
+    # read here with pyarrow, not collected through the driver JVM's heap (a
+    # memory sink holds its whole output there)
     inp, _ = stream_dirs
+    got_dir, want_dir = tmp_path / "stream", tmp_path / "batch"
     q = (
         stream_features(spark, inp, max_files_per_trigger=4, augment=True)
-        .writeStream.format("memory")
-        .queryName("feat_stream")
+        .writeStream.format("parquet")
+        .option("path", str(got_dir))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(300)
+    specaug_features(spark.read.parquet(inp)).write.parquet(str(want_dir))
     got = (
-        spark.table("feat_stream")
-        .toPandas()
+        pq.read_table(got_dir).to_pandas()
         .sort_values("clip_id")
         .reset_index(drop=True)
     )
     want = (
-        specaug_features(spark.read.parquet(inp))
-        .toPandas()
+        pq.read_table(want_dir).to_pandas()
         .sort_values("clip_id")
         .reset_index(drop=True)
     )

@@ -5,6 +5,8 @@ import numpy as np
 from datasmith_spark.core import langid, lm, text
 from datasmith_spark.core.scrub import scrub_text
 
+from .conftest import REPO
+
 
 def test_langid_accuracy_on_fresh_text():
     m = langid.model()
@@ -397,10 +399,10 @@ class TestCompressibility:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_compress_fixture as mcf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_compress_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_compress_n4000.parquet")
         idx = list(range(0, 4000, 37))
         fresh = mcf.oracle_rows(idx).reset_index(drop=True)
         sample = fix.iloc[idx].reset_index(drop=True)
@@ -467,10 +469,10 @@ class TestCodeSwitch:
 
         import pandas as pd
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_codeswitch_fixture as mcs
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_codeswitch_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_codeswitch_n4000.parquet")
         lo, hi = 960, 1160
         fresh = mcs.oracle_rows(range(lo, hi)).reset_index(drop=True)
         ids = {f"clip_{i:012d}" for i in range(lo, hi)} | {

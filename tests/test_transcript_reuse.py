@@ -7,6 +7,8 @@ import pandas as pd
 
 from datasmith_spark.operators.audio_ops import REUSE_MIN_LEN, transcript_reuse
 
+from .conftest import REPO
+
 LONG_A = "this transcript is long enough to audit"
 LONG_B = "a different but equally substantive line"
 
@@ -67,10 +69,10 @@ class TestSemantics:
     def test_fixture_is_honest(self):
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_reuse_fixture as mrf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_reuse_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_reuse_n4000.parquet")
         fresh = mrf.oracle_rows(4000)
         a = fix.sort_values("transcript_md5").reset_index(drop=True)
         b = fresh.sort_values("transcript_md5").reset_index(drop=True)

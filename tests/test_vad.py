@@ -9,6 +9,8 @@ import pytest
 from datasmith_spark.core.audio import decode, encode
 from datasmith_spark.core.vad import vad_keep, vad_metrics
 
+from .conftest import REPO
+
 
 def _padded_tone(sr: int, lead_s: float, tone_s: float, tail_s: float,
                  amp: float = 0.5, freq: float = 440.0) -> np.ndarray:
@@ -128,10 +130,10 @@ class TestVadSpark:
         deterministic row sample (same protocol as the q36/q37 fixture)."""
         import sys
 
-        sys.path.insert(0, "/root/repo/scripts")
+        sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_vad_fixture as mvf
 
-        fix = pd.read_parquet("/root/repo/fixtures/oracle_audio_vad_n4000.parquet")
+        fix = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_vad_n4000.parquet")
         assert len(fix) == 4000
         assert 0 < fix.keep.sum() < 4000  # the rule actually splits the corpus
         idx = list(range(0, 4000, 29))
