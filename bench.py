@@ -51,7 +51,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -80,7 +81,7 @@ def clips_parquet(n_rows: int) -> str:
     """
     from datasmith_spark import datagen
 
-    path = f"/root/repo/.data/clips_bench/n{n_rows}"
+    path = os.path.join(ROOT, ".data", "clips_bench", f"n{n_rows}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # enough files that the fused manifest scan can use every core twice
         datagen.write_clips_parquet(path, n_rows, rows_per_file=max(250, n_rows // 64))
@@ -96,13 +97,14 @@ def time_pipeline(spark, path: str, n_parts: int, fused: bool = True) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from datasmith_spark.pipeline import ARROW_BATCH, label_clips, label_clips_fused
+    from datasmith_spark.operators.scan_decode import scan_labels
+    from datasmith_spark.pipeline import ARROW_BATCH, label_clips
 
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
 
     def build():
         if fused:
-            return label_clips_fused(spark, path, n_parts=n_parts)
+            return scan_labels(spark, path, n_parts=n_parts)
         return label_clips(spark.read.parquet(path), n_parts=n_parts)
 
     agg = [F.count("*").alias("n"), F.sum(F.col("keep").cast("long")).alias("n_keep")]
@@ -177,7 +179,7 @@ def scaling_subprocess(path: str, cores: int, target_sec: float) -> dict:
     lo_cpu, hi_cpu = ncpu - cores, ncpu - 1
     cmd = [
         "taskset", "-c", f"{lo_cpu}-{hi_cpu}", sys.executable,
-        "/root/repo/scripts/scale_probe.py", str(cores), path, str(target_sec), "1",
+        os.path.join(ROOT, "scripts", "scale_probe.py"), str(cores), path, str(target_sec), "1",
     ]
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
     for line in r.stdout.splitlines():
@@ -190,7 +192,7 @@ def kernel_scaling_subprocess(path: str, lo: int, hi: int, trials: int, target_s
     """No-JVM cross-check: identical fused kernel under plain multiprocessing
     (scripts/kernel_scaling.py) — the noise-floor scaling measurement."""
     cmd = [
-        sys.executable, "/root/repo/scripts/kernel_scaling.py",
+        sys.executable, os.path.join(ROOT, "scripts", "kernel_scaling.py"),
         path, str(lo), str(hi), str(trials), str(target_sec),
     ]
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
@@ -288,7 +290,7 @@ def main() -> None:
 
     # full record (incl. raw trials + kernel cross-check) to a side file; the
     # PRINTED line stays compact so the driver's tail capture always parses it
-    full_path = "/root/repo/.data/bench_full.json"
+    full_path = os.path.join(ROOT, ".data", "bench_full.json")
     os.makedirs(os.path.dirname(full_path), exist_ok=True)
     with open(full_path, "w") as f:
         json.dump(result, f, indent=1)

@@ -41,6 +41,7 @@ from ..core.audio_fp import (
     fp_int_keys,
     fp_keys,
 )
+from .scan_decode import manifest_scan
 
 FP_KEYS_DDL = "clip_id string, fp_key string"
 FP_IKEYS_DDL = "clip_id string, fp_ikey long"
@@ -151,21 +152,15 @@ def fingerprint_scan(
     max_s: float = FP_MAX_S,
 ) -> DataFrame:
     """fingerprint_clips over a parquet directory via the fused manifest
-    scan (audio bytes never enter the JVM — q38's path).
-
-    Unlike the byte-heavy decode scans, this stage is dominated by the
-    resample+FFT kernel (~0.1 s/clip) rather than file reads, so it does
-    NOT take the sandbox I/O-serialization cap (SPARK_GRAFT_SCAN_PAR):
-    one task per manifest file up to the session's parallelism.
+    scan (audio bytes never enter the JVM — q38's path). The stage is
+    dominated by the resample+FFT kernel (~0.1 s/clip) rather than file
+    reads.
     """
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _fp_rows(pdf, every, aug_every, kgram, max_s),
         FP_KEYS_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -178,16 +173,13 @@ def fingerprint_ints_scan(
     max_s: float = FP_MAX_S,
 ) -> DataFrame:
     """Robust-lane fingerprint scan: (clip_id, fp_ikey) integer 2-gram keys
-    over a parquet directory (fused manifest scan, kernel parallelism —
-    same shape as fingerprint_scan; q40's path)."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
+    over a parquet directory (fused manifest scan, the same shape as
+    fingerprint_scan; q40's path)."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _fp_irows(pdf, every, aug_every, kgram, max_s),
         FP_IKEYS_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 

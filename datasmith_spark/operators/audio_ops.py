@@ -17,17 +17,17 @@ Two input paths, mirroring the pipeline's transfer-scan vs fused-scan split:
     default-heap session verifies the full table (q36/q37's path).
 
 At 100 TB these are embarrassingly parallel narrow maps — no shuffle, no
-cross-row state; the only knobs are Arrow batch size
-(spark.sql.execution.arrow.maxRecordsPerBatch) against executor memory and
-scan parallelism (the fused path reuses scan_decode's $SPARK_GRAFT_SCAN_PAR
-cap, a sandbox-only I/O-serialization workaround).
+cross-row state; the only knob is Arrow batch size
+(spark.sql.execution.arrow.maxRecordsPerBatch) against executor memory. The
+fused path is scan_decode.manifest_scan, which runs one task per core, up
+to one per file.
 """
 
 from __future__ import annotations
 
 import hashlib
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -57,6 +57,7 @@ from ..core.vad import (
     vad_keep,
     vad_metrics,
 )
+from .scan_decode import manifest_scan
 
 RESAMPLED_DDL = (
     "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
@@ -1122,54 +1123,17 @@ def logmel_features(
 
 # ----------------------------------------------------- fused manifest path
 
-def _manifest_scan(
-    spark: SparkSession,
-    input_dir: str,
-    per_pdf: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-    batch_rows: int = 256,
-    scan_parallelism: int | None = None,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """scan_decode.manifest_scan over input_dir's parquet files: each task
-    streams bounded pyarrow batches through per_pdf, so heavy binary
-    columns stay entirely inside the Python worker.
-
-    columns defaults to the clip-table layout; the image lane passes its own
-    (operators/multimodal.py image_digest_scan)."""
-    from .scan_decode import CLIP_COLUMNS, list_manifest, manifest_scan
-
-    return manifest_scan(
-        spark, list_manifest(input_dir), per_pdf, schema, batch_rows, scan_parallelism,
-        CLIP_COLUMNS if columns is None else columns,
-    )
-
-
-def _kernel_parallelism(spark: SparkSession, input_dir: str) -> int:
-    """Scan parallelism for KERNEL-bound digest scans.
-
-    SPARK_GRAFT_SCAN_PAR caps byte-bound scans because this sandbox's kernel
-    serializes file-I/O syscalls (BASELINE.md "Sandbox scaling protocol").
-    The resample/log-mel/fingerprint scans are dominated by the numpy
-    resample+FFT kernel, not reads, so they take the session's full
-    parallelism — exactly the split fingerprint_scan already made."""
-    from .scan_decode import list_manifest
-
-    return max(1, min(len(list_manifest(input_dir)), spark.sparkContext.defaultParallelism))
-
-
 def resample_digest_scan(
     spark: SparkSession, input_dir: str, target_sr: int,
     mode: str = "sinc", codec_out: str = "pcm16",
 ) -> DataFrame:
     """resample_clips(digest=True) over a parquet directory via the fused
     manifest scan — the verification path at any heap size (q36)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _resample_pdf(pdf, target_sr, mode, codec_out, True),
         RESAMPLED_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1179,12 +1143,11 @@ def trim_digest_scan(
 ) -> DataFrame:
     """trim_clips(digest=True) over a parquet directory via the fused
     manifest scan — trimmed bytes never cross the JVM boundary (q44)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _trim_pdf(pdf, frame_ms, active_db, True),
         TRIMMED_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1194,14 +1157,12 @@ def vad_trim_scan(
 ) -> DataFrame:
     """vad_clips over a parquet directory via the fused manifest scan —
     audio bytes never enter the JVM (q41's verification path). Kernel-bound
-    (decode + one framed-energy pass), so it takes full session parallelism
-    like the resample/log-mel/fingerprint scans."""
-    return _manifest_scan(
+    (decode + one framed-energy pass)."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _vad_pdf(pdf, frame_ms, active_db),
         VAD_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -1209,13 +1170,12 @@ def vad_trim_scan(
 def spectral_quality_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     """spectral_quality over a parquet directory via the fused manifest scan
     — audio bytes never enter the JVM (q46's verification path). FFT-kernel
-    bound, so it takes full session parallelism like q36/q37/q38."""
-    return _manifest_scan(
+    bound."""
+    return manifest_scan(
         spark,
         input_dir,
         _spectral_pdf,
         SPECTRAL_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -1226,13 +1186,12 @@ def speaking_rate_scan(
 ) -> DataFrame:
     """speaking_rate over a parquet directory via the fused manifest scan
     (q47's verification path). Kernel-bound (decode + one framed-energy
-    pass), full session parallelism."""
-    return _manifest_scan(
+    pass)."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _rate_pdf(pdf, frame_ms, active_db),
         RATE_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec", "transcript"],
     )
 
@@ -1242,12 +1201,11 @@ def normalize_digest_scan(
 ) -> DataFrame:
     """normalize_clips(digest=True) over a parquet directory via the fused
     manifest scan — normalized bytes never cross the JVM boundary (q50)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _normalize_pdf(pdf, target_peak, True),
         NORMALIZED_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1261,12 +1219,11 @@ def segment_digest_scan(
 ) -> DataFrame:
     """segment_clips(digest=True) over a parquet directory via the fused
     manifest scan — segment bytes never cross the JVM boundary (q55)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _segment_pdf(pdf, seg_ms, hop_ms, frame_ms, active_db, True),
         SEGMENT_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1278,13 +1235,12 @@ def speed_digest_scan(
 ) -> DataFrame:
     """speed_perturb_clips(digest=True) over a parquet directory via the
     fused manifest scan — augmented bytes never cross the JVM boundary
-    (q54); kernel-bound, so it takes session parallelism like q36/q38."""
-    return _manifest_scan(
+    (q54); kernel-bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _speed_pdf(pdf, factors, codec_out, True),
         SPEED_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1294,12 +1250,11 @@ def logmel_digest_scan(
 ) -> DataFrame:
     """logmel_features(digest=True) over a parquet directory via the fused
     manifest scan (q37)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _logmel_pdf(pdf, n_fft, hop, n_mels, True),
         LOGMEL_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1328,14 +1283,12 @@ def mfcc_digest_scan(
     n_fft: int = 512, hop: int = 256, n_mels: int = 40, n_mfcc: int = 13,
 ) -> DataFrame:
     """mfcc_features(digest=True) over a parquet directory via the fused
-    manifest scan (q160) — FFT+DCT kernel bound, full session parallelism
-    like q36/q37."""
-    return _manifest_scan(
+    manifest scan (q160) — FFT+DCT kernel bound like q36/q37."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _mfcc_pdf(pdf, n_fft, hop, n_mels, n_mfcc, True),
         MFCC_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1379,12 +1332,11 @@ def specaug_digest_scan(
 ) -> DataFrame:
     """specaug_features(digest=True) over a parquet directory via the fused
     manifest scan (q57)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _specaug_pdf(pdf, n_fft, hop, n_mels, True),
         LOGMEL_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1393,12 +1345,11 @@ def noise_digest_scan(
 ) -> DataFrame:
     """noise_aug_clips(digest=True) over a parquet directory via the fused
     manifest scan (q63)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _noise_pdf(pdf, snr_db, True),
         NOISED_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1410,12 +1361,11 @@ def tempo_digest_scan(
 ) -> DataFrame:
     """tempo_perturb_clips(digest=True) over a parquet directory via the
     fused manifest scan (q64)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _tempo_pdf(pdf, factors, codec_out, True),
         TEMPO_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1474,12 +1424,11 @@ def pitch_digest_scan(
 ) -> DataFrame:
     """pitch_perturb_clips(digest=True) over a parquet directory via the
     fused manifest scan (q84)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _pitch_pdf(pdf, factors, codec_out, True),
         PITCH_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1489,12 +1438,11 @@ def cmvn_digest_scan(
 ) -> DataFrame:
     """cmvn_features(digest=True) over a parquet directory via the fused
     manifest scan (q56)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _cmvn_pdf(pdf, n_fft, hop, n_mels, True),
         LOGMEL_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1570,12 +1518,11 @@ def reverb_digest_scan(
 ) -> DataFrame:
     """reverb_clips(digest=True) over a parquet directory via the fused
     manifest scan (q71)."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _reverb_pdf(pdf, tail_ms, True),
         REVERB_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1653,9 +1600,8 @@ def transcode_digest_scan(
     spark: SparkSession, input_dir: str, codec_out: str = "pcm16"
 ) -> DataFrame:
     """transcode_clips(digest=True) over a parquet directory via the fused
-    manifest scan (q78). Byte-bound (decode+requantize, no DSP kernel), so
-    it keeps the sandbox I/O cap like the plain decode scans."""
-    return _manifest_scan(
+    manifest scan (q78). Byte-bound (decode+requantize, no DSP kernel)."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _transcode_pdf(pdf, codec_out, True),
@@ -1759,12 +1705,11 @@ def augment_route_digest_scan(
 ) -> DataFrame:
     """augment_route_clips over a parquet directory via the fused manifest
     scan (q85) — one decode per clip, one kernel by route, digest out."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _aug_route_pdf(pdf, route_fn, snr_db, tail_ms),
         AUG_ROUTE_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -1944,14 +1889,12 @@ def align_digest_scan(
     spark: SparkSession, input_dir: str, max_lag: int = ALIGN_MAX_LAG
 ) -> DataFrame:
     """Planted-probe alignment over a parquet directory via the fused
-    manifest scan (q156's verification path) — FFT-kernel bound, so it
-    takes full session parallelism like q36/q37/q38."""
-    return _manifest_scan(
+    manifest scan (q156's verification path) — FFT-kernel bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _align_pdf(pdf, max_lag),
         ALIGN_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2064,13 +2007,12 @@ def pitch_stats_clips(clips: DataFrame) -> DataFrame:
 
 def pitch_stats_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     """pitch_stats_clips over a parquet directory via the fused manifest
-    scan (q164's path) — FFT-kernel bound, full session parallelism."""
-    return _manifest_scan(
+    scan (q164's path) — FFT-kernel bound."""
+    return manifest_scan(
         spark,
         input_dir,
         _pitch_stats_pdf,
         PITCH_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2139,13 +2081,12 @@ def integrity_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
 
 def integrity_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
     """integrity_clips over a parquet directory via the fused manifest scan
-    (q166's path) — decode-bound, full session parallelism."""
-    return _manifest_scan(
+    (q166's path) — decode-bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _integrity_pdf(pdf, aug_every),
         INTEG_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2220,12 +2161,11 @@ def quality_gate_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     cost, and this operator pays it ONCE for five verdicts instead of five
     times — the fusion you actually run in production, with the per-lane
     queries (q41/q46/q47/q163/q166) as its audited components."""
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         _quality_gate_pdf,
         GATE_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec", "transcript"],
     )
 
@@ -2294,13 +2234,12 @@ def electrical_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
 
 def electrical_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
     """electrical_clips over a parquet directory via the fused manifest
-    scan (q170's path) — decode+FFT bound, full session parallelism."""
-    return _manifest_scan(
+    scan (q170's path) — decode+FFT bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _electrical_pdf(pdf, aug_every),
         ELEC_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2368,13 +2307,12 @@ def clipping_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
 
 def clipping_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
     """clipping_clips over a parquet directory via the fused manifest scan
-    (q171's path) — decode-bound, full session parallelism."""
-    return _manifest_scan(
+    (q171's path) — decode-bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _clipping_pdf(pdf, aug_every),
         CLIPA_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2440,13 +2378,12 @@ def bitdepth_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
 
 def bitdepth_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
     """bitdepth_clips over a parquet directory via the fused manifest scan
-    (q172's path) — decode-bound, full session parallelism."""
-    return _manifest_scan(
+    (q172's path) — decode-bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _bitdepth_pdf(pdf, aug_every),
         BITD_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2510,13 +2447,12 @@ def looping_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
 
 def looping_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
     """looping_clips over a parquet directory via the fused manifest scan
-    (q173's path) — decode-bound, full session parallelism."""
-    return _manifest_scan(
+    (q173's path) — decode-bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _looping_pdf(pdf, aug_every),
         LOOPA_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2588,14 +2524,12 @@ def defect_gate_clips(clips: DataFrame) -> DataFrame:
 
 def defect_gate_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     """defect_gate_clips over a parquet directory via the fused manifest
-    scan (q174's path) — one decode+FFT pass for all five lanes, full
-    session parallelism."""
-    return _manifest_scan(
+    scan (q174's path) — one decode+FFT pass for all five lanes."""
+    return manifest_scan(
         spark,
         input_dir,
         _defect_gate_pdf,
         DEFECT_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2741,13 +2675,12 @@ def feature_qstats_scan(
     n_fft: int = 512, hop: int = 256, n_mels: int = 40,
 ) -> DataFrame:
     """feature_qstats_clips over a parquet directory via the fused manifest
-    scan (kernel parallelism — FFT-bound like q37)."""
-    return _manifest_scan(
+    scan (FFT-bound like q37)."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _feature_qstats_pdf(pdf, n_fft, hop, n_mels),
         FEATURE_QSTATS_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2850,12 +2783,11 @@ def corpus_cmvn_digest_scan(
             }
         )
 
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         _pdf,
         CORPUS_CMVN_DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.image_fp import DH_MAX_HAMMING, aug_exposure_variant, dhash_bands
+from .scan_decode import manifest_scan
 
 IMG_HASH_DDL = "img_id string, b0 int, b1 int, b2 int, b3 int"
 _BAND_COLS = ["b0", "b1", "b2", "b3"]
@@ -108,17 +109,14 @@ def image_hashes(images: DataFrame, aug_every: int = 0) -> DataFrame:
 def image_hash_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
     """image_hashes over a parquet directory via the fused manifest scan
     (image bytes never enter the JVM). The pure-python codecs are the
-    kernel, so this takes full session parallelism like the other
-    kernel-bound scans, not the byte-bound I/O cap."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
+    kernel."""
     from .multimodal import IMAGE_COLUMNS
 
-    return _manifest_scan(
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _hash_rows(pdf, aug_every),
         IMG_HASH_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
         columns=IMAGE_COLUMNS,
     )
 

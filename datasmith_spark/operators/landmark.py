@@ -74,6 +74,7 @@ from ..core.landmark import (
     plant_delay,
 )
 from ..core.resample import resample
+from .scan_decode import manifest_scan
 
 LM_KEYS_DDL = "clip_id string, lm_hash long, t int"
 
@@ -160,17 +161,8 @@ def landmark_scan(
 ) -> DataFrame:
     """landmark_clips over a parquet directory via the fused manifest scan
     (audio bytes never enter the JVM — q157's path). Kernel-bound like the
-    fingerprint scans (resample+FFT dominates reads), so it takes the
-    session's full parallelism, not the sandbox I/O cap."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
-        spark,
-        input_dir,
-        lambda pdf: _lm_rows(pdf, every, aug_every),
-        LM_KEYS_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
-    )
+    fingerprint scans (resample+FFT dominates reads)."""
+    return manifest_scan(spark, input_dir, lambda pdf: _lm_rows(pdf, every, aug_every), LM_KEYS_DDL)
 
 
 def _lm_noise_rows(pdf: pd.DataFrame, every: int, aug_every: int) -> pd.DataFrame:
@@ -235,15 +227,12 @@ def landmark_noise_scan(
     spark: SparkSession, input_dir: str, every: int = 1, aug_every: int = 0
 ) -> DataFrame:
     """landmark_noise_clips over a parquet directory via the fused manifest
-    scan (q161's path) — kernel-bound, full session parallelism."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
+    scan (q161's path) — kernel-bound."""
+    return manifest_scan(
         spark,
         input_dir,
         lambda pdf: _lm_noise_rows(pdf, every, aug_every),
         LM_KEYS_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
     )
 
 
@@ -380,16 +369,8 @@ def _lm_probe_rows(pdf: pd.DataFrame, every: int) -> pd.DataFrame:
 
 def landmark_probe_scan(spark: SparkSession, input_dir: str, every: int) -> DataFrame:
     """Planted-snippet probe keys over a parquet directory (fused manifest
-    scan, kernel parallelism — q158's probe side)."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
-        spark,
-        input_dir,
-        lambda pdf: _lm_probe_rows(pdf, every),
-        LM_KEYS_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
-    )
+    scan — q158's probe side)."""
+    return manifest_scan(spark, input_dir, lambda pdf: _lm_probe_rows(pdf, every), LM_KEYS_DDL)
 
 
 def landmark_lookup(

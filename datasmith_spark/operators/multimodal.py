@@ -26,7 +26,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .scan_decode import manifest_scan
 
 IMAGE_SCHEMA_DDL = "img_id string, bytes binary, width int, height int, fmt string"
 
@@ -282,19 +283,8 @@ IMAGE_COLUMNS = ["img_id", "bytes", "width", "height", "fmt"]
 def image_digest_scan(spark, input_dir: str):
     """Decode-digest scan over an image parquet directory via the fused
     manifest scan — image bytes never enter the JVM; the pure-python
-    PNG/JPEG decoders are the kernel, so like the other kernel-bound digest
-    scans it takes full session parallelism, not the byte-bound I/O cap
-    (q39's verification path; see audio_ops._kernel_parallelism)."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
-        spark,
-        input_dir,
-        _image_digest_pdf,
-        _DIGEST_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
-        columns=IMAGE_COLUMNS,
-    )
+    PNG/JPEG decoders are the kernel (q39's verification path)."""
+    return manifest_scan(spark, input_dir, _image_digest_pdf, _DIGEST_DDL, columns=IMAGE_COLUMNS)
 
 
 def resize_rgb8(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -420,15 +410,6 @@ def _thumb_pdf(pdf: pd.DataFrame, out_w: int = THUMB_W, out_h: int = THUMB_H) ->
 
 def thumbnail_digest_scan(spark, input_dir: str):
     """Decode->resize->digest scan over an image parquet directory (q79's
-    verification path; fused manifest scan, kernel parallelism — the same
-    shape as image_digest_scan)."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
-        spark,
-        input_dir,
-        _thumb_pdf,
-        _THUMB_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
-        columns=IMAGE_COLUMNS,
-    )
+    verification path; fused manifest scan, the same shape as
+    image_digest_scan)."""
+    return manifest_scan(spark, input_dir, _thumb_pdf, _THUMB_DDL, columns=IMAGE_COLUMNS)

@@ -11,8 +11,10 @@ ppl -> scrub) over one pandas batch of raw clip rows, in two halves:
 
 Every source runs the kernel in ONE mapInPandas: `pipeline.label_clips`
 over any clips DataFrame (JVM parquet scan, file-source stream, in-memory
-frame), and `scan_labels` over a manifest of parquet files that pyarrow
-reads inside the worker, so audio bytes never cross a process boundary.
+frame), and `scan_labels` over a directory of parquet files that pyarrow
+reads inside the worker (`manifest_scan`, the one worker-side scan every
+digest operator also runs on), so audio bytes never cross a process
+boundary.
 `scan_rules_decode` runs the head alone; the q27/q28 queries persist its
 output and run the tail over it.
 
@@ -266,44 +268,30 @@ def label_batch_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
 
 def manifest_scan(
     spark: SparkSession,
-    manifest: list[str],
+    input_dir: str,
     per_pdf: Callable[[pd.DataFrame], pd.DataFrame],
     schema: T.StructType | str,
     batch_rows: int = 256,
-    scan_parallelism: int | None = None,
     columns: list[str] = CLIP_COLUMNS,
 ) -> DataFrame:
-    """Distributed worker-side parquet scan: manifest entries spread over
-    scan tasks, pyarrow reads `columns` of each file in bounded batches,
-    and per_pdf maps every batch — file paths are the only rows the JVM
-    ever sees, so heavy binary columns stay inside the Python worker.
-
-    scan_parallelism: concurrent scan tasks. Default: min(files, session
-    parallelism, $SPARK_GRAFT_SCAN_PAR or 8). The cap exists for hosts whose
-    kernel serializes page faults/file I/O globally: there decode
-    throughput INVERTS beyond ~8 concurrent readers (measured at local[32]
-    on a 32-core host: 8-way 1,340-1,370 clips/s vs 16-way 814-917 on the
-    identical job; BASELINE.md); on a real cluster set SPARK_GRAFT_SCAN_PAR
-    high — the operator itself is width-agnostic and each task streams row
-    groups at bounded memory.
+    """Distributed worker-side parquet scan of input_dir: the file list
+    rides in the task closure, each of min(files, defaultParallelism) tasks
+    reads its contiguous range of file indices with pyarrow in bounded
+    batches of `columns`, and per_pdf maps every batch — heavy binary
+    columns never enter the JVM. The tasks come from spark.range, so no
+    shuffle runs in front of the scan.
     """
-    if scan_parallelism is None:
-        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
-        scan_parallelism = max(1, min(len(manifest), spark.sparkContext.defaultParallelism, cap))
-    # built from pandas (Arrow): a list of tuples would add a Python
-    # re-serialise stage in front of the scan
-    paths = spark.createDataFrame(pd.DataFrame({"path": manifest}), "path string").repartition(
-        max(scan_parallelism, 1)
-    )
+    files = list_manifest(input_dir)
+    n_tasks = max(1, min(len(files), spark.sparkContext.defaultParallelism))
 
     def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
 
         for b in batches:
-            for path in b["path"]:
+            for i in b["id"]:
                 # memory_map: page-cache-resident files skip the read()
                 # path entirely (measured 13x at 32-way concurrency)
-                pf = pq.ParquetFile(path, memory_map=True)
+                pf = pq.ParquetFile(files[i], memory_map=True)
                 for rb in pf.iter_batches(batch_size=batch_rows, columns=columns):
                     out = per_pdf(rb.to_pandas())
                     # a batch with no pending rows (resume pruning) emits
@@ -312,18 +300,17 @@ def manifest_scan(
                     if len(out):
                         yield out
 
-    return paths.mapInPandas(_scan, schema=schema)
+    return spark.range(0, len(files), 1, n_tasks).mapInPandas(_scan, schema=schema)
 
 
 def _kernel_scan(
     spark: SparkSession,
-    manifest: list[str],
+    input_dir: str,
     kernel: Callable[[pd.DataFrame, int], pd.DataFrame],
     schema: T.StructType,
     n_parts: int,
     batch_rows: int,
     parts_filter: list[int] | None,
-    scan_parallelism: int | None,
 ) -> DataFrame:
     """manifest_scan of the clip columns through a label kernel.
 
@@ -337,36 +324,35 @@ def _kernel_scan(
             pdf = pdf[[zlib.crc32(c.encode("utf-8")) % n_parts in wanted for c in pdf["clip_id"]]]
         return kernel(pdf, n_parts)
 
-    return manifest_scan(spark, manifest, per_pdf, schema, batch_rows, scan_parallelism)
+    return manifest_scan(spark, input_dir, per_pdf, schema, batch_rows)
 
 
 def scan_labels(
     spark: SparkSession,
-    manifest: list[str],
+    input_dir: str,
     n_parts: int = 32,
     batch_rows: int = 256,
     parts_filter: list[int] | None = None,
-    scan_parallelism: int | None = None,
 ) -> DataFrame:
-    """Fully-fused pipeline: parquet manifest -> final labels in ONE
-    mapInPandas stage (scan + label_batch_pdf)."""
+    """Fully-fused pipeline: the parquet files of input_dir -> final labels
+    in ONE mapInPandas stage (scan + label_batch_pdf). Produces labels
+    identical to pipeline.label_clips over a JVM scan of the same directory
+    (tests/test_scan_decode.py)."""
     return _kernel_scan(
-        spark, manifest, label_batch_pdf, LABELS_SCHEMA, n_parts, batch_rows,
-        parts_filter, scan_parallelism,
+        spark, input_dir, label_batch_pdf, LABELS_SCHEMA, n_parts, batch_rows, parts_filter
     )
 
 
 def scan_rules_decode(
     spark: SparkSession,
-    manifest: list[str],
+    input_dir: str,
     n_parts: int = 32,
     batch_rows: int = 256,
     parts_filter: list[int] | None = None,
-    scan_parallelism: int | None = None,
 ) -> DataFrame:
-    """Parquet manifest -> post-decode rows (scan + label_head_pdf);
-    label_tail_pdf over its output gives scan_labels' labels."""
+    """The parquet files of input_dir -> post-decode rows (scan +
+    label_head_pdf); label_tail_pdf over its output gives scan_labels'
+    labels."""
     return _kernel_scan(
-        spark, manifest, label_head_pdf, POST_DECODE_SCHEMA, n_parts, batch_rows,
-        parts_filter, scan_parallelism,
+        spark, input_dir, label_head_pdf, POST_DECODE_SCHEMA, n_parts, batch_rows, parts_filter
     )

@@ -48,6 +48,7 @@ from ..core.specsig import (
     speed_variant16,
     tone_peaks16,
 )
+from .scan_decode import manifest_scan
 
 SS_SIG_DDL = "clip_id string, peaks array<int>, k int"
 
@@ -103,16 +104,8 @@ def tone_signature_scan(
     spark: SparkSession, input_dir: str, every: int = 1, aug_every: int = 0
 ) -> DataFrame:
     """tone_signature_clips over a parquet directory via the fused manifest
-    scan (audio bytes never enter the JVM; kernel parallelism)."""
-    from .audio_ops import _kernel_parallelism, _manifest_scan
-
-    return _manifest_scan(
-        spark,
-        input_dir,
-        lambda pdf: _sig_rows(pdf, every, aug_every),
-        SS_SIG_DDL,
-        scan_parallelism=_kernel_parallelism(spark, input_dir),
-    )
+    scan (audio bytes never enter the JVM)."""
+    return manifest_scan(spark, input_dir, lambda pdf: _sig_rows(pdf, every, aug_every), SS_SIG_DDL)
 
 
 def _hypothesis_expr(pa: str, pb: str) -> str:

@@ -40,14 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core import rules as R
+from .datagen import CLIPS_SCHEMA_DDL
 from .logging_config import configure, stage_timer
-from .operators.scan_decode import (
-    CLIP_COLUMNS,
-    LABELS_SCHEMA,
-    label_batch_pdf,
-    list_manifest,
-    scan_labels,
-)
+from .operators.scan_decode import CLIP_COLUMNS, LABELS_SCHEMA, label_batch_pdf, scan_labels
 from .tables import TableLayer
 
 LABEL_COLS = LABELS_SCHEMA.fieldNames()
@@ -142,20 +137,6 @@ def label_clips(clips: DataFrame, n_parts: int = 32) -> DataFrame:
     return clips.select(*CLIP_COLUMNS).mapInPandas(_label, schema=LABELS_SCHEMA)
 
 
-def label_clips_fused(
-    spark: SparkSession,
-    input_dir: str,
-    n_parts: int = 32,
-    parts_filter: list[int] | None = None,
-) -> DataFrame:
-    """label_clips with the parquet scan moved into the Python worker: the
-    same kernel over a file manifest read by pyarrow, so audio bytes never
-    cross a process boundary; see operators/scan_decode.py. Produces labels
-    identical to label_clips() over the same parquet directory
-    (tests/test_scan_decode.py)."""
-    return scan_labels(spark, list_manifest(input_dir), n_parts, parts_filter=parts_filter)
-
-
 def _set_arrow(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
@@ -246,7 +227,8 @@ def run_pipeline(
             tl.wipe("checkpoints")
 
     def _fp_source() -> DataFrame:
-        src = spark.read.parquet(input_dir) if input_dir is not None else clips
+        # the pinned schema spares Spark a schema-inference job per call
+        src = clips if input_dir is None else spark.read.schema(CLIPS_SCHEMA_DDL).parquet(input_dir)
         cols = list(META_FP_COLS) + (["bytes"] if fingerprint_payload else [])
         return src.select(*cols)
 
@@ -295,7 +277,7 @@ def run_pipeline(
         return {"run_id": run_id, "parts_processed": 0, "n_labeled": 0, "wall_sec": 0.0}
 
     if input_dir is not None:
-        labels = label_clips_fused(spark, input_dir, n_parts=n_parts, parts_filter=pending)
+        labels = scan_labels(spark, input_dir, n_parts, parts_filter=pending)
     else:
         part_col = F.pmod(F.crc32(F.col("clip_id").cast("binary")), F.lit(n_parts)).cast("int")
         subset = clips.filter(part_col.isin(pending))

@@ -965,14 +965,14 @@ def _clips_post_decode(spark: SparkSession, sf_dir: str):
     pass instead of each re-scanning and re-decoding the 4,000-clip table
     (the decode work dominated both queries). The persisted frame is tiny
     (~100-byte rows, bytes dropped at decode)."""
-    from .operators.scan_decode import list_manifest, scan_rules_decode
+    from .operators.scan_decode import scan_rules_decode
     from .pipeline import ARROW_BATCH
 
     path = _clips_cache_path(spark, sf_dir)
 
     def build():
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-        return scan_rules_decode(spark, list_manifest(path), n_parts=32).persist()
+        return scan_rules_decode(spark, path, n_parts=32).persist()
 
     return _session_cached(_POST_DECODE_CACHE, spark, path, build)
 
@@ -3483,8 +3483,7 @@ def q78_transcode_normalize(spark, sf_dir):
     ingest-side stage that gives every downstream operator uniform
     samples. Rows already in the target codec pass through BYTE-IDENTICAL
     (no lossy decode->re-encode round trip); undecodable rows pass through
-    flagged. Shuffle-free narrow map at 10^12 clips; byte-bound, so it
-    keeps the sandbox I/O cap like the plain decode scans.
+    flagged. Shuffle-free narrow map at 10^12 clips.
 
     Digest-exact value check like q50/q63: the fused manifest scan hashes
     each normalized payload worker-side; the DuckDB oracle reads the
@@ -7719,7 +7718,7 @@ def q156_xcorr_align(spark, sf_dir):
     deterministically estimate lag 0 and flag hit=false on both sides).
 
     Scale: fused manifest scan (bytes never enter the JVM), FFT-kernel
-    bound so it takes full session parallelism (the q36/q37/q38 split);
+    bound like q36/q37/q38;
     the general two-table pair form is operators/audio_ops.py
     xcorr_align_clips (mix_overlay_clips' bucketed-join shape, arbitrary
     ids — pytest-covered)."""
@@ -8035,7 +8034,7 @@ def q160_mfcc_features(spark, sf_dir):
     float64 feature array bit-for-bit against the committed single-process
     oracle (scripts/make_audio_mfcc_fixture.py — shared BLAS-free kernels,
     independent driver loop). Runs as a fused manifest scan: audio bytes
-    never enter the JVM; FFT+DCT kernel bound so full session parallelism.
+    never enter the JVM; FFT+DCT kernel bound.
     At 10^12 clips this is a shuffle-free narrow map
     (operators/audio_ops.py mfcc_digest_scan)."""
     from .operators.audio_ops import mfcc_digest_scan

@@ -154,6 +154,15 @@ def _pretouch_opts(driver_mem: str) -> str:
     return ""
 
 
+def _jvm_tmp_dir() -> str:
+    """The driver JVM's java.io.tmpdir: <checkout>/.data/tmp, or one under
+    the system temp directory when the package is imported from a zip
+    (spark-submit --py-files), whose path is no directory to write in."""
+    if os.path.isdir(_REPO_ROOT):
+        return os.path.join(_REPO_ROOT, ".data", "tmp")
+    return os.path.join(tempfile.gettempdir(), "datasmith_spark")
+
+
 def get_spark(
     app: str = "datasmith_spark",
     cores: int | str | None = None,
@@ -165,7 +174,7 @@ def get_spark(
     master = f"local[{cores}]"
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cores in ("*",) else max(int(cores), 8)
-    tmp_dir = os.path.join(_REPO_ROOT, ".data", "tmp")
+    tmp_dir = _jvm_tmp_dir()
     fs_classes = _local_fs_classes()
     b = (
         SparkSession.builder.master(master)

@@ -24,7 +24,7 @@ contract):
     verified sf0.01 vs sf0.1).
 
 Usage: python scripts/make_scale_replica.py [R] [out_dir]
-Defaults: R=10, out=/root/repo/.data/sfx{R}
+Defaults: R=10, out=<checkout>/.data/sfx{R}
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SIZES = {
     "customer": 15000,
@@ -111,7 +112,7 @@ def embeddings_replica(r: int, rng: np.random.Generator) -> pa.Table:
 
 def main() -> None:
     R = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else f"/root/repo/.data/sfx{R}"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".data", f"sfx{R}")
     os.makedirs(out, exist_ok=True)
     for name in ("region", "nation"):
         pq.write_table(_read(name), f"{out}/{name}.parquet")

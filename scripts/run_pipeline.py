@@ -2,7 +2,7 @@
 
 Usage:
   spark-submit --py-files datasmith_spark.zip scripts/run_pipeline.py \
-      --input synth:100000 --out /root/repo/.data/out/run1 --parts 64
+      --input synth:100000 --out .data/out/run1 --parts 64
   python scripts/run_pipeline.py --input /path/to/clips_parquet --out ...
 
 --input accepts either a parquet path of clips

@@ -21,7 +21,8 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from datasmith_spark.pipeline import ARROW_BATCH, label_clips_fused
+    from datasmith_spark.operators.scan_decode import scan_labels
+    from datasmith_spark.pipeline import ARROW_BATCH
     from datasmith_spark.session import get_spark
 
     # small pre-touched heap: the fused pipeline keeps label rows tiny, and a
@@ -37,7 +38,7 @@ def main() -> None:
     agg = [F.count("*").alias("n"), F.sum(F.col("keep").cast("long")).alias("n_keep")]
 
     def one_pass():
-        return label_clips_fused(spark, path, n_parts=64).agg(*agg).collect()[0]
+        return scan_labels(spark, path, n_parts=64).agg(*agg).collect()[0]
 
     for _ in range(warmup):
         one_pass()

@@ -53,15 +53,15 @@ def test_q12_left_anti_broadcast(spark):
 def test_pipeline_chain_is_shuffle_free(spark, clips_path):
     """The whole filter chain must plan as ONE narrow chain: no Exchange
     between scan and labels (the property that holds at 10^12 rows)."""
-    from datasmith_spark.pipeline import label_clips, label_clips_fused
+    from datasmith_spark.operators.scan_decode import scan_labels
+    from datasmith_spark.pipeline import label_clips
 
     plan = _plan(label_clips(spark.read.parquet(clips_path), n_parts=16))
     assert "Exchange" not in plan, plan
-    plan_fused = _plan(label_clips_fused(spark, clips_path, n_parts=16))
-    # fused path: one repartition of the tiny path manifest is the only
-    # exchange; no exchange of clip rows (formatted mode prints each node
-    # twice: once in the tree, once in the details)
-    assert plan_fused.count("+- Exchange") <= 1, plan_fused
+    # fused path: the scan tasks come from a range of file indices, so not
+    # even the file list is shuffled
+    plan_fused = _plan(scan_labels(spark, clips_path, n_parts=16))
+    assert "Exchange" not in plan_fused, plan_fused
 
 
 def test_pair_joins_have_no_nested_loops(spark):

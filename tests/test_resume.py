@@ -347,3 +347,19 @@ def test_unfingerprinted_sentinel_survives_toggle(spark, clips_path, tmp_path):
     latest = tl.latest_per_key(spark, "checkpoints", ["part_id"], "ts")
     changed = {r.part_id for r in latest.filter(F.col("run_id") == r3["run_id"]).collect()}
     assert changed == {target_part}
+
+
+@pytest.mark.parametrize("payload", [False, True])
+def test_pinned_schema_fingerprints_match_inferred(spark, clips_path, payload):
+    """run_pipeline reads input_dir with the clips schema pinned (no
+    schema-inference job); the per-part fingerprints must equal those over
+    the schema Spark infers from the files."""
+    from datasmith_spark.datagen import CLIPS_SCHEMA_DDL
+    from datasmith_spark.pipeline import META_FP_COLS, part_fingerprints
+
+    cols = list(META_FP_COLS) + (["bytes"] if payload else [])
+    pinned = spark.read.schema(CLIPS_SCHEMA_DDL).parquet(clips_path).select(*cols)
+    inferred = spark.read.parquet(clips_path).select(*cols)
+    got = part_fingerprints(pinned, N_PARTS, payload=payload)
+    assert len(got) == N_PARTS
+    assert got == part_fingerprints(inferred, N_PARTS, payload=payload)

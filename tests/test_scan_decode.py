@@ -10,8 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from datasmith_spark.operators.scan_decode import list_manifest, scan_rules_decode
-from datasmith_spark.pipeline import label_clips, label_clips_fused
+from datasmith_spark.operators.scan_decode import list_manifest, scan_labels, scan_rules_decode
+from datasmith_spark.pipeline import label_clips
 
 N_PARTS = 16
 
@@ -21,7 +21,7 @@ def _sorted_pdf(df):
 
 
 def test_fused_labels_match_batch(spark, clips_path):
-    got = _sorted_pdf(label_clips_fused(spark, clips_path, n_parts=N_PARTS))
+    got = _sorted_pdf(scan_labels(spark, clips_path, n_parts=N_PARTS))
     want = _sorted_pdf(label_clips(spark.read.parquet(clips_path), n_parts=N_PARTS))
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want)
@@ -69,7 +69,7 @@ def test_fused_labels_null_ints(spark, tmp_path):
     os.makedirs(d)
     pq.write_table(pa.Table.from_pylist(base, schema=schema), f"{d}/part-0.parquet")
 
-    got = _sorted_pdf(label_clips_fused(spark, d, n_parts=N_PARTS))
+    got = _sorted_pdf(scan_labels(spark, d, n_parts=N_PARTS))
     want = _sorted_pdf(label_clips(spark.read.parquet(d), n_parts=N_PARTS))
     assert len(got) == 5
     for c in ("clip_id", "keep", "drop_stage", "lang", "scrubbed_transcript"):
@@ -110,9 +110,7 @@ def test_run_pipeline_fused_resume(spark, clips_path, tmp_path):
 def test_parts_filter_prunes_scan(spark, clips_path, pending, batch_rows):
     """Resume pruning: only requested part_ids come back from the fused scan,
     also when whole batches hold no pending row."""
-    df = scan_rules_decode(
-        spark, list_manifest(clips_path), N_PARTS, batch_rows=batch_rows, parts_filter=pending
-    )
+    df = scan_rules_decode(spark, clips_path, N_PARTS, batch_rows=batch_rows, parts_filter=pending)
     parts = {r.part_id for r in df.select("part_id").distinct().collect()}
     assert parts <= set(pending)
     n_all = (
@@ -121,6 +119,22 @@ def test_parts_filter_prunes_scan(spark, clips_path, pending, batch_rows):
         .count()
     )
     assert df.count() == n_all
+
+
+def test_scan_runs_one_task_per_core_up_to_one_per_file(spark, clips_path, tmp_path):
+    """The fused scan runs min(files, defaultParallelism) tasks, also when
+    the directory holds fewer files than the session has cores."""
+    import shutil
+
+    files = list_manifest(clips_path)
+    cores = spark.sparkContext.defaultParallelism
+    df = scan_labels(spark, clips_path, n_parts=N_PARTS)
+    assert df.rdd.getNumPartitions() == min(len(files), cores)
+
+    one = tmp_path / "one_file"
+    one.mkdir()
+    shutil.copy(files[0], one)
+    assert scan_labels(spark, str(one), n_parts=N_PARTS).rdd.getNumPartitions() == 1
 
 
 def test_write_clips_parquet_preserves_unrelated(tmp_path):

@@ -10,7 +10,11 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 import stat
+import subprocess
+import sys
+import tempfile
 import threading
 import time
 
@@ -150,3 +154,19 @@ def test_host_memory_is_the_lower_of_physical_and_cgroup(monkeypatch, tmp_path):
     assert session._host_memory_bytes() == phys
     monkeypatch.setattr(session, "_CGROUP_LIMITS", (str(unset), str(limited)))
     assert session._host_memory_bytes() == min(phys, 1 << 30)
+
+
+def test_jvm_tmp_dir_in_checkout_or_system_temp(tmp_path):
+    """<checkout>/.data/tmp; imported from a --py-files zip, whose path is a
+    file, a directory under the system temp directory."""
+    assert session._jvm_tmp_dir() == os.path.join(session._REPO_ROOT, ".data", "tmp")
+    zipped = shutil.make_archive(
+        str(tmp_path / "datasmith_spark"), "zip",
+        root_dir=session._REPO_ROOT, base_dir="datasmith_spark",
+    )
+    code = "from datasmith_spark import session; print(session._jvm_tmp_dir())"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=dict(os.environ, PYTHONPATH=zipped),
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert out == os.path.join(tempfile.gettempdir(), "datasmith_spark")
