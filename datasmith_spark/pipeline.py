@@ -24,9 +24,10 @@ Scale design (10^12 clips / 1000 executors):
   * side tables: one grouping-sets aggregate over the labels, sets
     (part_id) and (lang, codec), reads them once; its at most parts +
     langs x codecs rows are collected, and lineage, metrics and the
-    checkpoint done-marker are written back from them through Arrow, one
-    file each. Spark's partial aggregate combines map-side, so the
-    Zipf-hot (en, pcm16) key needs no salt.
+    checkpoint done-marker are appended from the driver as one pyarrow
+    file each (TableLayer.append), with no Spark write job. Spark's
+    partial aggregate combines map-side, so the Zipf-hot (en, pcm16) key
+    needs no salt.
 """
 
 from __future__ import annotations
@@ -34,8 +35,10 @@ from __future__ import annotations
 import time
 import uuid
 from collections.abc import Iterator
+from datetime import datetime, timezone
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,20 +65,27 @@ _FP_EMPTY = "0:0"  # fingerprint of a part with no input rows
 # resume by recomputing every part)
 _FP_ANY = "<unfingerprinted>"
 
+
+def _log_schema(*fields: tuple[str, pa.DataType]) -> pa.Schema:
+    """Side-table schema: the row's columns plus the append time `ts`."""
+    return pa.schema([*fields, ("ts", pa.timestamp("us", tz="UTC"))])
+
+
 # checkpoint row schema; n_parts stamps the partition LAYOUT the run wrote,
 # so a later run with a different n_parts is detected and recomputes clean
-_CP_SCHEMA = (
-    "part_id int, status string, run_id string, had_rows int, "
-    "fingerprint string, n_parts int"
+_CP_SCHEMA = _log_schema(
+    ("part_id", pa.int32()), ("status", pa.string()), ("run_id", pa.string()),
+    ("had_rows", pa.int32()), ("fingerprint", pa.string()), ("n_parts", pa.int32()),
 )
-_LINEAGE_SCHEMA = (
-    "part_id int, n_in bigint, n_keep bigint, "
-    + "".join(f"drop_{s} bigint, " for s in R.STAGES)
-    + "run_id string"
+_LINEAGE_SCHEMA = _log_schema(
+    ("part_id", pa.int32()), ("n_in", pa.int64()), ("n_keep", pa.int64()),
+    *[(f"drop_{s}", pa.int64()) for s in R.STAGES],
+    ("run_id", pa.string()),
 )
-_METRICS_SCHEMA = (
-    "lang string, codec string, n bigint, n_keep bigint, pii_total bigint, "
-    "tox_total bigint, keep_rate double, run_id string"
+_METRICS_SCHEMA = _log_schema(
+    ("lang", pa.string()), ("codec", pa.string()), ("n", pa.int64()), ("n_keep", pa.int64()),
+    ("pii_total", pa.int64()), ("tox_total", pa.int64()), ("keep_rate", pa.float64()),
+    ("run_id", pa.string()),
 )
 
 
@@ -142,16 +152,25 @@ def _set_arrow(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
 
 
-def _append_rows(
-    spark: SparkSession, tl: TableLayer, name: str, ddl: str, rows: list[tuple]
-) -> None:
-    """Append collected rows (columns as in `ddl`, plus `ts`) as ONE file,
-    so a done-marker commits with one rename. Built from pandas, i.e. through
-    Arrow, not a Python-worker job; object dtype keeps ints exact."""
-    cols = [f.split()[0] for f in ddl.split(",")]
-    pdf = pd.DataFrame(rows, columns=cols, dtype=object)
-    df = spark.createDataFrame(pdf, ddl).withColumn("ts", F.current_timestamp())
-    tl.append(df.coalesce(1), name)
+def _append_rows(tl: TableLayer, name: str, schema: pa.Schema, rows: list[tuple]) -> None:
+    """Append rows the driver holds (columns as in `schema`, less `ts`) as
+    ONE file, so a done-marker commits with one rename."""
+    ts = datetime.now(timezone.utc)
+    tl.append(pa.Table.from_pylist(
+        [dict(zip(schema.names, (*r, ts))) for r in rows], schema=schema
+    ), name)
+
+
+def _finish(log, run_id: str, t0: float, parts: int, n_labeled: int) -> dict:
+    """Log the run's `done` event and build run_pipeline's result."""
+    wall = time.time() - t0
+    log.info(
+        "run %s done: %d parts, %d rows labeled in %.1fs",
+        run_id, parts, n_labeled, wall,
+        extra={"run_id": run_id, "event": "done", "parts": parts,
+               "rows": n_labeled, "wall_sec": round(wall, 3)},
+    )
+    return {"run_id": run_id, "parts_processed": parts, "n_labeled": n_labeled, "wall_sec": wall}
 
 
 def run_pipeline(
@@ -258,7 +277,7 @@ def run_pipeline(
                 }
                 adopted = [p for p, f in stored.items() if f == _FP_ANY and p in fps]
                 if adopted:
-                    _append_rows(spark, tl, "checkpoints", _CP_SCHEMA, [
+                    _append_rows(tl, "checkpoints", _CP_SCHEMA, [
                         (p, "done", run_id, 1, fps[p], n_parts) for p in adopted
                     ])
             # checkpoints written before fingerprints existed: treat all as
@@ -274,7 +293,7 @@ def run_pipeline(
         extra={"run_id": run_id, "parts": len(pending), "out_dir": out_dir, "event": "resume"},
     )
     if not pending:
-        return {"run_id": run_id, "parts_processed": 0, "n_labeled": 0, "wall_sec": 0.0}
+        return _finish(log, run_id, t0, 0, 0)
 
     if input_dir is not None:
         labels = scan_labels(spark, input_dir, n_parts, parts_filter=pending)
@@ -325,11 +344,11 @@ def run_pipeline(
             .collect()
         )
         lineage = [r for r in rows if not r.by_lang]
-        _append_rows(spark, tl, "lineage", _LINEAGE_SCHEMA, [
+        _append_rows(tl, "lineage", _LINEAGE_SCHEMA, [
             (r.part_id, r.n, r.n_keep, *[r[f"drop_{s}"] for s in R.STAGES], run_id)
             for r in lineage
         ])
-        _append_rows(spark, tl, "metrics", _METRICS_SCHEMA, [
+        _append_rows(tl, "metrics", _METRICS_SCHEMA, [
             (r.lang, r.codec, r.n, r.n_keep, r.pii_total, r.tox_total, r.keep_rate, run_id)
             for r in rows if r.by_lang
         ])
@@ -338,23 +357,11 @@ def run_pipeline(
     # they are recomputed and idempotently overwritten on resume)
     n_labeled = sum(r.n for r in lineage)
     counted = {r.part_id for r in lineage}
-    _append_rows(spark, tl, "checkpoints", _CP_SCHEMA, [
+    _append_rows(tl, "checkpoints", _CP_SCHEMA, [
         (p, "done", run_id, int(p in counted),
          fps.get(p, _FP_EMPTY) if fingerprint else _FP_ANY, n_parts)
         for p in pending
     ])
 
-    wall = time.time() - t0
-    log.info(
-        "run %s done: %d parts, %d rows labeled in %.1fs",
-        run_id, len(pending), n_labeled, wall,
-        extra={"run_id": run_id, "event": "done", "parts": len(pending),
-               "rows": n_labeled, "wall_sec": round(wall, 3)},
-    )
-    return {
-        "run_id": run_id,
-        "parts_processed": len(pending),
-        "n_labeled": n_labeled,
-        "wall_sec": wall,
-    }
+    return _finish(log, run_id, t0, len(pending), n_labeled)
 

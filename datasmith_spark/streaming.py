@@ -10,10 +10,10 @@ the streaming analogue of the batch pipeline (each micro-batch's rows
 cross into Python once), with exactly-once sink semantics provided by the
 streaming checkpoint + idempotent per-batch writes: every output table is
 partitioned by batch_id, so a batch replayed after a crash (append landed,
-checkpoint commit didn't) rewrites exactly its own partitions instead of
-duplicating rows. Each micro-batch runs ONE Spark job (the labels write,
-dynamic partition overwrite); its metrics are rolled up in the driver from
-the committed labels partition and written under a deterministic name.
+checkpoint commit didn't) replaces exactly its own partitions instead of
+duplicating rows. Each micro-batch runs ONE Spark job, a `toArrow()` that
+runs the label kernel; the driver commits the labels and their metrics
+rollup as one pyarrow-written file per partition, with no Spark write job.
 
 Scale design: at 10^12-clip scale this is the continuous-ingest front door —
 new clip files land in the source directory (or an Iceberg table with
@@ -36,7 +36,6 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -276,25 +275,19 @@ def stream_clips_contract(
     return clips_contract(stream_clips(spark, input_dir, max_files_per_trigger))
 
 
-def _write_batch_metrics(tl: TableLayer, batch_id: int) -> None:
-    """Roll the committed labels partition `batch_id=N` up per (lang, codec)
-    in the driver and write it as the metrics partition's one file.
+def _write_batch_metrics(tl: TableLayer, batch_id: int, labels: pa.Table) -> None:
+    """Roll a micro-batch's labels up per (lang, codec) in the driver and
+    commit them as the metrics partition `batch_id=N`, one file.
 
-    Reads 5 narrow columns with pyarrow and keeps Spark's aggregate
-    semantics: `lang` keyed as in run_pipeline (rows dropped before langid
-    count under "?"), null keys form their own group, and a sum over only
-    nulls is null. The file has a deterministic name and lands by tmp file +
-    rename, so a replayed batch overwrites it."""
-    labels = os.path.join(tl.path("labels"), f"batch_id={batch_id}")
-    if not os.path.isdir(labels):  # an empty batch writes no partition
-        return
-    t = pq.read_table(labels, columns=["lang", "codec", "keep", "pii_count", "tox_count"])
+    Keeps Spark's aggregate semantics: `lang` keyed as in run_pipeline
+    (rows dropped before langid count under "?"), null keys form their own
+    group, and a sum over only nulls is null."""
     t = pa.table({
-        "lang": pc.coalesce(t["lang"], pa.scalar("?")),
-        "codec": t["codec"],
-        "keep": t["keep"].cast(pa.int64()),
-        "pii_count": t["pii_count"],
-        "tox_count": t["tox_count"],
+        "lang": pc.coalesce(labels["lang"], pa.scalar("?")),
+        "codec": labels["codec"],
+        "keep": labels["keep"].cast(pa.int64()),
+        "pii_count": labels["pii_count"],
+        "tox_count": labels["tox_count"],
     })
     g = t.group_by(["lang", "codec"]).aggregate([
         ([], "count_all"), ("keep", "sum"), ("pii_count", "sum"), ("tox_count", "sum"),
@@ -311,30 +304,28 @@ def _write_batch_metrics(tl: TableLayer, batch_id: int) -> None:
         "run_id": pa.array([f"stream-{batch_id}"] * len(g), pa.string()),
         "ts": pa.array([datetime.now(timezone.utc)] * len(g), pa.timestamp("us", tz="UTC")),
     })
-    d = os.path.join(tl.path("metrics"), f"batch_id={batch_id}")
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, ".metrics.parquet.tmp")  # hidden from readers
-    pq.write_table(out, tmp)
-    os.replace(tmp, os.path.join(d, "metrics.parquet"))
+    tl.replace_partition(out, "metrics", "batch_id", batch_id)
 
 
 def make_batch_sink(tl: TableLayer):
     """foreachBatch sink with idempotent-per-batch semantics, one Spark job
     per micro-batch.
 
-    Labels are written partitioned by batch_id (part_id stays a data
-    column) with dynamic partition overwrite: if the job dies after the
-    write but before the streaming checkpoint commits, the replayed batch
-    (same batch_id, same offsets) overwrites exactly the partition it wrote
-    before. The batch's metrics are then rolled up in the driver from that
-    committed partition (_write_batch_metrics) and written under a
-    deterministic name that a replay overwrites — no duplicate label or
-    metrics rows, and no second Spark job. Factored out so tests can replay
-    a batch directly (tests/test_streaming.py::test_batch_replay_idempotent).
+    The one job is `toArrow()`: it runs the label kernel and brings the
+    batch's labels to the driver. They are committed as the partition
+    `labels/batch_id=N` (part_id stays a data column), one parquet file
+    swapped in whole (TableLayer.replace_partition), and rolled up per
+    (lang, codec) into `metrics/batch_id=N` the same way
+    (_write_batch_metrics). If the job dies after the write but before the
+    streaming checkpoint commits, the replayed batch (same batch_id, same
+    offsets) replaces exactly the partitions it wrote before — no duplicate
+    label or metrics rows. An empty batch writes nothing. Factored out so
+    tests can replay a batch directly
+    (tests/test_streaming.py::test_batch_replay_idempotent).
 
     Path-mode only: the replay-idempotence contract here is built on
-    path-level dynamic partition overwrite; catalog-mode streaming would
-    ride Iceberg's own exactly-once commit protocol instead (off-sandbox).
+    path-level partition replacement; catalog-mode streaming would ride
+    Iceberg's own exactly-once commit protocol instead (off-sandbox).
     """
     if tl.catalog is not None:
         raise NotImplementedError(
@@ -342,14 +333,11 @@ def make_batch_sink(tl: TableLayer):
         )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(tl.path("labels"))
-        )
-        _write_batch_metrics(tl, int(batch_id))
+        labels = batch_df.toArrow()
+        if labels.num_rows == 0:
+            return
+        tl.replace_partition(labels, "labels", "batch_id", int(batch_id))
+        _write_batch_metrics(tl, int(batch_id), labels)
 
     return _sink
 

@@ -25,17 +25,23 @@ Two modes, selected by the `catalog` constructor arg:
     path-mode (streaming.make_batch_sink guards this explicitly).
 
 Parquet (path) mode semantics:
-  * labels: directory-partitioned by part_id; per-partition idempotent
-    rewrite (the `replaceWhere` analogue) COMMITTED atomically — writes
-    land in a hidden staging dir and partitions are swapped into place
-    with renameat2(RENAME_EXCHANGE), so readers never observe a torn
+  * labels (batch): directory-partitioned by part_id; per-partition
+    idempotent rewrite (the `replaceWhere` analogue) COMMITTED atomically —
+    Spark writes into a hidden staging dir and partitions are swapped into
+    place with renameat2(RENAME_EXCHANGE), so readers never observe a torn
     partition (the transactional behavior an Iceberg catalog would give,
     emulated on the filesystem).
+  * rows the driver already holds (a streaming micro-batch's labels and
+    metrics, the batch side tables) skip Spark's write job: each write is
+    ONE parquet file written with pyarrow and landed by rename.
+    `replace_partition` stages the file in a hidden dir and swaps it in as
+    the whole partition (a replay replaces every file the partition held);
+    `append` writes a hidden tmp file and renames it into the table.
   * checkpoints/lineage/metrics: append-only logs; readers take the latest
     row per key (last-write-wins upsert, mirroring the reference's
     INSERT OR REPLACE cache at /root/reference/src/datasmith/utils.py:94-101).
-    The pipeline's done-marker append is a single coalesced file, so the
-    commit itself is one atomic rename.
+    Every append is one file, so the pipeline's done-marker commits with
+    one atomic rename.
 """
 
 from __future__ import annotations
@@ -44,6 +50,8 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -233,6 +241,25 @@ class TableLayer:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
+    def replace_partition(self, table: pa.Table, name: str, partition_col: str, value) -> None:
+        """Path mode: commit `table` as the whole partition
+        `<name>/<partition_col>=<value>`, one parquet file without a Spark
+        job. The file is written in a hidden staging dir that is swapped
+        into place (_atomic_replace_dir), so a rewrite replaces every file
+        the partition held, whichever writer wrote them. `table` carries no
+        `partition_col` column; the directory name holds it."""
+        if self.catalog is not None:
+            raise NotImplementedError("replace_partition is path-mode only")
+        self._sweep_stale_staging(name)
+        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
+        try:
+            os.makedirs(staging)
+            pq.write_table(table, os.path.join(staging, "part-00000.parquet"), compression="zstd")
+            os.makedirs(self.path(name), exist_ok=True)
+            _atomic_replace_dir(staging, os.path.join(self.path(name), f"{partition_col}={value}"))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
     def _sweep_stale_staging(self, name: str) -> None:
         for d in os.listdir(self.base) if os.path.isdir(self.base) else []:
             if d.startswith(f".staging-{name}-"):
@@ -295,11 +322,17 @@ class TableLayer:
         df = self.read(spark, name, schema=schema)
         return df.drop("batch_id") if "batch_id" in df.columns else df
 
-    def append(self, df: DataFrame, name: str) -> None:
+    def append(self, table: pa.Table, name: str) -> None:
+        """Append rows the driver holds. Path mode: one parquet file, landed
+        by rename. Catalog mode: a catalog append of the same rows."""
         if self.catalog is not None:
-            self._catalog_write(df, name, overwrite=False)
+            self._catalog_write(self._active_spark().createDataFrame(table), name, overwrite=False)
             return
-        df.write.mode("append").parquet(self.path(name))
+        os.makedirs(self.path(name), exist_ok=True)
+        file = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path(name), f".{file}.tmp")  # hidden from readers
+        pq.write_table(table, tmp, compression="zstd")
+        os.replace(tmp, os.path.join(self.path(name), file))
 
     def latest_per_key(self, spark: SparkSession, name: str, keys: list[str], order_col: str = "ts") -> DataFrame:
         """Last-write-wins view over an append-only log."""

@@ -104,3 +104,18 @@ def assert_frames_exact(lab: pd.DataFrame, ora: pd.DataFrame) -> None:
         else:
             ok = a.fillna("<null>").astype(str) == b.fillna("<null>").astype(str)
             assert ok.all(), f"{c}: {int((~ok).sum())} mismatches"
+
+
+def spark_jobs(spark, fn):
+    """(fn(), the number of Spark jobs it ran), counted with the status
+    tracker over a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -13,6 +13,7 @@ too, so a catalog that supports v2 takes it with zero code change.
 import uuid
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,10 +98,11 @@ def test_catalog_deletion_semantics(spark, clips_path, ns, tmp_path):
 def test_catalog_append_and_latest_per_key(spark, ns):
     """Direct TableLayer API in catalog mode: append-only log + LWW view."""
     tl = TableLayer("/unused", catalog=ns)
-    df1 = spark.createDataFrame([(1, "a", 1.0), (2, "b", 1.0)], "k int, v string, ts double")
-    df2 = spark.createDataFrame([(2, "b2", 2.0)], "k int, v string, ts double")
-    tl.append(df1, "log")
-    tl.append(df2, "log")
+    schema = pa.schema([("k", pa.int32()), ("v", pa.string()), ("ts", pa.float64())])
+    t1 = pa.Table.from_pylist([{"k": 1, "v": "a", "ts": 1.0}, {"k": 2, "v": "b", "ts": 1.0}], schema)
+    t2 = pa.Table.from_pylist([{"k": 2, "v": "b2", "ts": 2.0}], schema)
+    tl.append(t1, "log")
+    tl.append(t2, "log")
     got = {r.k: r.v for r in tl.latest_per_key(spark, "log", ["k"], "ts").collect()}
     assert got == {1: "a", 2: "b2"}
     tl.wipe("log")

@@ -14,7 +14,7 @@ from datasmith_spark.core.rules import STAGES
 from datasmith_spark.pipeline import run_pipeline
 from datasmith_spark.tables import TableLayer
 
-from .conftest import N_PARTS, cache_dir
+from .conftest import N_PARTS, cache_dir, spark_jobs
 
 
 def _labels_pdf(spark, out) -> pd.DataFrame:
@@ -363,3 +363,90 @@ def test_pinned_schema_fingerprints_match_inferred(spark, clips_path, payload):
     got = part_fingerprints(pinned, N_PARTS, payload=payload)
     assert len(got) == N_PARTS
     assert got == part_fingerprints(inferred, N_PARTS, payload=payload)
+
+
+def test_fresh_run_runs_five_spark_jobs(spark, clips_path, tmp_path):
+    """A fresh path-mode run: the fingerprint aggregate (2 jobs), the labels
+    write (1) and the side-table aggregate (2). Lineage, metrics and the
+    checkpoint done-marker are appended from the driver and run none."""
+    out = str(tmp_path / "out")
+    r, jobs = spark_jobs(
+        spark, lambda: run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+    )
+    assert r["parts_processed"] == N_PARTS
+    assert jobs == 5
+
+
+def test_finished_out_dir_reports_wall_and_done(spark, clips_path, tmp_path):
+    """A call with nothing pending still measured its layout guard,
+    fingerprint pre-scan and checkpoint read: it reports that wall and logs
+    the run's `done` event with 0 parts."""
+    import logging
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+
+    records: list[logging.LogRecord] = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = logging.getLogger("datasmith_spark")
+    logger.addHandler(handler)
+    try:
+        r = run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+    finally:
+        logger.removeHandler(handler)
+    assert r["parts_processed"] == 0
+    assert r["wall_sec"] > 0
+    done = [x for x in records if getattr(x, "event", None) == "done" and not hasattr(x, "stage")]
+    assert [(x.run_id, x.parts, x.rows) for x in done] == [(r["run_id"], 0, 0)]
+    assert done[0].wall_sec == round(r["wall_sec"], 3)
+
+
+def test_resume_over_spark_written_side_tables(spark, clips_path, tmp_path):
+    """Side tables whose earlier rows Spark's writer appended (as earlier
+    versions of run_pipeline did) and whose later rows are pyarrow files:
+    resume skips the done parts, latest_per_key picks the newest `ts`
+    across both writers, and every file reads back with the declared types."""
+    import glob
+    import os
+
+    out = str(tmp_path / "out")
+    r1 = run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path, fail_after_parts=5)
+    assert r1["parts_processed"] == 5
+    names = ("checkpoints", "lineage", "metrics")
+    for name in names:  # rewrite each log with Spark's writer, ts stamped by Spark
+        path, tmp = f"{out}/{name}", f"{out}/.old-{name}"
+        (
+            spark.read.parquet(path).drop("ts").withColumn("ts", F.current_timestamp())
+            .coalesce(1).write.mode("append").parquet(tmp)
+        )
+        shutil.rmtree(path)
+        os.rename(tmp, path)
+
+    r2 = run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+    assert r2["parts_processed"] == N_PARTS - 5
+    r3 = run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path, force=True)
+    assert r3["parts_processed"] == N_PARTS
+
+    tl = TableLayer(out)
+    latest = tl.latest_per_key(spark, "checkpoints", ["part_id"], "ts").collect()
+    assert sorted(r.part_id for r in latest) == list(range(N_PARTS))
+    assert {r.run_id for r in latest} == {r3["run_id"]}
+    cp = spark.read.parquet(f"{out}/checkpoints")
+    assert cp.count() == 5 + (N_PARTS - 5) + N_PARTS
+    assert cp.filter(F.col("ts").isNull()).count() == 0
+
+    drops = "".join(f"drop_{s}:bigint," for s in STAGES)
+    want = {
+        "checkpoints": "part_id:int,status:string,run_id:string,had_rows:int,"
+                       "fingerprint:string,n_parts:int,ts:timestamp",
+        "lineage": f"part_id:int,n_in:bigint,n_keep:bigint,{drops}run_id:string,ts:timestamp",
+        "metrics": "lang:string,codec:string,n:bigint,n_keep:bigint,pii_total:bigint,"
+                   "tox_total:bigint,keep_rate:double,run_id:string,ts:timestamp",
+    }
+    for name in names:
+        files = sorted(glob.glob(f"{out}/{name}/*.parquet"))
+        assert len(files) == 3  # the Spark-written file, then one per pyarrow append
+        for f in files:
+            assert spark.read.parquet(f).schema.simpleString() == f"struct<{want[name]}>", f
+        assert spark.read.parquet(f"{out}/{name}").schema.simpleString() == f"struct<{want[name]}>"

@@ -7,6 +7,7 @@ single-process oracle labels exactly.
 
 from __future__ import annotations
 
+import os
 import pathlib
 import shutil
 
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 
 from datasmith_spark.pipeline import LABEL_COLS, label_clips
 from datasmith_spark.streaming import run_streaming_pipeline
-from tests.conftest import assert_frames_exact, cache_dir
+from tests.conftest import assert_frames_exact, cache_dir, spark_jobs
 
 N_PARTS = 16
 
@@ -90,7 +91,7 @@ def test_stream_restart_is_noop(spark, stream_dirs):
 
 def test_batch_replay_idempotent(spark, clips_path, tmp_path):
     """Crash-between-write-and-commit: replaying the SAME batch_id must not
-    duplicate label or metrics rows (dynamic overwrite of batch partitions)."""
+    duplicate label or metrics rows (each batch partition is replaced whole)."""
     from datasmith_spark.streaming import make_batch_sink
     from datasmith_spark.tables import TableLayer
 
@@ -106,6 +107,63 @@ def test_batch_replay_idempotent(spark, clips_path, tmp_path):
     # a NEW batch appends (its own partitions), not overwrites
     sink(labels, 1)
     assert spark.read.parquet(tl.path("labels")).count() == 2 * n_labels
+
+
+def _visible_files(d) -> list[str]:
+    return sorted(f for f in os.listdir(d) if not f.startswith(("_", ".")))
+
+
+def test_replay_replaces_spark_written_partition(spark, tmp_path):
+    """A replayed batch over a partition the earlier Spark writer left as
+    several part files leaves exactly one labels file with exactly the
+    batch's rows, and one metrics file; an empty batch writes nothing."""
+    from datasmith_spark.streaming import make_batch_sink
+    from datasmith_spark.tables import TableLayer
+
+    rows = [(f"c{i}", i % 4, "pcm16", i % 3 > 0, None, [], "en", 0.9, 50.0, i % 2, 0, f"t{i}")
+            for i in range(40)]
+    ddl = ("clip_id string, part_id int, codec string, keep boolean, drop_stage string, "
+           "drop_reasons array<string>, lang string, lang_prob double, ppl double, "
+           "pii_count int, tox_count int, scrubbed_transcript string")
+    df = spark.createDataFrame(rows, ddl)
+    tl = TableLayer(str(tmp_path / "out"))
+    part = tmp_path / "out" / "labels" / "batch_id=7"
+    old = spark.createDataFrame([(f"old{i}",) + r[1:] for i, r in enumerate(rows)], ddl)
+    old.withColumn("batch_id", F.lit(7)).repartition(3).write.partitionBy("batch_id").parquet(
+        tl.path("labels")
+    )
+    assert len(_visible_files(part)) == 3
+
+    sink = make_batch_sink(tl)
+    sink(df, 7)
+    assert len(_visible_files(part)) == 1
+    got = spark.read.parquet(str(part)).select(*df.columns)
+    assert sorted(got.collect()) == sorted(df.collect())
+    assert len(_visible_files(tmp_path / "out" / "metrics" / "batch_id=7")) == 1
+
+    sink(df.filter(F.lit(False)), 8)
+    assert not (tmp_path / "out" / "labels" / "batch_id=8").exists()
+    assert not (tmp_path / "out" / "metrics" / "batch_id=8").exists()
+
+
+def test_batch_sink_runs_one_spark_job(spark, clips_path, tmp_path):
+    """A micro-batch runs one Spark job (the label kernel's toArrow) and no
+    Spark write: no staging or _temporary directory is left behind."""
+    from datasmith_spark.streaming import make_batch_sink
+    from datasmith_spark.tables import TableLayer
+
+    clips = spark.read.parquet(clips_path)
+    labels = label_clips(
+        clips.filter(F.pmod(F.crc32(F.col("clip_id").cast("binary")), F.lit(8)) == 0),
+        n_parts=N_PARTS,
+    )
+    out = tmp_path / "out"
+    _, jobs = spark_jobs(spark, lambda: make_batch_sink(TableLayer(str(out)))(labels, 0))
+    assert jobs == 1
+    assert len(_visible_files(out / "labels" / "batch_id=0")) == 1
+    left = [n for _, dirs, _ in os.walk(out) for n in dirs
+            if n.startswith((".spark-staging", "_temporary", ".staging-"))]
+    assert not left, left
 
 
 def test_windowed_metrics_with_watermark(spark, tmp_path):
