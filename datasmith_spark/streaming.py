@@ -18,10 +18,15 @@ rollup as one pyarrow-written file per partition, with no Spark write job.
 Scale design: at 10^12-clip scale this is the continuous-ingest front door —
 new clip files land in the source directory (or an Iceberg table with
 incremental scan), `maxFilesPerTrigger` bounds micro-batch size so decode
-memory stays flat, and the labels sink is directory-partitioned by
-batch_id alone — batch_id is what makes batch replay idempotent; part_id
-stays a data column (splitting a micro-batch of a few dozen clips over up
-to n_parts directories costs a file per part and lowers burst throughput).
+memory stays flat, and so does the driver's: the sink collects each
+micro-batch's label rows (no audio; ~170 bytes a clip in Arrow, 0.52 MB for
+3,200 clips) before it writes them, so the largest micro-batch is bounded
+by driver memory. Without `maxFilesPerTrigger` an availableNow drain is one
+micro-batch holding every pending clip's labels on the driver. The labels
+sink is directory-partitioned by batch_id alone — batch_id is what makes
+batch replay idempotent; part_id stays a data column (splitting a
+micro-batch of a few dozen clips over up to n_parts directories costs a
+file per part and lowers burst throughput).
 The batch path is partitioned by part_id instead. TableLayer.read_unified
 reads EITHER layout back in batch shape (drops batch_id when present),
 keeping batch and streaming output interchangeable downstream. A stream
@@ -316,12 +321,14 @@ def make_batch_sink(tl: TableLayer):
     `labels/batch_id=N` (part_id stays a data column), one parquet file
     swapped in whole (TableLayer.replace_partition), and rolled up per
     (lang, codec) into `metrics/batch_id=N` the same way
-    (_write_batch_metrics). If the job dies after the write but before the
-    streaming checkpoint commits, the replayed batch (same batch_id, same
-    offsets) replaces exactly the partitions it wrote before — no duplicate
-    label or metrics rows. An empty batch writes nothing. Factored out so
-    tests can replay a batch directly
-    (tests/test_streaming.py::test_batch_replay_idempotent).
+    (_write_batch_metrics). The driver holds the whole micro-batch's labels
+    while it writes them; bound the batch with maxFilesPerTrigger
+    (stream_clips) when a backlog's labels would not fit. If the job dies
+    after the write but before the streaming checkpoint commits, the
+    replayed batch (same batch_id, same offsets) replaces exactly the
+    partitions it wrote before — no duplicate label or metrics rows. An
+    empty batch writes nothing. Factored out so tests can replay a batch
+    directly (tests/test_streaming.py::test_batch_replay_idempotent).
 
     Path-mode only: the replay-idempotence contract here is built on
     path-level partition replacement; catalog-mode streaming would ride
@@ -704,7 +711,8 @@ def run_streaming_pipeline(
 
     available_now=True drains everything currently in input_dir and stops
     (batch-equivalent semantics for tests); False runs continuously until
-    the caller stops the query.
+    the caller stops the query. With max_files_per_trigger=None a drain is
+    one micro-batch, whose labels the driver holds (make_batch_sink).
 
     Each micro-batch writes its labels and metrics into batch_id-keyed
     partitions that a replayed batch overwrites (make_batch_sink); the

@@ -46,6 +46,7 @@ Parquet (path) mode semantics:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import uuid
@@ -227,10 +228,36 @@ class TableLayer:
         if self.catalog is not None:
             self._catalog_write(df, name, overwrite=True, partition_col=partition_col)
             return
-        self._sweep_stale_staging(name)
+        with self._staged_partitions(name, partition_col) as staging:
+            df.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+
+    def replace_partition(self, table: pa.Table, name: str, partition_col: str, value) -> None:
+        """Path mode: commit `table` as the whole partition
+        `<name>/<partition_col>=<value>`, one parquet file without a Spark
+        job. The file is committed like overwrite_partitions' (staged,
+        then swapped in whole), so a rewrite replaces every file the
+        partition held, whichever writer wrote them. `table` carries no
+        `partition_col` column; the directory name holds it."""
+        if self.catalog is not None:
+            raise NotImplementedError("replace_partition is path-mode only")
+        with self._staged_partitions(name, partition_col) as staging:
+            part = os.path.join(staging, f"{partition_col}={value}")
+            os.makedirs(part)
+            pq.write_table(table, os.path.join(part, "part-00000.parquet"), compression="zstd")
+
+    @contextlib.contextmanager
+    def _staged_partitions(self, name: str, partition_col: str):
+        """The path-mode partition commit: the caller writes
+        `<partition_col>=<v>/` trees into the yielded hidden staging dir,
+        then each one is swapped into `<name>/` whole (_atomic_replace_dir).
+        Stale staging dirs of crashed runs are swept first; if the write
+        raises, nothing is swapped. The staging dir is always removed."""
+        for d in os.listdir(self.base) if os.path.isdir(self.base) else []:
+            if d.startswith(f".staging-{name}-"):
+                shutil.rmtree(os.path.join(self.base, d), ignore_errors=True)
         staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
         try:
-            df.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
+            yield staging
             os.makedirs(self.path(name), exist_ok=True)
             prefix = f"{partition_col}="
             for d in sorted(os.listdir(staging)):
@@ -240,30 +267,6 @@ class TableLayer:
                     )
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-
-    def replace_partition(self, table: pa.Table, name: str, partition_col: str, value) -> None:
-        """Path mode: commit `table` as the whole partition
-        `<name>/<partition_col>=<value>`, one parquet file without a Spark
-        job. The file is written in a hidden staging dir that is swapped
-        into place (_atomic_replace_dir), so a rewrite replaces every file
-        the partition held, whichever writer wrote them. `table` carries no
-        `partition_col` column; the directory name holds it."""
-        if self.catalog is not None:
-            raise NotImplementedError("replace_partition is path-mode only")
-        self._sweep_stale_staging(name)
-        staging = self.path(f".staging-{name}-{uuid.uuid4().hex[:8]}")
-        try:
-            os.makedirs(staging)
-            pq.write_table(table, os.path.join(staging, "part-00000.parquet"), compression="zstd")
-            os.makedirs(self.path(name), exist_ok=True)
-            _atomic_replace_dir(staging, os.path.join(self.path(name), f"{partition_col}={value}"))
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-
-    def _sweep_stale_staging(self, name: str) -> None:
-        for d in os.listdir(self.base) if os.path.isdir(self.base) else []:
-            if d.startswith(f".staging-{name}-"):
-                shutil.rmtree(os.path.join(self.base, d), ignore_errors=True)
 
     def drop_partitions(self, name: str, partition_col: str, values) -> None:
         """Delete partition directories (deletion semantics for parts whose

@@ -117,5 +117,6 @@ def spark_jobs(spark, fn):
     try:
         out = fn()
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
