@@ -15,8 +15,10 @@ Scale design (10^12 clips / 1000 executors):
     per-part input fingerprint still matches the current input are skipped
     (reference cache semantics incl. the pickled-arg cache key,
     /root/reference/src/datasmith/utils.py:69-144, bypass_cache =>
-    force=True); recomputed parts are dynamic-partition-overwritten
-    (idempotent rewrite). Changed input rows therefore invalidate exactly
+    force=True); the checkpoint log is read once, as its latest row per
+    part. Recomputed parts are written to a hidden staging dir and each
+    partition is swapped in whole (TableLayer.overwrite_partitions —
+    idempotent rewrite). Changed input rows therefore invalidate exactly
     their own partitions; a part whose input rows were all DELETED has its
     stale labels directory dropped explicitly after the overwrite (the
     parquet-mode analogue of the Iceberg MERGE / reference INSERT OR
@@ -41,6 +43,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .core import rules as R
 from .datagen import CLIPS_SCHEMA_DDL
@@ -77,6 +80,7 @@ _CP_SCHEMA = _log_schema(
     ("part_id", pa.int32()), ("status", pa.string()), ("run_id", pa.string()),
     ("had_rows", pa.int32()), ("fingerprint", pa.string()), ("n_parts", pa.int32()),
 )
+_CP_SPARK_SCHEMA = from_arrow_schema(_CP_SCHEMA)
 _LINEAGE_SCHEMA = _log_schema(
     ("part_id", pa.int32()), ("n_in", pa.int64()), ("n_keep", pa.int64()),
     *[(f"drop_{s}", pa.int64()) for s in R.STAGES],
@@ -218,23 +222,25 @@ def run_pipeline(
     run_id = uuid.uuid4().hex[:12]
     log = configure()
 
-    # ---- partition-layout guard: part_id = crc32(clip_id) % n_parts, so a
+    # ---- the checkpoint log is read once, as its latest row per part over
+    # the pinned schema (a column older logs lack reads as null).
+    # Partition-layout guard: part_id = crc32(clip_id) % n_parts, so a
     # DIFFERENT n_parts is a different table layout — resuming across it
     # would mix two partitionings in one labels table (shrink 32->16 leaves
     # stale part_id=16..31 directories behind and every clip appears twice).
-    # The layout is stamped into every checkpoint row; on mismatch the old
-    # labels + checkpoints are wiped and everything recomputes (the
-    # reference's cache key covers every argument — partitioning config is
-    # an argument, /root/reference/src/datasmith/utils.py:94-101).
+    # The layout is stamped into every checkpoint row (the newest row is one
+    # of the latest per part); on mismatch the old labels + checkpoints are
+    # wiped and everything recomputes (the reference's cache key covers
+    # every argument — partitioning config is an argument,
+    # /root/reference/src/datasmith/utils.py:94-101).
+    latest: list[dict] = []
     if tl.exists(spark, "checkpoints"):
-        cp_raw = tl.read(spark, "checkpoints")
-        if "n_parts" not in cp_raw.columns:
-            stored_np = None  # pre-guard checkpoints: layout unknown
-        else:
-            # a null value (schema-merged old rows) means layout unknown too —
-            # treat like a missing column and recompute, don't TypeError
-            raw_np = cp_raw.orderBy(F.col("ts").desc()).select("n_parts").first()[0]
-            stored_np = None if raw_np is None else int(raw_np)
+        latest = [r.asDict() for r in tl.latest_per_key(
+            spark, "checkpoints", ["part_id"], "ts", schema=_CP_SPARK_SCHEMA
+        ).collect()]
+        newest = max(latest, key=lambda r: r["ts"], default={})
+        # a null n_parts (pre-guard checkpoints) means the layout is unknown
+        stored_np = newest.get("n_parts")
         if stored_np != n_parts:
             log.warning(
                 "partition layout changed (checkpointed n_parts=%s, requested %d): "
@@ -244,6 +250,7 @@ def run_pipeline(
             )
             tl.wipe("labels")
             tl.wipe("checkpoints")
+            latest = []
 
     def _fp_source() -> DataFrame:
         # the pinned schema spares Spark a schema-inference job per call
@@ -255,36 +262,30 @@ def run_pipeline(
     if fingerprint:
         fps = part_fingerprints(_fp_source(), n_parts, payload=fingerprint_payload)
 
-    all_parts = list(range(n_parts))
     done: set[int] = set()
-    if not force and tl.exists(spark, "checkpoints"):
-        latest = tl.latest_per_key(spark, "checkpoints", ["part_id"], "ts").filter(
-            F.col("status") == "done"
-        )
-        if fingerprint:
-            if "fingerprint" in latest.columns:
-                stored = {r.part_id: r.fingerprint for r in latest.select("part_id", "fingerprint").collect()}
-                # _FP_ANY (written by a fingerprint=False run, which trusts
-                # part ids alone) counts as done only while the part still
-                # has input rows; it is then ADOPTED below — re-checkpointed
-                # with the current fingerprint — so every LATER input change
-                # invalidates it normally. An _FP_ANY part whose input rows
-                # vanished is NOT done: it gets recomputed-empty and its
-                # stale labels directory dropped (deletion semantics).
-                done = {
-                    p for p, f in stored.items()
-                    if f == fps.get(p, _FP_EMPTY) or (f == _FP_ANY and p in fps)
-                }
-                adopted = [p for p, f in stored.items() if f == _FP_ANY and p in fps]
-                if adopted:
-                    _append_rows(tl, "checkpoints", _CP_SCHEMA, [
-                        (p, "done", run_id, 1, fps[p], n_parts) for p in adopted
-                    ])
-            # checkpoints written before fingerprints existed: treat all as
-            # stale (recompute is idempotent; serving stale labels is not)
+    if not force:
+        stored = {r["part_id"]: r.get("fingerprint") for r in latest if r["status"] == "done"}
+        if not fingerprint:
+            done = set(stored)
         else:
-            done = {r.part_id for r in latest.select("part_id").collect()}
-    pending = [p for p in all_parts if p not in done]
+            # _FP_ANY (written by a fingerprint=False run, which trusts part
+            # ids alone) counts as done only while the part still has input
+            # rows; it is then ADOPTED below — re-checkpointed with the
+            # current fingerprint — so every LATER input change invalidates
+            # it normally. An _FP_ANY part whose input rows vanished is NOT
+            # done: it gets recomputed-empty and its stale labels directory
+            # dropped (deletion semantics). A null fingerprint (pre-
+            # fingerprint checkpoints) matches nothing: stale, recomputed.
+            done = {
+                p for p, f in stored.items()
+                if f == fps.get(p, _FP_EMPTY) or (f == _FP_ANY and p in fps)
+            }
+            adopted = [p for p, f in stored.items() if f == _FP_ANY and p in fps]
+            if adopted:
+                _append_rows(tl, "checkpoints", _CP_SCHEMA, [
+                    (p, "done", run_id, 1, fps[p], n_parts) for p in adopted
+                ])
+    pending = [p for p in range(n_parts) if p not in done]
     if fail_after_parts is not None:
         pending = pending[:fail_after_parts]
     log.info(
@@ -308,7 +309,7 @@ def run_pipeline(
     # deletion semantics (reference INSERT OR REPLACE upsert,
     # /root/reference/src/datasmith/utils.py:130-138): a pending part with NO
     # current input rows (all its clips were deleted) produces no output, so
-    # dynamic overwrite leaves its old labels directory behind — drop it
+    # the partition swap leaves its old labels directory behind — drop it
     # explicitly. Only knowable when the input was fingerprinted.
     if fingerprint:
         emptied = [p for p in pending if p not in fps]

@@ -39,14 +39,45 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .datagen import CLIPS_SCHEMA_DDL
-from .pipeline import ARROW_BATCH, LABEL_COLS, label_clips
+from .pipeline import _set_arrow, label_clips
 from .tables import TableLayer
+
+
+def _file_stream(
+    spark: SparkSession, input_dir: str, schema, max_files_per_trigger: int | None
+) -> DataFrame:
+    """Parquet file-source stream over input_dir, schema pinned (DDL or
+    StructType); max_files_per_trigger, when set, bounds each micro-batch."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(input_dir)
+
+
+def _run_foreach_batch(
+    df: DataFrame, sink, out_dir: str, available_now: bool, timeout_sec: float | None
+):
+    """Start `df` into the foreachBatch `sink`, checkpointed under
+    out_dir/_stream_checkpoint. available_now=True drains the pending input
+    (waiting up to timeout_sec); False returns the running query."""
+    writer = (
+        df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
+        .outputMode("append")
+    )
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination(timeout_sec)
+    return q
 
 
 def stream_clips(
@@ -55,10 +86,7 @@ def stream_clips(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream of clips with the pinned explicit schema."""
-    reader = spark.readStream.schema(CLIPS_SCHEMA_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_dir)
+    return _file_stream(spark, input_dir, CLIPS_SCHEMA_DDL, max_files_per_trigger)
 
 
 def stream_audio_quality(
@@ -206,11 +234,8 @@ def stream_click_purchase_join(
     (tests/test_streaming.py::test_stream_stream_join_matches_batch)."""
 
     def _src(ev_type: str) -> DataFrame:
-        reader = spark.readStream.schema(EVENTS_SCHEMA_DDL)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         return (
-            reader.parquet(input_dir)
+            _file_stream(spark, input_dir, EVENTS_SCHEMA_DDL, max_files_per_trigger)
             .filter(F.col("event_type") == ev_type)
             .withWatermark("ts", watermark)
         )
@@ -370,10 +395,7 @@ def windowed_event_metrics(
     (tests drain with availableNow and compare against the batch
     F.window aggregation of the same input).
     """
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    s = reader.parquet(input_dir)
+    s = _file_stream(spark, input_dir, schema_ddl, max_files_per_trigger)
     return (
         s.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
@@ -413,10 +435,7 @@ def stream_exact_dedup(
     Returns the un-sunk streaming DataFrame (tests drain with availableNow
     and compare against batch dropDuplicates of the same input).
     """
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    s = reader.parquet(input_dir)
+    s = _file_stream(spark, input_dir, schema_ddl, max_files_per_trigger)
     s = s.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(ts_col, watermark)
     return s.dropDuplicatesWithinWatermark(key_cols)
 
@@ -447,13 +466,7 @@ def stateful_sessionize(
     final). Sessions not yet provably closed stay in state until the
     watermark passes them.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    s = reader.parquet(input_dir)
+    s = _file_stream(spark, input_dir, schema_ddl, max_files_per_trigger)
     s = s.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark("ts", watermark)
 
     out_schema = (
@@ -562,9 +575,7 @@ DUP_PAIRS_DDL = (
 def read_dup_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
     """Schema-pinned reader for run_streaming_dedup's side table (well-
     defined even when no batch has found a duplicate yet)."""
-    return spark.read.schema(DUP_PAIRS_DDL).parquet(
-        os.path.join(out_dir, "dup_pairs")
-    )
+    return TableLayer(out_dir).read(spark, "dup_pairs", schema=DUP_PAIRS_DDL)
 
 
 def run_streaming_dedup(
@@ -581,12 +592,13 @@ def run_streaming_dedup(
     fingerprinted, probed against the persisted bucketed seen-key store
     (operators/incremental.py — only the batch shuffles), and only novel
     clips' keys are appended; detected (batch_id-clip, seen-clip) pairs
-    land in out_dir/dup_pairs partitioned by batch_id with dynamic
-    partition overwrite (idempotent under batch replay, like the label
-    sink). The streaming checkpoint makes restarts resume from the last
-    committed batch, so the store-append-then-crash window re-appends at
-    most one batch's keys — duplicate store rows widen future matching,
-    never corrupt it (set-semantics probe).
+    land in out_dir/dup_pairs, one partition stream_batch=N per micro-
+    batch, staged and swapped in whole by TableLayer.overwrite_partitions
+    (idempotent under batch replay, like the label sink). The streaming
+    checkpoint makes restarts resume from the last committed batch, so the
+    store-append-then-crash window re-appends at most one batch's keys —
+    duplicate store rows widen future matching, never corrupt it
+    (set-semantics probe).
 
     The store lives in a SQL catalog (bucketBy needs saveAsTable);
     dup_pairs is a path-mode side table like the label pipeline's metrics.
@@ -594,34 +606,18 @@ def run_streaming_dedup(
     from .operators.audio_fp import fingerprint_clips
     from .operators.incremental import ingest_batch
 
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-    tl_store = TableLayer("unused", catalog=store_catalog)
-    pairs_dir = os.path.join(out_dir, "dup_pairs")
+    _set_arrow(spark)
+    tl, tl_store = TableLayer(out_dir), TableLayer("unused", catalog=store_catalog)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        keys = fingerprint_clips(batch_df)
-        pairs, n_novel, n_dup = ingest_batch(spark, tl_store, store_name, keys)
+        pairs, _, _ = ingest_batch(spark, tl_store, store_name, fingerprint_clips(batch_df))
         # batch_id in `pairs` is the incoming CLIP's id; the streaming
         # micro-batch partition key is stream_batch
-        (
-            pairs.withColumn("stream_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("stream_batch")
-            .parquet(pairs_dir)
-        )
+        pairs = pairs.withColumn("stream_batch", F.lit(int(batch_id)))
+        tl.overwrite_partitions(pairs, "dup_pairs", "stream_batch")
 
     clips = stream_clips(spark, input_dir, max_files_per_trigger)
-    writer = (
-        clips.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
-        .outputMode("append")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(timeout_sec)
-        return q
-    return writer.start()
+    return _run_foreach_batch(clips, _sink, out_dir, available_now, timeout_sec)
 
 
 LM_DUP_PAIRS_DDL = (
@@ -632,9 +628,7 @@ LM_DUP_PAIRS_DDL = (
 
 def read_lm_dup_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
     """Schema-pinned reader for run_streaming_landmark_dedup's side table."""
-    return spark.read.schema(LM_DUP_PAIRS_DDL).parquet(
-        os.path.join(out_dir, "lm_dup_pairs")
-    )
+    return TableLayer(out_dir).read(spark, "lm_dup_pairs", schema=LM_DUP_PAIRS_DDL)
 
 
 def run_streaming_landmark_dedup(
@@ -653,9 +647,10 @@ def run_streaming_landmark_dedup(
     votes/dominance confidence verdict — so a delayed / trimmed-intro
     re-upload of anything ever ingested is caught at its offset), and only
     novel clips' postings are appended. Detected matches land in
-    out_dir/lm_dup_pairs partitioned by batch id with dynamic partition
-    overwrite (idempotent under batch replay); the streaming checkpoint
-    resumes from the last committed batch, and the crash window between
+    out_dir/lm_dup_pairs, one partition stream_batch=N per micro-batch,
+    staged and swapped in whole by TableLayer.overwrite_partitions
+    (idempotent under batch replay); the streaming checkpoint resumes
+    from the last committed batch, and the crash window between
     store-append and checkpoint-commit re-appends at most one batch's
     postings — which only widens vote counts, never flips a verdict
     (run_streaming_dedup's contract, lifted from set-membership keys to
@@ -668,34 +663,17 @@ def run_streaming_landmark_dedup(
     """
     from .operators.landmark import ingest_landmark_batch, landmark_clips
 
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-    tl_store = TableLayer("unused", catalog=store_catalog)
-    pairs_dir = os.path.join(out_dir, "lm_dup_pairs")
+    _set_arrow(spark)
+    tl, tl_store = TableLayer(out_dir), TableLayer("unused", catalog=store_catalog)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         keys = landmark_clips(batch_df)
-        matches, n_novel, n_dup = ingest_landmark_batch(
-            spark, tl_store, store_name, keys
-        )
-        (
-            matches.withColumn("stream_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("stream_batch")
-            .parquet(pairs_dir)
-        )
+        matches, _, _ = ingest_landmark_batch(spark, tl_store, store_name, keys)
+        matches = matches.withColumn("stream_batch", F.lit(int(batch_id)))
+        tl.overwrite_partitions(matches, "lm_dup_pairs", "stream_batch")
 
     clips = stream_clips(spark, input_dir, max_files_per_trigger)
-    writer = (
-        clips.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
-        .outputMode("append")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(timeout_sec)
-        return q
-    return writer.start()
+    return _run_foreach_batch(clips, _sink, out_dir, available_now, timeout_sec)
 
 
 def run_streaming_pipeline(
@@ -719,23 +697,10 @@ def run_streaming_pipeline(
     streaming checkpoint (out_dir/_stream_checkpoint) makes
     restarts resume from the last committed batch without reprocessing.
     """
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-    tl = TableLayer(out_dir)
-    clips = stream_clips(spark, input_dir, max_files_per_trigger)
-    labels = label_clips(clips, n_parts=n_parts)
-    _sink = make_batch_sink(tl)
-
-    writer = (
-        labels.select(*LABEL_COLS)
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
-        .outputMode("append")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(timeout_sec)
-        return q
-    return writer.start()
+    _set_arrow(spark)
+    labels = label_clips(stream_clips(spark, input_dir, max_files_per_trigger), n_parts=n_parts)
+    sink = make_batch_sink(TableLayer(out_dir))
+    return _run_foreach_batch(labels, sink, out_dir, available_now, timeout_sec)
 
 
 def stream_image_hashes(
@@ -755,10 +720,7 @@ def stream_image_hashes(
     from .operators.image_fp import image_hashes
     from .operators.multimodal import IMAGE_SCHEMA_DDL
 
-    reader = spark.readStream.schema(IMAGE_SCHEMA_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return image_hashes(reader.parquet(input_dir))
+    return image_hashes(_file_stream(spark, input_dir, IMAGE_SCHEMA_DDL, max_files_per_trigger))
 
 
 def stream_store_dedup(
@@ -790,10 +752,7 @@ def stream_store_dedup(
     m_bits = B.BLOOM_M_BITS if m_bits is None else m_bits
     k = B.BLOOM_K if k is None else k
     schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
+    stream = _file_stream(spark, input_dir, schema, max_files_per_trigger)
     # pin BOTH static sides once at declaration: the (word, bits) filter
     # AND the distinct store projection the exact confirm join probes —
     # otherwise every micro-batch would re-scan and re-distinct the full
@@ -828,13 +787,7 @@ def stream_zscore_flags(
     over the concatenated input — pinned in tests. Late/out-of-order
     events are evaluated against the state as-of arrival (best effort),
     the honest semantics for an alerting operator."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    s = reader.parquet(input_dir)
+    s = _file_stream(spark, input_dir, schema_ddl, max_files_per_trigger)
 
     out_schema = (
         "user_id bigint, event_id bigint, cents bigint, n_prev bigint, "
@@ -893,13 +846,7 @@ def stream_funnel(
     (user_id, stage_idx, stage_ts). step_types must be distinct (an
     event fills at most one stage here; a duplicate-type funnel would
     let the batch min-chain reuse one event for two stages)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    s = reader.parquet(input_dir)
+    s = _file_stream(spark, input_dir, schema_ddl, max_files_per_trigger)
 
     out_schema = "user_id bigint, stage_idx int, stage_ts timestamp"
     state_schema = "times array<double>"
@@ -961,13 +908,7 @@ def stream_disorder_audit(
     cumulative row emitted at each event is VALUE-EQUAL to the batch
     operator over the prefix — the final row per key equals q133 over
     the concatenated input (pinned in tests/test_streaming.py)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    reader = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    s = reader.parquet(input_dir)
+    s = _file_stream(spark, input_dir, schema_ddl, max_files_per_trigger)
 
     out_schema = (
         "user_id bigint, event_id bigint, n_events bigint, n_late bigint, "

@@ -1,6 +1,7 @@
 """Table layer: hash-partitioned parquet with Iceberg-ready semantics.
 
-The pipeline's tables (`labels`, `lineage`, `metrics`, `checkpoints`) are
+The pipeline's tables (`labels`, `lineage`, `metrics`, `checkpoints`) and
+the streaming side tables (`dup_pairs`, `lm_dup_pairs`, streaming.py) are
 written through this module only, so swapping parquet for a SQL catalog
 (`bucket(N, clip_id)` partition transform, MERGE INTO checkpoints) is a
 config change, not a code fork (SURVEY.md §7.4 risk 5).
@@ -21,11 +22,12 @@ Two modes, selected by the `catalog` constructor arg:
     against the built-in catalog (tests/test_catalog_tables.py) and picks
     up Iceberg's transactional guarantees when the jar + catalog exist.
     Partition deletion tries the v2 row-level `DELETE FROM` (Iceberg)
-    before `ALTER TABLE .. DROP PARTITION` (v1). The streaming sink remains
+    before `ALTER TABLE .. DROP PARTITION` (v1). The streaming sinks remain
     path-mode (streaming.make_batch_sink guards this explicitly).
 
 Parquet (path) mode semantics:
-  * labels (batch): directory-partitioned by part_id; per-partition
+  * labels (batch), and the stream dedup side tables per micro-batch:
+    directory-partitioned by part_id (stream_batch); per-partition
     idempotent rewrite (the `replaceWhere` analogue) COMMITTED atomically —
     Spark writes into a hidden staging dir and partitions are swapped into
     place with renameat2(RENAME_EXCHANGE), so readers never observe a torn
@@ -337,10 +339,12 @@ class TableLayer:
         pq.write_table(table, tmp, compression="zstd")
         os.replace(tmp, os.path.join(self.path(name), file))
 
-    def latest_per_key(self, spark: SparkSession, name: str, keys: list[str], order_col: str = "ts") -> DataFrame:
-        """Last-write-wins view over an append-only log."""
+    def latest_per_key(self, spark: SparkSession, name: str, keys: list[str],
+                       order_col: str = "ts", schema=None) -> DataFrame:
+        """Last-write-wins view over an append-only log; `schema` as in read
+        (pinned, a column older files lack reads as null)."""
         from pyspark.sql import Window
 
-        df = self.read(spark, name)
+        df = self.read(spark, name, schema=schema)
         w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
         return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")

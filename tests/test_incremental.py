@@ -33,6 +33,39 @@ def _clips(spark, rows):
     )
 
 
+def _record_swaps(monkeypatch) -> list[str]:
+    """Destinations of every tables._atomic_replace_dir call from here on."""
+    import os
+
+    from datasmith_spark import tables
+
+    swapped: list[str] = []
+    real = tables._atomic_replace_dir
+
+    def recording(src: str, dst: str) -> None:
+        swapped.append(os.path.normpath(dst))
+        real(src, dst)
+
+    monkeypatch.setattr(tables, "_atomic_replace_dir", recording)
+    return swapped
+
+
+def _assert_swapped_in(out: str, name: str, swapped: list[str]) -> None:
+    """Every stream_batch=N partition of out/name was committed by
+    TableLayer's staged swap, and no staging or Spark-temporary directory
+    is left anywhere under out."""
+    import os
+
+    table = os.path.join(out, name)
+    parts = {os.path.join(table, d) for d in os.listdir(table) if d.startswith("stream_batch=")}
+    assert parts and parts <= set(swapped), (parts, swapped)
+    left = [
+        d for _, dirs, _ in os.walk(out) for d in dirs
+        if d.startswith((".staging-", ".spark-staging")) or d == "_temporary"
+    ]
+    assert not left, left
+
+
 class TestIncrementalDedup:
     def test_ingest_flags_seen_dups_and_appends_novel(self, spark, ns):
         from datasmith_spark.operators.audio_fp import fingerprint_clips
@@ -103,11 +136,14 @@ class TestIncrementalDedup:
 
 
 class TestStreamingDedup:
-    def test_two_drops_second_flags_dup_of_first(self, spark, ns, tmp_path):
+    def test_two_drops_second_flags_dup_of_first(self, spark, ns, tmp_path, monkeypatch):
         """drop1 seeds the store; drop2 (arriving later) carries a gain-
         ridden re-encode of a drop1 clip — the streaming job flags exactly
-        that pair and appends only the novel keys."""
+        that pair and appends only the novel keys. dup_pairs partitions are
+        committed through TableLayer's staged swap."""
         from datasmith_spark.streaming import run_streaming_dedup
+
+        swapped = _record_swaps(monkeypatch)
 
         sr = 16000
         base = {f"seed_{i}": _tone(sr, 2.0, 320.0 + 45 * i, seed=40 + i) for i in range(5)}
@@ -145,6 +181,7 @@ class TestStreamingDedup:
         run_streaming_dedup(spark, inp, out, store_catalog=ns, store_name="seen_s")
         assert read_dup_pairs(spark, out).count() == 1
         assert tl.read(spark, "seen_s").select("clip_id").distinct().count() == 6
+        _assert_swapped_in(out, "dup_pairs", swapped)
 
 
 class TestCompactStore:
@@ -375,18 +412,21 @@ def test_registry_has_q119(spark):
 
 
 class TestStreamingLandmarkDedup:
-    def test_delayed_reupload_flagged_across_batches(self, spark, ns, tmp_path):
+    def test_delayed_reupload_flagged_across_batches(self, spark, ns, tmp_path, monkeypatch):
         """The streaming twin of q157/q158: drop1 seeds the posting store;
         drop2 carries a DELAYED (arbitrary sub-hop phase) + attenuated +
         requantized copy of a drop1 track — the class run_streaming_dedup's
         frame-aligned lane misses — plus one novel clip. The job must flag
         exactly that match, confidently, at the right offset bracket, and
-        append only novel postings."""
+        append only novel postings. lm_dup_pairs partitions are committed
+        through TableLayer's staged swap."""
         from datasmith_spark.core.landmark import LM_HOP, delayed_variant16
         from datasmith_spark.streaming import (
             read_lm_dup_pairs,
             run_streaming_landmark_dedup,
         )
+
+        swapped = _record_swaps(monkeypatch)
 
         sr = 16000
 
@@ -441,3 +481,4 @@ class TestStreamingLandmarkDedup:
         run_streaming_landmark_dedup(spark, inp, out, store_catalog=ns, store_name="lm_s")
         assert len([r for r in read_lm_dup_pairs(spark, out).collect() if r.confident]) == 1
         assert tl.read(spark, "lm_s").select("clip_id").distinct().count() == 6
+        _assert_swapped_in(out, "lm_dup_pairs", swapped)

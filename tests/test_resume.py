@@ -377,6 +377,43 @@ def test_fresh_run_runs_five_spark_jobs(spark, clips_path, tmp_path):
     assert jobs == 5
 
 
+def test_finished_out_dir_runs_four_spark_jobs(spark, clips_path, tmp_path):
+    """A call with nothing pending: the fingerprint aggregate (2 jobs) and
+    one latest-per-part read of the checkpoint log over its pinned schema
+    (2), which serves both the layout guard and the done set."""
+    out = str(tmp_path / "out")
+    run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+    r, jobs = spark_jobs(
+        spark, lambda: run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+    )
+    assert r["parts_processed"] == 0
+    assert jobs == 4
+
+
+def test_legacy_checkpoints_without_layout_or_fingerprint_recompute(spark, clips_path, tmp_path):
+    """A checkpoint log written before the n_parts and fingerprint columns
+    existed (Spark's writer, both columns absent from every file): the
+    layout is unknown, so the rerun wipes and recomputes every part, and
+    each clip is labelled exactly once."""
+    import os
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+    path, tmp = f"{out}/checkpoints", f"{out}/.old-checkpoints"
+    spark.read.parquet(path).drop("n_parts", "fingerprint").write.parquet(tmp)
+    shutil.rmtree(path)
+    os.rename(tmp, path)
+    assert {"n_parts", "fingerprint"}.isdisjoint(spark.read.parquet(path).columns)
+
+    r = run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)
+    assert r["parts_processed"] == N_PARTS
+    lab = spark.read.parquet(f"{out}/labels")
+    total = spark.read.parquet(clips_path).count()
+    assert lab.count() == total
+    assert lab.select("clip_id").distinct().count() == total
+    assert run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=clips_path)["parts_processed"] == 0
+
+
 def test_finished_out_dir_reports_wall_and_done(spark, clips_path, tmp_path):
     """A call with nothing pending still measured its layout guard,
     fingerprint pre-scan and checkpoint read: it reports that wall and logs
