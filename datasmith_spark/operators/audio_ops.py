@@ -1022,11 +1022,8 @@ def audio_quality(
     clips: DataFrame, frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB
 ) -> DataFrame:
     """All three audio-quality lanes (VAD, spectral, speaking-rate) fused
-    into one decode pass, plus the composite keep. Works UNCHANGED on a
-    streaming DataFrame (stateless Arrow-batched mapInPandas), so
-    `stream_clips(...) |> audio_quality` is the continuous-ingest quality
-    filter — see streaming.stream_audio_quality. Shuffle-free narrow map
-    at any scale."""
+    into one decode pass, plus the composite keep. A stateless
+    Arrow-batched mapInPandas: shuffle-free narrow map at any scale."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -2654,28 +2651,13 @@ def _feature_qstats_pdf(
     )
 
 
-def feature_qstats_clips(
-    clips: DataFrame, n_fft: int = 512, hop: int = 256, n_mels: int = 40
-) -> DataFrame:
-    """Per-clip fixed-point feature-statistics partials (composable path).
-    Shuffle-free narrow map; the fan-out to n_mels rows per clip happens
-    inside the Arrow batch."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _feature_qstats_pdf(pdf, n_fft, hop, n_mels)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=FEATURE_QSTATS_DDL
-    )
-
-
 def feature_qstats_scan(
     spark: SparkSession, input_dir: str,
     n_fft: int = 512, hop: int = 256, n_mels: int = 40,
 ) -> DataFrame:
-    """feature_qstats_clips over a parquet directory via the fused manifest
-    scan (FFT-bound like q37)."""
+    """Per-clip fixed-point feature-statistics partials over a parquet
+    directory via the fused manifest scan (FFT-bound like q37). The
+    fan-out to n_mels rows per clip happens inside the Arrow batch."""
     return manifest_scan(
         spark,
         input_dir,
@@ -2709,12 +2691,10 @@ def global_feature_stats(
 
 
 def aggregate_feature_qstats(parts: DataFrame) -> DataFrame:
-    """The global reduce over per-clip q-stats partials — shared by the
-    batch scan (global_feature_stats) and the streaming twin
-    (streaming.stream_feature_qstats), which can only exist because the
-    partials are exact integers: an incremental complete-mode aggregate
-    provably equals the batch one, where float stats would drift with
-    the micro-batch schedule."""
+    """The global reduce over per-clip q-stats partials
+    (global_feature_stats and the corpus-CMVN apply pass). The partials
+    are exact integers, so the sums are exact whatever the shuffle
+    schedule, where float stats would drift from run to run."""
     return parts.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips"),
         F.sum("n_frames").cast("long").alias("n_frames"),

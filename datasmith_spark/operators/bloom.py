@@ -121,12 +121,9 @@ def anti_join_via_bloom(
         # build side, so an un-pinned filter would scan the store k times
         filter_df = bloom_build(store_keys, col, m_bits, k).localCheckpoint(eager=True)
     flagged = bloom_maybe(new, col, filter_df, m_bits, k)
-    if not flagged.isStreaming:
-        # the union below consumes `flagged` twice; a lazy checkpoint makes
-        # the batch scan + probe chain run once, not once per branch
-        # (streaming frames cannot checkpoint — there each trigger pays the
-        # probe chain per branch, the documented micro-batch cost)
-        flagged = flagged.localCheckpoint(eager=False)
+    # the union below consumes `flagged` twice; a lazy checkpoint makes the
+    # scan + probe chain run once, not once per branch
+    flagged = flagged.localCheckpoint(eager=False)
     definite = flagged.filter(~F.col("_bloom_maybe")).drop("_bloom_maybe")
     maybe = flagged.filter(F.col("_bloom_maybe")).drop("_bloom_maybe")
     survivors = maybe.join(store_keys.select(col).distinct(), col, "left_anti")

@@ -42,8 +42,8 @@ def funnel_user_times(
     window_sec: int,
 ) -> DataFrame:
     """Per-user earliest-chaining stage times: (user_col, _t0.._tk) —
-    the shared core of funnel_stages and the streaming lift's batch
-    oracle. Chained conditional min-windows over ONE user partition."""
+    the core of funnel_stages. Chained conditional min-windows over ONE
+    user partition."""
     w = Window.partitionBy(user_col)
     ts = F.col(ts_col).cast("timestamp")
     df = events

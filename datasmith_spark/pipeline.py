@@ -49,7 +49,7 @@ from .core import rules as R
 from .datagen import CLIPS_SCHEMA_DDL
 from .logging_config import configure, stage_timer
 from .operators.scan_decode import CLIP_COLUMNS, LABELS_SCHEMA, label_batch_pdf, scan_labels
-from .tables import TableLayer
+from .tables import TableLayer, _glob_escape
 
 LABEL_COLS = LABELS_SCHEMA.fieldNames()
 
@@ -254,7 +254,10 @@ def run_pipeline(
 
     def _fp_source() -> DataFrame:
         # the pinned schema spares Spark a schema-inference job per call
-        src = clips if input_dir is None else spark.read.schema(CLIPS_SCHEMA_DDL).parquet(input_dir)
+        if input_dir is None:
+            src = clips
+        else:
+            src = spark.read.schema(CLIPS_SCHEMA_DDL).parquet(_glob_escape(input_dir))
         cols = list(META_FP_COLS) + (["bytes"] if fingerprint_payload else [])
         return src.select(*cols)
 

@@ -6312,8 +6312,8 @@ def q133_out_of_order_audit(spark, sf_dir):
     timestamp against the running max already seen; lateness =
     seen_max - t when positive. Emits per user the late count, max/sum
     lateness in exact µs, and how many would be dropped by a 1-minute
-    watermark — run this batch audit BEFORE picking the
-    withWatermark() delay in streaming.py. One window over one (user)
+    watermark — run this batch audit BEFORE picking a streaming
+    query's withWatermark() delay. One window over one (user)
     sort, exclusive upper bound so an event is never late against
     itself; all-integer outputs."""
     e = _t(spark, sf_dir, "events")

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import re
 import shutil
 import uuid
 
@@ -57,6 +58,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _glob_escape(path: str) -> str:
+    """`path` with Hadoop's glob characters backslash-escaped, for a Spark
+    read: Hadoop globs every path Spark reads, so a directory named
+    `local[4]-0` would otherwise match nothing (PATH_NOT_FOUND). Spark's
+    writers take the path literally."""
+    return re.sub(r"([\[\]{}*?])", r"\\\1", path)
 
 
 def _renameat2_exchange(a: str, b: str) -> bool:
@@ -144,7 +153,7 @@ class TableLayer:
         if self.catalog is not None:
             return spark.table(self.ident(name))
         reader = spark.read.schema(schema) if schema is not None else spark.read
-        return reader.parquet(self.path(name))
+        return reader.parquet(_glob_escape(self.path(name)))
 
     def write_bucketed(
         self, df: DataFrame, name: str, key: str, n_buckets: int = 32

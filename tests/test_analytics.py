@@ -36,6 +36,29 @@ def test_rolling_zscore_hand(spark):
     assert all(not v[1] for k, v in out.items() if k[0] == 2)
 
 
+def test_rolling_zscore_history_is_trailing_window(spark):
+    """The history is the trailing `window` rows: a spike after 12 steady
+    rows is tested against n_prev = 10, and it is the only flag, on a key
+    whose steady values cycle and on one that never spikes."""
+    from datasmith_spark.operators.detection import rolling_zscore_flags
+
+    rows = [
+        (u, i, _ts(i), 99_999 if (u, i) == (1, 12) else 100 + i % 3)
+        for u in (1, 2) for i in range(18)
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id bigint, event_id bigint, ts timestamp, cents bigint"
+    )
+    flagged = [
+        (r.user_id, r.event_id, r.cents, r.n_prev)
+        for r in rolling_zscore_flags(
+            df, "user_id", "ts", "event_id", "cents", window=10, min_n=5, z=2
+        ).collect()
+        if r.flagged
+    ]
+    assert flagged == [(1, 12, 99_999, 10)]
+
+
 def test_rolling_zscore_exact_boundary_unflagged(spark):
     """(n*x - S)^2 == 4*(n*SS - S^2) exactly -> strict > does not flag.
     History [90, 110] (n=2, S=200, SS=20200): boundary x solves

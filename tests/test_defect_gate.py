@@ -68,6 +68,7 @@ def test_fused_matches_standalone_lanes(spark):
             if lane == "integrity" and not bool(lane_df.loc[cid, "ok"]):
                 expect = True  # fused gate: undecodable rows are unjudged
             assert bool(row[f"{lane}_keep"]) == expect, (cid, lane)
+    assert (fused.keep == fused[[f"{l}_keep" for l in DEFECT_LANES]].all(axis=1)).all()
 
 
 def test_registry_has_q174():

@@ -191,3 +191,29 @@ def test_registry_has_q104_q105(spark):
 
     for name in ("q104_event_paths", "q105_markov_transitions"):
         assert name in QUERIES and name in ORACLE_SQL
+
+
+def test_funnel_user_times_per_user_stages(spark):
+    """funnel_user_times per user: each reached stage at its earliest
+    chaining instant; a click before any view never fills stage 1, but a
+    later click inside the window does; a user without a view reaches
+    nothing."""
+    from datasmith_spark.operators.funnel import funnel_user_times
+
+    rows = [
+        (1, _ts(0), "view"), (1, _ts(30), "click"), (1, _ts(70), "purchase"),
+        (2, _ts(0), "view"), (2, _ts(90), "click"),
+        (3, _ts(0), "click"), (3, _ts(10), "view"), (3, _ts(20), "click"),
+        (4, _ts(0), "purchase"),
+    ]
+    df = spark.createDataFrame(rows, "user_id bigint, ts timestamp, et string")
+    got = {}
+    for r in funnel_user_times(df, "user_id", "ts", _steps(), 3600).collect():
+        reached = {i: r[f"_t{i}"] for i in range(3) if r[f"_t{i}"] is not None}
+        if reached:
+            got[r.user_id] = reached
+    assert got == {
+        1: {0: _ts(0), 1: _ts(30), 2: _ts(70)},
+        2: {0: _ts(0)},
+        3: {0: _ts(10), 1: _ts(20)},
+    }

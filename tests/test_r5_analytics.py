@@ -66,6 +66,26 @@ def test_watermark_coverage_monotone_and_anchored(spark):
     assert rows[0].n_admitted == n - late and rows[0].n_total == n
 
 
+def test_out_of_order_audit_measures_planted_lateness(spark, tmp_path):
+    """q133 replays each user's events in event_id order: one event 2
+    minutes behind the running max is the user's only late event, and a
+    user whose timestamps rise with event_id has none."""
+    from datetime import datetime, timedelta
+
+    base = datetime(2024, 1, 1)
+    rows = [
+        (u, i, base + timedelta(minutes=4 if (u, i) == (1, 7) else i))
+        for u in (1, 2) for i in range(12)
+    ]
+    events = spark.createDataFrame(rows, "user_id bigint, event_id bigint, ts timestamp")
+    events.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
+    got = {
+        r.user_id: (r.n_events, r.n_late, r.max_late_us, r.sum_late_us, r.n_late_over_1m)
+        for r in QUERIES["q133_out_of_order_audit"](spark, str(tmp_path)).collect()
+    }
+    assert got == {1: (12, 1, 120_000_000, 120_000_000, 1), 2: (12, 0, 0, 0, 0)}
+
+
 def test_table_checksum_detects_single_row_change(spark):
     import pandas as pd
 

@@ -14,7 +14,7 @@ from datasmith_spark.core.rules import STAGES
 from datasmith_spark.pipeline import run_pipeline
 from datasmith_spark.tables import TableLayer
 
-from .conftest import N_PARTS, cache_dir, spark_jobs
+from .conftest import N_PARTS, assert_frames_exact, cache_dir, spark_jobs
 
 
 def _labels_pdf(spark, out) -> pd.DataFrame:
@@ -487,3 +487,44 @@ def test_resume_over_spark_written_side_tables(spark, clips_path, tmp_path):
         for f in files:
             assert spark.read.parquet(f).schema.simpleString() == f"struct<{want[name]}>", f
         assert spark.read.parquet(f"{out}/{name}").schema.simpleString() == f"struct<{want[name]}>"
+
+
+def test_dirs_named_with_glob_characters(spark, clips_path, oracle_pdf, tmp_path):
+    """Input and out dirs whose names hold Hadoop glob characters (`in[1]`,
+    `local[4]-0`): the batch run labels exactly like the oracle and a rerun
+    reads the checkpoint log back and processes no part. Spark's file
+    source cannot read such an input dir, so the stream refuses it; it
+    drains the same clips from a plain dir into `local[4]-1`, labelling
+    every clip once."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from datasmith_spark.pipeline import LABEL_COLS
+    from datasmith_spark.streaming import run_streaming_pipeline
+
+    inp = tmp_path / "in[1]"
+    inp.mkdir()
+    for f in sorted(glob.glob(f"{clips_path}/part-*.parquet"))[:2]:
+        shutil.copy(f, inp)
+    ids = set(pq.read_table(inp, columns=["clip_id"])["clip_id"].to_pylist())
+    assert 0 < len(ids) < len(oracle_pdf)
+
+    out = str(tmp_path / "local[4]-0")
+    assert run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=str(inp))["n_labeled"] == len(ids)
+    got = (
+        TableLayer(out).read_unified(spark, "labels").select(*LABEL_COLS).toPandas()
+        .sort_values("clip_id").reset_index(drop=True)
+    )
+    want = oracle_pdf[oracle_pdf.clip_id.isin(ids)].sort_values("clip_id").reset_index(drop=True)
+    assert_frames_exact(got, want)
+    assert run_pipeline(spark, None, out, n_parts=N_PARTS, input_dir=str(inp))["parts_processed"] == 0
+
+    s_out = str(tmp_path / "local[4]-1")
+    with pytest.raises(ValueError, match="glob character"):
+        run_streaming_pipeline(spark, str(inp), s_out, n_parts=N_PARTS)
+    plain = tmp_path / "in1"
+    shutil.copytree(inp, plain)
+    run_streaming_pipeline(spark, str(plain), s_out, n_parts=N_PARTS)
+    lab = TableLayer(s_out).read_unified(spark, "labels").select("clip_id").toPandas()
+    assert len(lab) == len(ids) and set(lab.clip_id) == ids

@@ -215,6 +215,11 @@ class TestFusedQuality:
             eq(fused[c], rate[c], c)
         want_keep = vad["keep"] & spec["keep"] & rate["rate_keep"]
         eq(fused["keep"], want_keep, "keep")
+        # the composite keep is the AND of the lane columns, and it neither
+        # keeps nor drops every clip
+        lanes = fused.vad_keep & fused.snr_ok & ~fused.narrowband & fused.rate_keep & fused.ok
+        assert (fused.keep == lanes).all()
+        assert 0 < fused.keep.sum() < len(fused)
         clips.unpersist()
 
 
