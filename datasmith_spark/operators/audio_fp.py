@@ -3,8 +3,10 @@
 Flow (all shapes already proven by the text dedup families):
 
   1. fingerprint: Arrow-batched narrow map, one (clip_id, fp_key) row per
-     distinct k-gram key — embarrassingly parallel, no shuffle, audio bytes
-     never leave the worker on the fused-scan path.
+     distinct k-gram key — embarrassingly parallel, no shuffle. The queries
+     run it over the fused manifest scan (fingerprint_scan, audio bytes
+     never leave the worker); the streaming dedup runner feeds its
+     micro-batch DataFrames through fingerprint_clips.
   2. candidates: ONE self-join on the key through the shared hot-key cap
      (operators/pairs.py) — a viral clip re-uploaded thousands of times
      lands its keys in O(m) star pairs, never O(m^2).
@@ -130,8 +132,9 @@ def fingerprint_clips(
     kgram: int = FP_KGRAM,
     max_s: float = FP_MAX_S,
 ) -> DataFrame:
-    """(clip_id, fp_key) rows from a clips DataFrame (composable path; the
-    binary column crosses the JVM<->Python socket once on the way in)."""
+    """(clip_id, fp_key) rows from a clips DataFrame — the streaming dedup
+    runner's source (its micro-batches are DataFrames, not directories);
+    the binary column crosses the JVM<->Python socket once on the way in."""
     from collections.abc import Iterator
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -151,8 +154,8 @@ def fingerprint_scan(
     kgram: int = FP_KGRAM,
     max_s: float = FP_MAX_S,
 ) -> DataFrame:
-    """fingerprint_clips over a parquet directory via the fused manifest
-    scan (audio bytes never enter the JVM — q38's path). The stage is
+    """(clip_id, fp_key) rows over a parquet directory via the fused
+    manifest scan (audio bytes never enter the JVM — q38's path). The stage is
     dominated by the resample+FFT kernel (~0.1 s/clip) rather than file
     reads.
     """
@@ -180,25 +183,6 @@ def fingerprint_ints_scan(
         input_dir,
         lambda pdf: _fp_irows(pdf, every, aug_every, kgram, max_s),
         FP_IKEYS_DDL,
-    )
-
-
-def fingerprint_ints_clips(
-    clips: DataFrame,
-    every: int = 1,
-    aug_every: int = 0,
-    kgram: int = FP_IKGRAM,
-    max_s: float = FP_MAX_S,
-) -> DataFrame:
-    """fingerprint_ints_scan's composable-DataFrame twin (robust lane)."""
-    from collections.abc import Iterator
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _fp_irows(pdf, every, aug_every, kgram, max_s)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript").mapInPandas(
-        _run, schema=FP_IKEYS_DDL
     )
 
 

@@ -1,26 +1,22 @@
-"""Audio prep operators: sample-rate normalization + log-mel featurization.
+"""Audio prep, augmentation and quality operators over the clip table.
 
-Arrow-batched mapInPandas over the clip table (the same conditional-enrich
-shape as the decode stage, operators/scan_decode.py): bytes in, bytes or
-compact features out, nothing per-row in Python at the Spark level. The
-kernels live in core/resample.py and are shared with the tests' single-
-process oracles, so both sides move together.
-
-Two input paths, mirroring the pipeline's transfer-scan vs fused-scan split:
-
-  * resample_clips / logmel_features take a clips DataFrame — composable
-    with any upstream operator, but the binary column crosses the
-    JVM<->Python socket once on the way in.
-  * resample_digest_scan / logmel_digest_scan take a parquet directory and
-    read it worker-side via pyarrow (memory_map, bounded row-group
-    batches) — audio bytes never enter the JVM at all, so even a
-    default-heap session verifies the full table (q36/q37's path).
+Each per-clip operator is one per-batch pandas kernel (`_X_pdf`: bytes in,
+bytes or compact features out) run by ONE Spark source, `X_scan(spark,
+input_dir)` — scan_decode.manifest_scan, which reads the parquet directory
+worker-side via pyarrow (memory_map, bounded row-group batches) and hands
+each Arrow batch straight to the kernel: audio bytes never enter the JVM,
+so even a default-heap session verifies the full table. The DSP kernels
+live in core/ and are shared with the single-process fixture scripts, so
+both sides move together. The payload-producing kernels take digest=True
+in the scans (payload md5 instead of bytes — the queries' oracle
+compare); digest=False is the bytes reference the kernel tests check the
+digests against.
 
 At 100 TB these are embarrassingly parallel narrow maps — no shuffle, no
-cross-row state; the only knob is Arrow batch size
-(spark.sql.execution.arrow.maxRecordsPerBatch) against executor memory. The
-fused path is scan_decode.manifest_scan, which runs one task per core, up
-to one per file.
+cross-row state; manifest_scan runs one task per core, up to one per
+file. The two pairwise operators (mix_overlay_clips, xcorr_align_clips)
+join two clip DataFrames on a pair key; the corpus-level audits
+(transcript_reuse, the feature-statistics reduces) aggregate DataFrames.
 """
 
 from __future__ import annotations
@@ -59,31 +55,17 @@ from ..core.vad import (
 )
 from .scan_decode import manifest_scan
 
-RESAMPLED_DDL = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-    "transcript string, resample_ok boolean"
-)
-
 RESAMPLED_DIGEST_DDL = (
     "clip_id string, resample_ok boolean, sr_hz int, dur_ms int, payload_md5 string"
 )
 
-LOGMEL_DDL = "clip_id string, ok boolean, n_frames int, n_mels int, feats array<double>"
-
 LOGMEL_DIGEST_DDL = "clip_id string, ok boolean, n_frames int, n_mels int, feats_md5 string"
-
-MFCC_DDL = "clip_id string, ok boolean, n_frames int, n_coef int, feats array<double>"
 
 MFCC_DIGEST_DDL = "clip_id string, ok boolean, n_frames int, n_coef int, feats_md5 string"
 
 VAD_DDL = (
     "clip_id string, ok boolean, n_samples int, n_frames int, n_active int, "
     "trim_start_ms int, trim_end_ms int, n_clipped int, keep boolean"
-)
-
-TRIMMED_DDL = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-    "transcript string, trimmed boolean"
 )
 
 TRIMMED_DIGEST_DDL = (
@@ -104,20 +86,8 @@ RATE_DDL = (
 # within 0.01 dB of the conventional -1 dBFS headroom target
 NORM_TARGET_PEAK = 0.890625
 
-NORMALIZED_DDL = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-    "transcript string, normalized boolean"
-)
-
 NORMALIZED_DIGEST_DDL = (
     "clip_id string, normalized boolean, payload_md5 string"
-)
-
-QUALITY_DDL = (
-    "clip_id string, ok boolean, "
-    "n_samples int, n_frames int, n_active int, n_clipped int, vad_keep boolean, "
-    "n_harmonic int, snr_log2 int, snr_ok boolean, bw_hz int, narrowband boolean, "
-    "n_chars int, active_ms int, rate_keep boolean, keep boolean"
 )
 
 
@@ -478,44 +448,6 @@ def _trim_pdf(
     )
 
 
-def trim_clips(
-    clips: DataFrame,
-    frame_ms: int = FRAME_MS,
-    active_db: float = ACTIVE_DB,
-    digest: bool = False,
-) -> DataFrame:
-    """Silence-trim every decodable clip to its VAD-active span (lossless
-    byte cut in the original codec). Composable path; digest=True is the
-    verification mode (q44). Shuffle-free narrow map at any scale."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _trim_pdf(pdf, frame_ms, active_db, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=TRIMMED_DIGEST_DDL if digest else TRIMMED_DDL)
-
-
-def vad_clips(
-    clips: DataFrame, frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB
-) -> DataFrame:
-    """Per-clip voice-activity / trim / clipping quality metrics.
-
-    Arrow-batched mapInPandas over any clips-shaped DataFrame (composable
-    path). One output row per input row; keep is the composite audio-quality
-    rule (core/vad.py vad_keep). At 100 TB this is a shuffle-free narrow map,
-    ~1.5 passes over the decoded PCM per clip."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _vad_pdf(pdf, frame_ms, active_db)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=VAD_DDL
-    )
-
-
 def _normalize_pdf(
     pdf: pd.DataFrame, target_peak: float, digest: bool
 ) -> pd.DataFrame:
@@ -564,29 +496,6 @@ def _normalize_pdf(
             "normalized": normalized,
         }
     )
-
-
-def normalize_clips(
-    clips: DataFrame, target_peak: float = NORM_TARGET_PEAK, digest: bool = False
-) -> DataFrame:
-    """Peak-normalize every decodable clip to target_peak in its own codec
-    (composable path; digest=True is the verification mode, q50). Loudness
-    leveling is the standard prep step between ingest and featurization —
-    shuffle-free narrow map at any scale."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _normalize_pdf(pdf, target_peak, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=NORMALIZED_DIGEST_DDL if digest else NORMALIZED_DDL)
-
-
-SEGMENT_DDL = (
-    "clip_id string, seg_idx int, start_ms int, dur_ms int, ok boolean, "
-    "sr_hz int, codec string, bytes binary"
-)
 
 SEGMENT_DIGEST_DDL = (
     "clip_id string, seg_idx int, start_ms int, dur_ms int, ok boolean, "
@@ -674,37 +583,10 @@ def _segment_pdf(
     return pd.DataFrame(cols)
 
 
-def segment_clips(
-    clips: DataFrame,
-    seg_ms: int = 1000,
-    hop_ms: int = 500,
-    frame_ms: int = FRAME_MS,
-    active_db: float = ACTIVE_DB,
-    digest: bool = False,
-) -> DataFrame:
-    """Fixed-length training-window segmentation (composable path;
-    digest=True is the q55 verification mode). Row fan-out happens inside
-    the Arrow batch — shuffle-free narrow map regardless of the per-clip
-    segment count."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _segment_pdf(pdf, seg_ms, hop_ms, frame_ms, active_db, digest)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec").mapInPandas(
-        _run, schema=SEGMENT_DIGEST_DDL if digest else SEGMENT_DDL
-    )
-
-
 # Kaldi's standard 3-way speed-perturbation schedule: 0.9x / 1.0x / 1.1x,
 # expressed as exact integer rationals so the resample ratio (and therefore
 # the digests) carries no float rounding of the factor itself
 SPEED_FACTORS = ((9, 10), (10, 10), (11, 10))
-
-SPEED_DDL = (
-    "clip_id string, f_num int, f_den int, sp_ok boolean, sr_hz int, "
-    "dur_ms int, bytes binary, codec string, transcript string"
-)
 
 SPEED_DIGEST_DDL = (
     "clip_id string, f_num int, f_den int, sp_ok boolean, sr_hz int, "
@@ -773,35 +655,6 @@ def _speed_pdf(
         )
     return pd.DataFrame(cols)
 
-
-def speed_perturb_clips(
-    clips: DataFrame,
-    factors: tuple[tuple[int, int], ...] = SPEED_FACTORS,
-    codec_out: str = "pcm16",
-    digest: bool = False,
-) -> DataFrame:
-    """Speed-perturbation augmentation (composable path; digest=True is the
-    q54 verification mode). One input clip -> len(factors) output rows —
-    the mapInPandas row fan-out happens inside the Arrow batch, so the 3x
-    volume blowup never round-trips the driver and stays a shuffle-free
-    narrow map at any scale."""
-    if codec_out not in ITEMSIZE:
-        raise ValueError(f"unknown codec_out: {codec_out}")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _speed_pdf(pdf, factors, codec_out, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=SPEED_DIGEST_DDL if digest else SPEED_DDL)
-
-
-NOISED_DDL = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
-    "transcript string, augmented boolean"
-)
-
 NOISED_DIGEST_DDL = "clip_id string, augmented boolean, payload_md5 string"
 
 
@@ -850,21 +703,6 @@ def _noise_pdf(pdf: pd.DataFrame, snr_db: int, digest: bool) -> pd.DataFrame:
     )
 
 
-def noise_aug_clips(
-    clips: DataFrame, snr_db: int = 10, digest: bool = False
-) -> DataFrame:
-    """Noise augmentation (composable path; digest=True is the q63
-    verification mode). Shuffle-free narrow map."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _noise_pdf(pdf, snr_db, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=NOISED_DIGEST_DDL if digest else NOISED_DDL)
-
-
 # tempo-perturbation schedule: 0.9x / 1.1x (no identity lane — WSOLA's
 # overlap-add is not a bit-identity at rate 1, so the lane would be a
 # misleading "augmentation"; q54's identity lane already covers re-encode)
@@ -873,11 +711,6 @@ TEMPO_FACTORS = ((9, 10), (11, 10))
 TEMPO_DIGEST_DDL = (
     "clip_id string, f_num int, f_den int, tp_ok boolean, sr_hz int, "
     "dur_ms int, payload_md5 string"
-)
-
-TEMPO_DDL = (
-    "clip_id string, f_num int, f_den int, tp_ok boolean, sr_hz int, "
-    "dur_ms int, bytes binary, codec string, transcript string"
 )
 
 
@@ -945,187 +778,17 @@ def _tempo_pdf(
     return pd.DataFrame(cols)
 
 
-def tempo_perturb_clips(
-    clips: DataFrame,
-    factors: tuple[tuple[int, int], ...] = TEMPO_FACTORS,
-    codec_out: str = "pcm16",
-    digest: bool = False,
-) -> DataFrame:
-    """WSOLA tempo perturbation (composable path; digest=True is the q64
-    verification mode). Fan-out inside the Arrow batch; shuffle-free."""
-    if codec_out not in ITEMSIZE:
-        raise ValueError(f"unknown codec_out: {codec_out}")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _tempo_pdf(pdf, factors, codec_out, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=TEMPO_DIGEST_DDL if digest else TEMPO_DDL)
-
-
-def _quality_full_pdf(
-    pdf: pd.DataFrame, frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB
-) -> pd.DataFrame:
-    """One pandas batch of clips -> ALL audio-quality lanes in ONE decode:
-    time-domain VAD/clipping (q41 family), spectral SNR + bandwidth (q46),
-    speaking-rate cross-check (q47), and the composite keep (AND of the
-    three lane keeps). The fused form a continuous-ingest front door runs —
-    one decode + one framed-energy pass + one FFT pass per clip instead of
-    three scans. All emitted metrics integers/booleans (shared kernel
-    contracts), so results are bit-identical to the per-lane operators."""
-    out = {
-        "clip_id": pdf["clip_id"], "ok": [],
-        "n_samples": [], "n_frames": [], "n_active": [], "n_clipped": [],
-        "vad_keep": [], "n_harmonic": [], "snr_log2": [], "snr_ok": [],
-        "bw_hz": [], "narrowband": [], "n_chars": [], "active_ms": [],
-        "rate_keep": [], "keep": [],
-    }
-    for buf, sr, codec, tr in zip(
-        pdf["bytes"], pdf["sr_hz"], pdf["codec"], pdf["transcript"]
-    ):
-        sr = None if pd.isna(sr) else int(sr)
-        pcm = decode(buf, codec) if sr and sr > 0 else None
-        ok = pcm is not None
-        ns, nf, na, _, _, nc = vad_metrics(
-            pcm, sr if ok else 0, frame_ms=frame_ms, active_db=active_db
-        )
-        vk = vad_keep(ok, ns, nf, na, nc)
-        _, n_harm, snr_log2, snr_ok, bw_bin, narrow = spectral_metrics(pcm)
-        sk = ok and snr_ok and not narrow
-        n_chars = 0 if tr is None or pd.isna(tr) else len(str(tr).strip())
-        active_ms = na * frame_ms if ok else None
-        rk = speaking_rate_keep(n_chars, active_ms)
-        out["ok"].append(ok)
-        out["n_samples"].append(ns)
-        out["n_frames"].append(nf)
-        out["n_active"].append(na)
-        out["n_clipped"].append(nc)
-        out["vad_keep"].append(vk)
-        out["n_harmonic"].append(n_harm)
-        out["snr_log2"].append(snr_log2)
-        out["snr_ok"].append(snr_ok)
-        out["bw_hz"].append(bw_bin_to_hz(bw_bin, sr) if ok else None)
-        out["narrowband"].append(narrow)
-        out["n_chars"].append(n_chars)
-        out["active_ms"].append(active_ms)
-        out["rate_keep"].append(rk)
-        out["keep"].append(vk and sk and rk)
-    for c in ("n_samples", "n_frames", "n_active", "n_clipped", "n_harmonic",
-              "snr_log2", "bw_hz", "n_chars", "active_ms"):
-        out[c] = pd.array(out[c], dtype="Int32")
-    return pd.DataFrame(out)
-
-
-def audio_quality(
-    clips: DataFrame, frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB
-) -> DataFrame:
-    """All three audio-quality lanes (VAD, spectral, speaking-rate) fused
-    into one decode pass, plus the composite keep. A stateless
-    Arrow-batched mapInPandas: shuffle-free narrow map at any scale."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _quality_full_pdf(pdf, frame_ms, active_db)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "codec", "transcript"
-    ).mapInPandas(_run, schema=QUALITY_DDL)
-
-
-def spectral_quality(clips: DataFrame) -> DataFrame:
-    """Per-clip spectral SNR estimate + effective-bandwidth quality filter
-    (composable path). One output row per input row; keep is the composite
-    spectral rule. Shuffle-free narrow map at any scale — the FFT kernel is
-    the cost, ~1 pass over the decoded PCM per clip."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _spectral_pdf(pdf)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=SPECTRAL_DDL
-    )
-
-
-def speaking_rate(
-    clips: DataFrame, frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB
-) -> DataFrame:
-    """Per-clip transcript-vs-audio speaking-rate sanity filter (composable
-    path): implied characters-per-second over the VAD-active time must land
-    in the plausible window. The audio x transcript cross-check the
-    metadata-only length-ratio rule cannot make."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _rate_pdf(pdf, frame_ms, active_db)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec", "transcript").mapInPandas(
-        _run, schema=RATE_DDL
-    )
-
-
-def resample_clips(
-    clips: DataFrame, target_sr: int, mode: str = "sinc", codec_out: str = "pcm16",
-    digest: bool = False,
-) -> DataFrame:
-    """Normalize every decodable clip to target_sr, re-encoded as codec_out.
-
-    Undecodable rows pass through byte-identical with resample_ok=false —
-    the table stays complete for lineage; downstream filters decide.
-    Already-at-rate clips are still re-encoded to codec_out so the output
-    column is homogeneous (one codec) for training consumers.
-
-    digest=True replaces the payload column with its md5 computed in the
-    same pass — the verification mode (q36's oracle compare): the resampled
-    bytes never cross back over the JVM<->Python socket.
-    """
-    if codec_out not in ITEMSIZE:
-        raise ValueError(f"unknown codec_out: {codec_out}")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _resample_pdf(pdf, target_sr, mode, codec_out, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=RESAMPLED_DIGEST_DDL if digest else RESAMPLED_DDL)
-
-
-def logmel_features(
-    clips: DataFrame, n_fft: int = 512, hop: int = 256, n_mels: int = 40,
-    digest: bool = False,
-) -> DataFrame:
-    """Per-clip log-mel spectrogram, flattened row-major into one array.
-
-    One output row per input row: ok=false for undecodable payloads,
-    n_frames=0 for clips shorter than one FFT window. Flattening keeps the
-    Arrow transfer a single fixed-type list column; consumers reshape with
-    (n_frames, n_mels).
-
-    digest=True replaces the feature array with its bit-exact md5 (little-
-    endian float64 bytes) computed in the same pass — the verification mode
-    (q37's oracle compare) without shipping the arrays through Arrow.
-    """
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _logmel_pdf(pdf, n_fft, hop, n_mels, digest)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=LOGMEL_DIGEST_DDL if digest else LOGMEL_DDL
-    )
-
-
-# ----------------------------------------------------- fused manifest path
+# ------------------------------------------------------------- the scans
 
 def resample_digest_scan(
     spark: SparkSession, input_dir: str, target_sr: int,
     mode: str = "sinc", codec_out: str = "pcm16",
 ) -> DataFrame:
-    """resample_clips(digest=True) over a parquet directory via the fused
-    manifest scan — the verification path at any heap size (q36)."""
+    """Normalize every decodable clip to target_sr, re-encoded as codec_out,
+    and emit the payload md5 (q36). Undecodable rows pass through
+    byte-identical with resample_ok=false — the table stays complete for
+    lineage; already-at-rate clips are still re-encoded, so the output is
+    homogeneous (one codec)."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1138,8 +801,8 @@ def trim_digest_scan(
     spark: SparkSession, input_dir: str,
     frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB,
 ) -> DataFrame:
-    """trim_clips(digest=True) over a parquet directory via the fused
-    manifest scan — trimmed bytes never cross the JVM boundary (q44)."""
+    """Silence-trim every decodable clip to its VAD-active span (a lossless
+    byte cut in the original codec) and emit the payload md5 (q44)."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1152,8 +815,8 @@ def vad_trim_scan(
     spark: SparkSession, input_dir: str,
     frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB,
 ) -> DataFrame:
-    """vad_clips over a parquet directory via the fused manifest scan —
-    audio bytes never enter the JVM (q41's verification path). Kernel-bound
+    """Per-clip voice-activity / trim / clipping quality metrics (q41); keep
+    is the composite audio-quality rule (core/vad.py vad_keep). Kernel-bound
     (decode + one framed-energy pass)."""
     return manifest_scan(
         spark,
@@ -1165,9 +828,8 @@ def vad_trim_scan(
 
 
 def spectral_quality_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """spectral_quality over a parquet directory via the fused manifest scan
-    — audio bytes never enter the JVM (q46's verification path). FFT-kernel
-    bound."""
+    """Per-clip spectral SNR estimate + effective-bandwidth quality filter
+    (q46); keep is the composite spectral rule. FFT-kernel bound."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1181,9 +843,9 @@ def speaking_rate_scan(
     spark: SparkSession, input_dir: str,
     frame_ms: int = FRAME_MS, active_db: float = ACTIVE_DB,
 ) -> DataFrame:
-    """speaking_rate over a parquet directory via the fused manifest scan
-    (q47's verification path). Kernel-bound (decode + one framed-energy
-    pass)."""
+    """Per-clip transcript-vs-audio speaking-rate sanity filter (q47):
+    implied characters per second over the VAD-active time must land in
+    the plausible window. Kernel-bound (decode + one framed-energy pass)."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1196,8 +858,9 @@ def speaking_rate_scan(
 def normalize_digest_scan(
     spark: SparkSession, input_dir: str, target_peak: float = NORM_TARGET_PEAK
 ) -> DataFrame:
-    """normalize_clips(digest=True) over a parquet directory via the fused
-    manifest scan — normalized bytes never cross the JVM boundary (q50)."""
+    """Peak-normalize every decodable clip to target_peak in its own codec
+    and emit the payload md5 (q50) — the loudness-levelling step between
+    ingest and featurization."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1214,8 +877,9 @@ def segment_digest_scan(
     frame_ms: int = FRAME_MS,
     active_db: float = ACTIVE_DB,
 ) -> DataFrame:
-    """segment_clips(digest=True) over a parquet directory via the fused
-    manifest scan — segment bytes never cross the JVM boundary (q55)."""
+    """Fixed-length training-window segmentation (q55), one digest row per
+    segment. The row fan-out happens inside the batch, whatever the
+    per-clip segment count."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1230,9 +894,8 @@ def speed_digest_scan(
     factors: tuple[tuple[int, int], ...] = SPEED_FACTORS,
     codec_out: str = "pcm16",
 ) -> DataFrame:
-    """speed_perturb_clips(digest=True) over a parquet directory via the
-    fused manifest scan — augmented bytes never cross the JVM boundary
-    (q54); kernel-bound."""
+    """Speed-perturbation augmentation (q54): one input clip ->
+    len(factors) digest rows, fanned out inside the batch. Kernel-bound."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1245,8 +908,9 @@ def logmel_digest_scan(
     spark: SparkSession, input_dir: str,
     n_fft: int = 512, hop: int = 256, n_mels: int = 40,
 ) -> DataFrame:
-    """logmel_features(digest=True) over a parquet directory via the fused
-    manifest scan (q37)."""
+    """Per-clip log-mel spectrogram, emitted as the bit-exact md5 of its
+    little-endian float64 bytes (q37): ok=false for undecodable payloads,
+    n_frames=0 for clips shorter than one FFT window."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1255,32 +919,13 @@ def logmel_digest_scan(
     )
 
 
-def mfcc_features(
-    clips: DataFrame, n_fft: int = 512, hop: int = 256, n_mels: int = 40,
-    n_mfcc: int = 13, digest: bool = False,
-) -> DataFrame:
-    """MFCC + delta + delta-delta features (composable path; digest=True is
-    the q160 verification mode). The cepstral transform and both regression
-    deltas are per clip, so the fused logmel->DCT->delta chain needs no
-    corpus pass and stays a shuffle-free narrow map at any scale — the
-    classic ASR front-end lane next to q37 (log-mel) / q56 (CMVN) /
-    q57 (SpecAugment)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _mfcc_pdf(pdf, n_fft, hop, n_mels, n_mfcc, digest)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=MFCC_DIGEST_DDL if digest else MFCC_DDL
-    )
-
-
 def mfcc_digest_scan(
     spark: SparkSession, input_dir: str,
     n_fft: int = 512, hop: int = 256, n_mels: int = 40, n_mfcc: int = 13,
 ) -> DataFrame:
-    """mfcc_features(digest=True) over a parquet directory via the fused
-    manifest scan (q160) — FFT+DCT kernel bound like q36/q37."""
+    """MFCC + delta + delta-delta features as a digest (q160). The cepstral
+    transform and both regression deltas are per clip, so the chain needs
+    no corpus pass — FFT+DCT kernel bound like q36/q37."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1289,46 +934,11 @@ def mfcc_digest_scan(
     )
 
 
-def cmvn_features(
-    clips: DataFrame, n_fft: int = 512, hop: int = 256, n_mels: int = 40,
-    digest: bool = False,
-) -> DataFrame:
-    """Per-utterance-CMVN log-mel features (composable path; digest=True is
-    the q56 verification mode). The normalization is per clip, so the fused
-    logmel->cmvn chain needs no corpus pass and stays a shuffle-free narrow
-    map at any scale."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _cmvn_pdf(pdf, n_fft, hop, n_mels, digest)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=LOGMEL_DIGEST_DDL if digest else LOGMEL_DDL
-    )
-
-
-def specaug_features(
-    clips: DataFrame, n_fft: int = 512, hop: int = 256, n_mels: int = 40,
-    digest: bool = False,
-) -> DataFrame:
-    """SpecAugment-masked CMVN log-mel features (composable path;
-    digest=True is the q57 verification mode)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _specaug_pdf(pdf, n_fft, hop, n_mels, digest)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=LOGMEL_DIGEST_DDL if digest else LOGMEL_DDL
-    )
-
-
 def specaug_digest_scan(
     spark: SparkSession, input_dir: str,
     n_fft: int = 512, hop: int = 256, n_mels: int = 40,
 ) -> DataFrame:
-    """specaug_features(digest=True) over a parquet directory via the fused
-    manifest scan (q57)."""
+    """SpecAugment-masked CMVN log-mel features as a digest (q57)."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1340,8 +950,8 @@ def specaug_digest_scan(
 def noise_digest_scan(
     spark: SparkSession, input_dir: str, snr_db: int = 10
 ) -> DataFrame:
-    """noise_aug_clips(digest=True) over a parquet directory via the fused
-    manifest scan (q63)."""
+    """Additive-noise augmentation at an exact SNR, as payload digests
+    (q63)."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1356,8 +966,8 @@ def tempo_digest_scan(
     factors: tuple[tuple[int, int], ...] = TEMPO_FACTORS,
     codec_out: str = "pcm16",
 ) -> DataFrame:
-    """tempo_perturb_clips(digest=True) over a parquet directory via the
-    fused manifest scan (q64)."""
+    """WSOLA tempo perturbation (q64): len(factors) digest rows per clip,
+    fanned out inside the batch."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1371,11 +981,6 @@ PITCH_FACTORS = ((9, 8), (8, 9))  # ~+/-2 semitones
 PITCH_DIGEST_DDL = (
     "clip_id string, f_num int, f_den int, ps_ok boolean, sr_hz int, "
     "dur_ms int, payload_md5 string"
-)
-
-PITCH_DDL = (
-    "clip_id string, f_num int, f_den int, ps_ok boolean, sr_hz int, "
-    "dur_ms int, bytes binary, codec string, transcript string"
 )
 
 
@@ -1393,34 +998,14 @@ def _pitch_pdf(
     return out.rename(columns={"tp_ok": "ps_ok"})
 
 
-def pitch_perturb_clips(
-    clips: DataFrame,
-    factors: tuple[tuple[int, int], ...] = PITCH_FACTORS,
-    codec_out: str = "pcm16",
-    digest: bool = False,
-) -> DataFrame:
-    """Pitch perturbation (composable path; digest=True is the q84
-    verification mode). Fan-out inside the Arrow batch; shuffle-free."""
-    if codec_out not in ITEMSIZE:
-        raise ValueError(f"unknown codec_out: {codec_out}")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pitch_pdf(pdf, factors, codec_out, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=PITCH_DIGEST_DDL if digest else PITCH_DDL)
-
-
 def pitch_digest_scan(
     spark: SparkSession,
     input_dir: str,
     factors: tuple[tuple[int, int], ...] = PITCH_FACTORS,
     codec_out: str = "pcm16",
 ) -> DataFrame:
-    """pitch_perturb_clips(digest=True) over a parquet directory via the
-    fused manifest scan (q84)."""
+    """Pitch perturbation (q84): len(factors) digest rows per clip, fanned
+    out inside the batch."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1433,8 +1018,8 @@ def cmvn_digest_scan(
     spark: SparkSession, input_dir: str,
     n_fft: int = 512, hop: int = 256, n_mels: int = 40,
 ) -> DataFrame:
-    """cmvn_features(digest=True) over a parquet directory via the fused
-    manifest scan (q56)."""
+    """Per-utterance-CMVN log-mel features as a digest (q56). The
+    normalization is per clip, so the chain needs no corpus pass."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1443,7 +1028,6 @@ def cmvn_digest_scan(
     )
 
 
-REVERB_DDL = NOISED_DDL
 REVERB_DIGEST_DDL = NOISED_DIGEST_DDL
 
 
@@ -1495,26 +1079,10 @@ def _reverb_pdf(pdf: pd.DataFrame, tail_ms: int, digest: bool) -> pd.DataFrame:
     )
 
 
-def reverb_clips(
-    clips: DataFrame, tail_ms: int = 200, digest: bool = False
-) -> DataFrame:
-    """Reverberation augmentation (composable path; digest=True is the q71
-    verification mode). Shuffle-free narrow map."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _reverb_pdf(pdf, tail_ms, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=REVERB_DIGEST_DDL if digest else REVERB_DDL)
-
-
 def reverb_digest_scan(
     spark: SparkSession, input_dir: str, tail_ms: int = 200
 ) -> DataFrame:
-    """reverb_clips(digest=True) over a parquet directory via the fused
-    manifest scan (q71)."""
+    """Reverberation augmentation as payload digests (q71)."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1523,7 +1091,6 @@ def reverb_digest_scan(
     )
 
 
-TRANSCODE_DDL = NOISED_DDL.replace(", augmented boolean", ", transcoded boolean")
 TRANSCODE_DIGEST_DDL = "clip_id string, codec_out string, transcoded boolean, payload_md5 string"
 
 
@@ -1578,26 +1145,11 @@ def _transcode_pdf(pdf: pd.DataFrame, codec_out: str, digest: bool) -> pd.DataFr
     )
 
 
-def transcode_clips(
-    clips: DataFrame, codec_out: str = "pcm16", digest: bool = False
-) -> DataFrame:
-    """Codec normalization (composable path; digest=True is the q78
-    verification mode). Shuffle-free narrow map."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _transcode_pdf(pdf, codec_out, digest)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=TRANSCODE_DIGEST_DDL if digest else TRANSCODE_DDL)
-
-
 def transcode_digest_scan(
     spark: SparkSession, input_dir: str, codec_out: str = "pcm16"
 ) -> DataFrame:
-    """transcode_clips(digest=True) over a parquet directory via the fused
-    manifest scan (q78). Byte-bound (decode+requantize, no DSP kernel)."""
+    """Codec normalization as payload digests (q78). Byte-bound
+    (decode+requantize, no DSP kernel)."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1612,9 +1164,9 @@ AUG_ROUTE_DIGEST_DDL = "clip_id string, aug string, ok boolean, payload_md5 stri
 
 
 def default_aug_route(clip_id: str) -> int:
-    """crc32-based route for arbitrary clip ids (the composable default —
-    the q85 registration routes by datagen index instead so the fixture
-    oracle can reproduce the routing in SQL)."""
+    """crc32-based route for arbitrary clip ids (the default — the q85
+    registration routes by datagen index instead so the fixture oracle can
+    reproduce the routing in SQL)."""
     return zlib.crc32(clip_id.encode("utf-8")) % len(AUG_ROUTES)
 
 
@@ -1668,31 +1220,6 @@ def _aug_route_pdf(
     return pd.concat(parts, ignore_index=True)
 
 
-def augment_route_clips(
-    clips: DataFrame,
-    route_fn=default_aug_route,
-    snr_db: int = 10,
-    tail_ms: int = 200,
-    digest: bool = True,
-) -> DataFrame:
-    """Deterministic augmentation-policy router: each clip receives exactly
-    ONE of the five augmentations (noise/reverb/speed/tempo/pitch) chosen
-    by `route_fn(clip_id)` — the "augment a slice of the corpus, evenly
-    across policies" pattern a training-data pipeline runs, composed from
-    the five existing deterministic lanes. Digest mode only for now (the
-    payload mode of every lane stays available individually)."""
-    if not digest:
-        raise NotImplementedError("router emits digests; use the per-lane operators for payloads")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _aug_route_pdf(pdf, route_fn, snr_db, tail_ms)
-
-    return clips.select(
-        "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
-    ).mapInPandas(_run, schema=AUG_ROUTE_DIGEST_DDL)
-
-
 def augment_route_digest_scan(
     spark: SparkSession,
     input_dir: str,
@@ -1700,8 +1227,11 @@ def augment_route_digest_scan(
     snr_db: int = 10,
     tail_ms: int = 200,
 ) -> DataFrame:
-    """augment_route_clips over a parquet directory via the fused manifest
-    scan (q85) — one decode per clip, one kernel by route, digest out."""
+    """Deterministic augmentation-policy router (q85): each clip receives
+    exactly ONE of the five augmentations (noise/reverb/speed/tempo/pitch)
+    chosen by `route_fn(clip_id)` — the "augment a slice of the corpus,
+    evenly across policies" pattern, composed from the five deterministic
+    lanes. One decode per clip, one kernel by route, digest out."""
     return manifest_scan(
         spark,
         input_dir,
@@ -1951,7 +1481,7 @@ def xcorr_align_clips(
     return joined.mapInPandas(_run, schema=PAIR_ALIGN_DDL)
 
 
-PITCH_DDL = (
+PITCH_STATS_DDL = (
     "clip_id string, ok boolean, n_frames int, n_voiced int, voiced_pct int, "
     "med_lag int, f0_hz int"
 )
@@ -1988,28 +1518,15 @@ def _pitch_stats_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def pitch_stats_clips(clips: DataFrame) -> DataFrame:
-    """Per-clip autocorrelation pitch/voicing prosody statistics
-    (composable path) — the TTS-curation features next to VAD (q41) and
-    spectral quality (q46): voiced fraction, median F0 lag, integer Hz."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pitch_stats_pdf(pdf)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=PITCH_DDL
-    )
-
-
 def pitch_stats_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """pitch_stats_clips over a parquet directory via the fused manifest
-    scan (q164's path) — FFT-kernel bound."""
+    """Per-clip autocorrelation pitch/voicing prosody statistics (q164) —
+    the TTS-curation features next to VAD (q41) and spectral quality
+    (q46): voiced fraction, median F0 lag, integer Hz. FFT-kernel bound."""
     return manifest_scan(
         spark,
         input_dir,
         _pitch_stats_pdf,
-        PITCH_DDL,
+        PITCH_STATS_DDL,
         columns=["clip_id", "bytes", "sr_hz", "codec"],
     )
 
@@ -2026,7 +1543,7 @@ def _integrity_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     """One pandas batch of clips -> sample-integrity audit batch
     (core/integrity.integrity_metrics; all-integer metrics), plus planted
     corrupted co_ variants for every aug_every-th datagen clip (q166's
-    ground truth). The composable default (aug_every=0) accepts ARBITRARY
+    ground truth). The default (aug_every=0) accepts ARBITRARY
     clip ids — the q38-family contract."""
     from ..core.integrity import corrupted_variant, integrity_metrics
     from .audio_fp import clip_index
@@ -2061,24 +1578,9 @@ def _integrity_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     return df
 
 
-def integrity_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
-    """Per-clip sample-integrity audit (composable path): dropout /
-    stuck-sample run lengths and the rate-independent keep verdict — the
-    digital-artifact lane next to VAD (q41), spectral quality (q46), and
-    pitch (q164)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _integrity_pdf(pdf, aug_every)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=INTEG_DDL
-    )
-
-
 def integrity_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
-    """integrity_clips over a parquet directory via the fused manifest scan
-    (q166's path) — decode-bound."""
+    """Per-clip sample-integrity audit (q166): dropout / stuck-sample run
+    lengths and the rate-independent keep verdict. Decode-bound."""
     return manifest_scan(
         spark,
         input_dir,
@@ -2139,22 +1641,9 @@ def _quality_gate_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def quality_gate_clips(clips: DataFrame) -> DataFrame:
-    """Fused five-lane audio+text quality gate (composable path): the
-    one-stop keep decision with per-lane attribution, one decode per clip."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _quality_gate_pdf(pdf)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec", "transcript").mapInPandas(
-        _run, schema=GATE_DDL
-    )
-
-
 def quality_gate_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """quality_gate_clips over a parquet directory via the fused manifest
-    scan (q167's path): at 10^12 clips the decode pass is the dominant
+    """Fused five-lane audio+text quality gate (q167): the one-stop keep
+    decision with per-lane attribution. At 10^12 clips the decode pass is the dominant
     cost, and this operator pays it ONCE for five verdicts instead of five
     times — the fusion you actually run in production, with the per-lane
     queries (q41/q46/q47/q163/q166) as its audited components."""
@@ -2180,7 +1669,7 @@ def _electrical_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     (core/electrical.electrical_metrics: mains-hum band power + DC offset,
     integer log2 bands), plus planted el_ variants (50/60 Hz square hum at
     rms/2 + rms/8 offset) for every aug_every-th datagen clip — q170's
-    ground truth. The composable default (aug_every=0) accepts ARBITRARY
+    ground truth. The default (aug_every=0) accepts ARBITRARY
     clip ids — the q38-family contract."""
     from ..core.electrical import electrical_metrics, electrical_variant
     from .audio_fp import clip_index
@@ -2215,23 +1704,9 @@ def _electrical_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     return df
 
 
-def electrical_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
-    """Per-clip electrical-defect audit (composable path): mains-hum band
-    ratio and DC-offset verdicts — the recording-chain lane next to
-    integrity (q166), VAD (q41), and spectral quality (q46)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _electrical_pdf(pdf, aug_every)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=ELEC_DDL
-    )
-
-
 def electrical_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
-    """electrical_clips over a parquet directory via the fused manifest
-    scan (q170's path) — decode+FFT bound."""
+    """Per-clip electrical-defect audit (q170): mains-hum band ratio and
+    DC-offset verdicts. Decode+FFT bound."""
     return manifest_scan(
         spark,
         input_dir,
@@ -2256,7 +1731,7 @@ def _clipping_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     equality classes, integer run/fraction verdicts), plus planted cl_
     hard-clip variants (amplitude-relative 8x/16x power-of-two overdrive)
     for every aug_every-th datagen clip — q171's ground truth. The
-    composable default (aug_every=0) accepts ARBITRARY clip ids — the
+    default (aug_every=0) accepts ARBITRARY clip ids — the
     q38-family contract."""
     from ..core.clipping import clipping_metrics, clipping_variant
     from .audio_fp import clip_index
@@ -2287,24 +1762,10 @@ def _clipping_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     return df
 
 
-def clipping_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
-    """Per-clip clipping/saturation audit (composable path): exact
-    saturated-sample counts, flat-top run lengths and the two-axis keep
-    verdict — the amplitude-domain lane next to integrity (q166) and
-    electrical (q170)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _clipping_pdf(pdf, aug_every)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=CLIPA_DDL
-    )
-
-
 def clipping_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
-    """clipping_clips over a parquet directory via the fused manifest scan
-    (q171's path) — decode-bound."""
+    """Per-clip clipping/saturation audit (q171): exact saturated-sample
+    counts, flat-top run lengths and the two-axis keep verdict.
+    Decode-bound."""
     return manifest_scan(
         spark,
         input_dir,
@@ -2327,7 +1788,7 @@ def _bitdepth_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     (core/bitdepth.bitdepth_metrics: gcd of the decoded 16-bit-grid
     magnitudes, all-integer), plus planted bd_ bit-crush variants
     (id-hashed 6/4-bit power-of-two grids) for every aug_every-th datagen
-    clip — q172's ground truth. The composable default (aug_every=0)
+    clip — q172's ground truth. The default (aug_every=0)
     accepts ARBITRARY clip ids — the q38-family contract."""
     from ..core.bitdepth import bitdepth_metrics, bitdepth_variant
     from .audio_fp import clip_index
@@ -2359,23 +1820,9 @@ def _bitdepth_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     return df
 
 
-def bitdepth_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
-    """Per-clip effective-bit-depth audit (composable path): decoded-grid
-    gcd, measured vs nominal depth and the fraud verdict — the resolution-
-    domain lane next to clipping (q171) and spectral bandwidth (q46)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _bitdepth_pdf(pdf, aug_every)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=BITD_DDL
-    )
-
-
 def bitdepth_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
-    """bitdepth_clips over a parquet directory via the fused manifest scan
-    (q172's path) — decode-bound."""
+    """Per-clip effective-bit-depth audit (q172): decoded-grid gcd,
+    measured vs nominal depth and the fraud verdict. Decode-bound."""
     return manifest_scan(
         spark,
         input_dir,
@@ -2398,7 +1845,7 @@ def _looping_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     (core/looping.looping_metrics: exact k-fold tiling equality, all-
     integer), plus planted lp_ tiled variants (id-hashed k in {2,3,4})
     for every aug_every-th datagen clip — q173's ground truth. The
-    composable default (aug_every=0) accepts ARBITRARY clip ids — the
+    default (aug_every=0) accepts ARBITRARY clip ids — the
     q38-family contract."""
     from ..core.looping import looping_metrics, looping_variant
     from .audio_fp import clip_index
@@ -2428,23 +1875,9 @@ def _looping_pdf(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     return df
 
 
-def looping_clips(clips: DataFrame, aug_every: int = 0) -> DataFrame:
-    """Per-clip looped-content audit (composable path): exact k-fold
-    tiling detection — the within-clip structural-duplication lane next
-    to the cross-clip dedup families (q38/q157) and integrity (q166)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _looping_pdf(pdf, aug_every)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=LOOPA_DDL
-    )
-
-
 def looping_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
-    """looping_clips over a parquet directory via the fused manifest scan
-    (q173's path) — decode-bound."""
+    """Per-clip looped-content audit (q173): exact k-fold tiling detection.
+    Decode-bound."""
     return manifest_scan(
         spark,
         input_dir,
@@ -2506,22 +1939,9 @@ def _defect_gate_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def defect_gate_clips(clips: DataFrame) -> DataFrame:
-    """Per-clip fused defect gate (composable path): five sample-domain
-    audits off one decode, with first-failing-lane attribution."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _defect_gate_pdf(pdf)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "codec").mapInPandas(
-        _run, schema=DEFECT_DDL
-    )
-
-
 def defect_gate_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """defect_gate_clips over a parquet directory via the fused manifest
-    scan (q174's path) — one decode+FFT pass for all five lanes."""
+    """Fused five-lane defect gate (q174): five sample-domain audits off one
+    decode, with first-failing-lane attribution."""
     return manifest_scan(
         spark,
         input_dir,

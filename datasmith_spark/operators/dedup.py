@@ -390,18 +390,6 @@ def simhash_candidate_pairs(
     return pairs.select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
 
 
-def word_token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct word-token set per document: (id, tok).
-
-    Whitespace tokenization of the trimmed text — the unit the exact
-    set-similarity join operates on (1-shingles; shingles() covers n>1).
-    """
-    return docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))).alias("tok"),
-    ).filter(F.col("tok") != "")
-
-
 def prefix_filter_pairs(
     items: DataFrame,
     threshold_num: int = 7,
@@ -413,8 +401,7 @@ def prefix_filter_pairs(
     (the AllPairs / PPJoin candidate-generation family) — returns every pair
     of ids whose ITEM SETS have Jaccard >= threshold_num/threshold_den, with
     no false negatives. `items` is any distinct (id, item) set relation —
-    word_token_sets() for 1-grams, shingles() for n-grams, or an arbitrary
-    feature-set table.
+    shingles() for n-grams, or an arbitrary feature-set table.
 
     This is the lossless counterpart of the MinHash-LSH path: LSH trades
     recall for speed probabilistically; prefix filtering keeps exactness and

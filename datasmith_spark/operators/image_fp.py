@@ -6,10 +6,11 @@ matrix (text: MinHash/SimHash/winnowing/spans; audio: Haitsma-Kalker exact
 
 Flow — the proven three-stage shape:
 
-  1. hash: Arrow-batched narrow map decoding each image worker-side
-     (PNG/JPEG/rgb8 via the shared pure-python codecs; bytes never enter
-     the JVM on the fused-scan path) and emitting the 64-bit dHash as four
-     16-bit bands (core/image_fp.py — integer-exact end to end).
+  1. hash: image_hash_scan, a narrow map over the fused manifest scan
+     decoding each image worker-side (PNG/JPEG/rgb8 via the shared
+     pure-python codecs; image bytes never enter the JVM) and emitting the
+     64-bit dHash as four 16-bit bands (core/image_fp.py — integer-exact
+     end to end).
   2. candidates: ids sharing ANY band, via the shared hot-key-capped band
      join (operators/pairs.py) — a meme re-uploaded a million times costs
      O(m) star pairs, never O(m^2).
@@ -75,7 +76,7 @@ def _hash_rows(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
         ids.append(iid)
         bands.append(bs)
         # The datagen index is a test-harness concern (planting ground-truth
-        # duplicates); the composable default (aug_every=0) must accept
+        # duplicates); the default (aug_every=0) must accept
         # arbitrary image ids, so only parse when planting is on — the same
         # contract as audio_fp._fp_rows_generic.
         if aug_every and _img_index(iid) % aug_every == 0:
@@ -92,24 +93,10 @@ def _hash_rows(pdf: pd.DataFrame, aug_every: int) -> pd.DataFrame:
     )
 
 
-def image_hashes(images: DataFrame, aug_every: int = 0) -> DataFrame:
-    """(img_id, b0..b3) dHash rows from an images DataFrame (composable
-    path; image bytes cross the JVM<->Python socket once on the way in)."""
-    from collections.abc import Iterator
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _hash_rows(pdf, aug_every)
-
-    from .multimodal import IMAGE_COLUMNS
-
-    return images.select(*IMAGE_COLUMNS).mapInPandas(_run, schema=IMG_HASH_DDL)
-
-
 def image_hash_scan(spark: SparkSession, input_dir: str, aug_every: int = 0) -> DataFrame:
-    """image_hashes over a parquet directory via the fused manifest scan
-    (image bytes never enter the JVM). The pure-python codecs are the
-    kernel."""
+    """(img_id, b0..b3) dHash rows over a parquet directory of images via
+    the fused manifest scan (image bytes never enter the JVM). The
+    pure-python codecs are the kernel."""
     from .multimodal import IMAGE_COLUMNS
 
     return manifest_scan(

@@ -6,7 +6,9 @@ frame-aligned fingerprint lanes (operators/audio_fp.py q38/q40). Flow:
 
   1. landmarks: Arrow-batched narrow map, one (clip_id, lm_hash, t) row per
      distinct landmark hash occurrence — embarrassingly parallel, no
-     shuffle; on the fused-scan path audio bytes never leave the worker.
+     shuffle. The queries run it over the fused manifest scan
+     (landmark_scan, audio bytes never leave the worker); the streaming
+     dedup runner feeds its micro-batch DataFrames through landmark_clips.
   2. match: ONE self-join on the integer hash (hot hashes excluded — see
      landmark_match), then a GROUP BY (a, b, dt = t_b - t_a) vote count.
      Because the planted delays sweep every sub-hop PHASE, a duplicate's
@@ -144,8 +146,9 @@ def _lm_rows(pdf: pd.DataFrame, every: int, aug_every: int) -> pd.DataFrame:
 
 
 def landmark_clips(clips: DataFrame, every: int = 1, aug_every: int = 0) -> DataFrame:
-    """(clip_id, lm_hash, t) rows from a clips DataFrame (composable path;
-    the binary column crosses the JVM<->Python socket once on the way in)."""
+    """(clip_id, lm_hash, t) rows from a clips DataFrame — the streaming
+    dedup runner's source; the binary column crosses the JVM<->Python
+    socket once on the way in."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -159,8 +162,8 @@ def landmark_clips(clips: DataFrame, every: int = 1, aug_every: int = 0) -> Data
 def landmark_scan(
     spark: SparkSession, input_dir: str, every: int = 1, aug_every: int = 0
 ) -> DataFrame:
-    """landmark_clips over a parquet directory via the fused manifest scan
-    (audio bytes never enter the JVM — q157's path). Kernel-bound like the
+    """(clip_id, lm_hash, t) rows over a parquet directory via the fused
+    manifest scan (audio bytes never enter the JVM — q157's path). Kernel-bound like the
     fingerprint scans (resample+FFT dominates reads)."""
     return manifest_scan(spark, input_dir, lambda pdf: _lm_rows(pdf, every, aug_every), LM_KEYS_DDL)
 
@@ -210,24 +213,11 @@ def _lm_noise_rows(pdf: pd.DataFrame, every: int, aug_every: int) -> pd.DataFram
     )
 
 
-def landmark_noise_clips(clips: DataFrame, every: int = 1, aug_every: int = 0) -> DataFrame:
-    """(clip_id, lm_hash, t) rows with noisy nz_ plants from a clips
-    DataFrame (composable path)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _lm_noise_rows(pdf, every, aug_every)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript").mapInPandas(
-        _run, schema=LM_KEYS_DDL
-    )
-
-
 def landmark_noise_scan(
     spark: SparkSession, input_dir: str, every: int = 1, aug_every: int = 0
 ) -> DataFrame:
-    """landmark_noise_clips over a parquet directory via the fused manifest
-    scan (q161's path) — kernel-bound."""
+    """(clip_id, lm_hash, t) rows with noisy nz_ plants over a parquet
+    directory via the fused manifest scan (q161's path) — kernel-bound."""
     return manifest_scan(
         spark,
         input_dir,

@@ -4,7 +4,8 @@ and the robustness-matrix context).
 
 Flow (the q38 candidate/verify split, with the verify fully JVM-side):
 
-  1. signature: Arrow-batched narrow map, ONE row per clip carrying its
+  1. signature: tone_signature_scan, a narrow map over the fused manifest
+     scan (audio bytes never enter the JVM), ONE row per clip carrying its
      tiny sorted tonal-peak array (clip_id, peaks, k) — at 10^12 clips
      this is the cheapest signature in the engine (a few ints per clip).
   2. candidates: melt in-scope signatures (2 <= k <= SS_MAXK) to
@@ -28,8 +29,6 @@ no UDF, no floats.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -88,23 +87,11 @@ def _sig_rows(pdf: pd.DataFrame, every: int, aug_every: int) -> pd.DataFrame:
     )
 
 
-def tone_signature_clips(clips: DataFrame, every: int = 1, aug_every: int = 0) -> DataFrame:
-    """(clip_id, peaks, k) signature rows from a clips DataFrame."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _sig_rows(pdf, every, aug_every)
-
-    return clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript").mapInPandas(
-        _run, schema=SS_SIG_DDL
-    )
-
-
 def tone_signature_scan(
     spark: SparkSession, input_dir: str, every: int = 1, aug_every: int = 0
 ) -> DataFrame:
-    """tone_signature_clips over a parquet directory via the fused manifest
-    scan (audio bytes never enter the JVM)."""
+    """(clip_id, peaks, k) signature rows over a parquet directory via the
+    fused manifest scan (audio bytes never enter the JVM)."""
     return manifest_scan(spark, input_dir, lambda pdf: _sig_rows(pdf, every, aug_every), SS_SIG_DDL)
 
 

@@ -3833,8 +3833,8 @@ def q85_augment_router(spark, sf_dir):
     exactly ONE of the five augmentation lanes — additive noise (q63),
     reverberation (q71), speed 1.1x (q54), tempo 1.1x (q64), or pitch
     +2 st (q84) — selected per clip, here by datagen index % 5 so the
-    oracle can reproduce the routing (the composable operator defaults to
-    crc32(clip_id) % 5 for arbitrary ids). This is the "augment the corpus
+    oracle can reproduce the routing (augment_route_digest_scan defaults
+    to crc32(clip_id) % 5 for arbitrary ids). This is the "augment the corpus
     evenly across policies" pass a training pipeline runs before export:
     one decode per clip, one kernel by route, ONE fused shuffle-free scan
     — never five passes over the bytes.
@@ -3842,7 +3842,7 @@ def q85_augment_router(spark, sf_dir):
     The oracle is assembled entirely from the five lanes' OWN committed
     fixtures (union of route-filtered selects) — no new fixture, so this
     query value-checks that the router composes the lanes bit-for-bit with
-    their standalone forms (operators/audio_ops.py augment_route_clips)."""
+    their standalone forms (operators/audio_ops.py _aug_route_pdf)."""
     from .operators.audio_ops import augment_route_digest_scan
 
     return augment_route_digest_scan(

@@ -1,8 +1,9 @@
 """Materialize the single-process audio-ops oracle as a committed parquet
 fixture (fixtures/oracle_audio_ops_n{N}.parquet) for q36/q37.
 
-Why: resample_clips / logmel_features run numeric kernels DuckDB cannot
-re-express — but their outputs are deterministic functions of the pinned
+Why: resample_digest_scan / logmel_digest_scan run numeric kernels
+(audio_ops._resample_pdf / _logmel_pdf) DuckDB cannot re-express — but
+their outputs are deterministic functions of the pinned
 clips table (seed=42, row index), so a single-process pass can record a
 bit-exact digest per clip (md5 of the resampled payload bytes; md5 of the
 float64 log-mel array) that the driver's DuckDB oracle reads back while the

@@ -5,9 +5,10 @@ Usage:
       --input synth:100000 --out .data/out/run1 --parts 64
   python scripts/run_pipeline.py --input /path/to/clips_parquet --out ...
 
---input accepts either a parquet path of clips
-(clip_id, bytes, sr_hz, dur_ms, codec, transcript) or "synth:N" to generate
-the deterministic synthetic table inline. Re-running with the same --out
+--input accepts either a parquet directory of clips
+(clip_id, bytes, sr_hz, dur_ms, codec, transcript), read worker-side by the
+fused manifest scan, or "synth:N" to generate the deterministic synthetic
+table inline. Re-running with the same --out
 resumes from partition checkpoints; --force recomputes everything.
 """
 
@@ -29,10 +30,6 @@ def main() -> None:
     ap.add_argument("--force", action="store_true", help="bypass checkpoints (recompute all)")
     ap.add_argument("--cores", default=None, help="local[N] cores (default: env/all)")
     ap.add_argument(
-        "--transfer-scan", action="store_true",
-        help="scan clips through the JVM instead of the fused manifest scan",
-    )
-    ap.add_argument(
         "--no-fingerprint", action="store_true",
         help="skip the per-part input-fingerprint pre-scan (trust checkpoints by part id)",
     )
@@ -53,10 +50,8 @@ def main() -> None:
     clips, input_dir = None, None
     if args.input.startswith("synth:"):
         clips = datagen.clips_df(spark, int(args.input.split(":", 1)[1]))
-    elif args.transfer_scan:
-        clips = spark.read.parquet(args.input)
     else:
-        input_dir = args.input  # fused manifest scan (default for parquet input)
+        input_dir = args.input  # parquet input: the fused manifest scan
 
     stats = run_pipeline(
         spark, clips, args.out, n_parts=args.parts, force=args.force, input_dir=input_dir,

@@ -82,6 +82,18 @@ def oracle_pdf(clips_pdf) -> pd.DataFrame:
     return df
 
 
+def write_rows(tmp_path, pdf: pd.DataFrame) -> str:
+    """Write a pandas frame of clip (or image) rows as one parquet file in a
+    fresh directory under tmp_path; returns the directory, the input a
+    `*_scan` operator reads."""
+    import tempfile
+
+    d = tempfile.mkdtemp(dir=tmp_path)
+    pdf = pdf.astype({c: "Int32" for c in ("sr_hz", "dur_ms") if c in pdf})
+    pdf.to_parquet(os.path.join(d, "part-0.parquet"), index=False)
+    return d
+
+
 def assert_frames_exact(lab: pd.DataFrame, ora: pd.DataFrame) -> None:
     """Column-by-column exact comparison (floats bitwise, arrays elementwise)."""
     import numpy as np

@@ -14,7 +14,7 @@ from datasmith_spark.core.audio_fp import (
     fp_keys,
 )
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _tone(sr: int, secs: float, f: float = 523.0, seed: int = 11) -> np.ndarray:
@@ -167,15 +167,15 @@ class TestBallLane:
     2-gram keys — must catch the mu-law companding class the exact-key
     lane (q38) documents as out of reach, with no false pairs."""
 
-    def test_mulaw_dup_caught_by_ball_lane_missed_by_exact_lane(self, spark):
+    def test_mulaw_dup_caught_by_ball_lane_missed_by_exact_lane(self, spark, tmp_path):
         import pandas as pd
 
         from datasmith_spark.core.audio_fp import aug_mulaw_variant
         from datasmith_spark.operators.audio_fp import (
             audio_neardup_pairs,
             audio_neardup_pairs_hamming,
-            fingerprint_clips,
-            fingerprint_ints_clips,
+            fingerprint_ints_scan,
+            fingerprint_scan,
         )
 
         x = _tone(16000, 3.0)
@@ -194,15 +194,15 @@ class TestBallLane:
                 "transcript": "",
             }
         )
-        clips = spark.createDataFrame(pdf)
-        got = audio_neardup_pairs_hamming(fingerprint_ints_clips(clips)).toPandas()
+        path = write_rows(tmp_path, pdf)
+        got = audio_neardup_pairs_hamming(fingerprint_ints_scan(spark, path)).toPandas()
         found = {tuple(sorted((a, b))) for a, b in zip(got.clip_a, got.clip_b)}
         assert ("mulaw-reupload", "s3://bucket/original.wav") in found
         assert all("unrelated" not in p for p in found)
         # the exact-key lane misses the companded copy — that asymmetry IS
         # the reason the ball lane exists; if this starts passing, the
         # division of labor documented in core/audio_fp.py is stale
-        exact = audio_neardup_pairs(fingerprint_clips(clips)).toPandas()
+        exact = audio_neardup_pairs(fingerprint_scan(spark, path)).toPandas()
         pairs = {tuple(sorted((a, b))) for a, b in zip(exact.clip_a, exact.clip_b)}
         assert ("mulaw-reupload", "s3://bucket/original.wav") not in pairs
 

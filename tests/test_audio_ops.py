@@ -1,14 +1,17 @@
-"""Sample-rate conversion + log-mel kernels and their Spark operators."""
+"""Sample-rate conversion + log-mel kernels and their Spark scans."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from datasmith_spark.core.audio import decode, snr_db
 from datasmith_spark.core.resample import logmel, mel_filterbank, resample
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _sine(freq: float, sr: int, sec: float = 0.5) -> np.ndarray:
@@ -98,16 +101,18 @@ class TestLogmelKernel:
 
 class TestSparkOperators:
     @pytest.fixture(scope="class")
-    def clips(self, spark):
-        from datasmith_spark.datagen import clips_df
+    def clips(self, tmp_path_factory):
+        from datasmith_spark.datagen import clips_pdf
 
-        return clips_df(spark, 120, n_partitions=4).cache()
+        pdf = clips_pdf(120)
+        return pdf, write_rows(tmp_path_factory.mktemp("clips"), pdf)
 
     def test_resample_clips(self, spark, clips):
-        from datasmith_spark.operators.audio_ops import resample_clips
+        from datasmith_spark.operators.audio_ops import _resample_pdf, resample_digest_scan
 
-        out = resample_clips(clips, 16000).toPandas().set_index("clip_id")
-        src = clips.toPandas().set_index("clip_id")
+        pdf, path = clips
+        out = _resample_pdf(pdf, 16000, "sinc", "pcm16", False).set_index("clip_id")
+        src = pdf.set_index("clip_id")
         assert len(out) == len(src)
         ok = out[out.resample_ok]
         assert len(ok) > 0
@@ -120,39 +125,42 @@ class TestSparkOperators:
         bad = out[~out.resample_ok]
         for cid, row in bad.iterrows():
             assert row.bytes == src.loc[cid].bytes
+        # the Spark scan emits the digests of exactly these payloads
+        dig = resample_digest_scan(spark, path, 16000).toPandas().set_index("clip_id")
+        assert len(dig) == len(out)
+        assert (dig.resample_ok == out.resample_ok.loc[dig.index]).all()
+        for cid, row in out.iterrows():
+            want = None if row.bytes is None else hashlib.md5(row.bytes).hexdigest()
+            assert dig.loc[cid].payload_md5 == want, cid
 
-    def test_resample_preserves_content(self, spark, clips):
-        from datasmith_spark.operators.audio_ops import resample_clips
+    def test_resample_preserves_content(self, clips):
+        from datasmith_spark.operators.audio_ops import _resample_pdf
 
-        src = clips.toPandas()
+        src, _ = clips
         srow = next(
             r for _, r in src.iterrows()
             if decode(r.bytes, r.codec) is not None
             and r.sr_hz in (44100, 48000)
             and decode(r.bytes, r.codec).size > 4096
         )
-        out = (
-            resample_clips(clips, 16000)
-            .filter(f"clip_id = '{srow.clip_id}'")
-            .toPandas()
-            .iloc[0]
-        )
+        one = src[src.clip_id == srow.clip_id]
+        out = _resample_pdf(one, 16000, "sinc", "pcm16", False).iloc[0]
         got = decode(out.bytes, "pcm16")
         ref = resample(decode(srow.bytes, srow.codec), int(srow.sr_hz), 16000)
         # pcm16 re-quantization is the only loss; SNR far above the 30 dB gate
         assert snr_db(ref, got) >= 40.0
 
     def test_logmel_features(self, spark, clips):
-        from datasmith_spark.operators.audio_ops import logmel_features
+        from datasmith_spark.operators.audio_ops import _logmel_pdf, logmel_digest_scan
 
-        out = logmel_features(clips, n_fft=256, hop=128, n_mels=24).toPandas()
-        assert len(out) == clips.count()
+        src, path = clips
+        out = _logmel_pdf(src, 256, 128, 24, False)
+        assert len(out) == len(src)
         ok = out[out.ok]
         assert len(ok) > 0
         for _, row in ok.iterrows():
             assert len(row.feats) == row.n_frames * row.n_mels
         # a known row matches the kernel exactly
-        src = clips.toPandas()
         srow = next(r for _, r in src.iterrows() if decode(r.bytes, r.codec) is not None)
         ref = logmel(decode(srow.bytes, srow.codec), int(srow.sr_hz), n_fft=256, hop=128, n_mels=24)
         got = np.asarray(
@@ -160,21 +168,26 @@ class TestSparkOperators:
         ).reshape(-1, 24)
         assert got.shape == ref.shape
         np.testing.assert_allclose(got, ref, rtol=0, atol=1e-12)
+        # the Spark scan emits the digests of exactly these arrays
+        dig = (
+            logmel_digest_scan(spark, path, n_fft=256, hop=128, n_mels=24)
+            .toPandas().sort_values("clip_id").reset_index(drop=True)
+        )
+        want = _logmel_pdf(src, 256, 128, 24, True).sort_values("clip_id").reset_index(drop=True)
+        pd.testing.assert_frame_equal(dig, want, check_dtype=False)
 
 
 class TestFixtureAndDigests:
     @pytest.fixture(scope="class")
-    def clips(self, spark):
-        from datasmith_spark.datagen import clips_df
+    def clips(self):
+        from datasmith_spark.datagen import clips_pdf
 
-        return clips_df(spark, 120, n_partitions=4).cache()
+        return clips_pdf(120)
 
     def test_audio_ops_fixture_is_honest(self):
         """The committed audio-ops fixture (q36/q37 DuckDB oracle input)
         must equal a fresh regeneration on a deterministic row sample."""
         import sys
-
-        import pandas as pd
 
         sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_ops_fixture as maf
@@ -189,13 +202,11 @@ class TestFixtureAndDigests:
             b = fresh[c].astype("object").where(fresh[c].notna(), "<null>").astype(str)
             assert (a == b).all(), c
 
-    def test_logmel_digest_mode_matches_array_mode(self, spark, clips):
-        import hashlib
+    def test_logmel_digest_mode_matches_array_mode(self, clips):
+        from datasmith_spark.operators.audio_ops import _logmel_pdf
 
-        from datasmith_spark.operators.audio_ops import logmel_features
-
-        arr = logmel_features(clips).toPandas().set_index("clip_id")
-        dig = logmel_features(clips, digest=True).toPandas().set_index("clip_id")
+        arr = _logmel_pdf(clips, 512, 256, 40, False).set_index("clip_id")
+        dig = _logmel_pdf(clips, 512, 256, 40, True).set_index("clip_id")
         assert (arr[["ok", "n_frames", "n_mels"]] == dig[["ok", "n_frames", "n_mels"]]).all().all()
         for cid, row in arr.iterrows():
             want = hashlib.md5(
@@ -209,13 +220,11 @@ class TestFixtureAndDigests:
         for name in ("q36_resample_clips", "q37_logmel_features"):
             assert name in QUERIES and name in ORACLE_SQL
 
-    def test_resample_digest_mode_matches_bytes_mode(self, spark, clips):
-        import hashlib
+    def test_resample_digest_mode_matches_bytes_mode(self, clips):
+        from datasmith_spark.operators.audio_ops import _resample_pdf
 
-        from datasmith_spark.operators.audio_ops import resample_clips
-
-        full = resample_clips(clips, 16000).toPandas().set_index("clip_id")
-        dig = resample_clips(clips, 16000, digest=True).toPandas().set_index("clip_id")
+        full = _resample_pdf(clips, 16000, "sinc", "pcm16", False).set_index("clip_id")
+        dig = _resample_pdf(clips, 16000, "sinc", "pcm16", True).set_index("clip_id")
         assert (full["resample_ok"] == dig["resample_ok"]).all()
         for cid, row in full.iterrows():
             want = None if row.bytes is None else hashlib.md5(row.bytes).hexdigest()

@@ -15,7 +15,7 @@ from datasmith_spark.core.bitdepth import (
     bitdepth_variant,
 )
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _tone(sr: int = 16000, sec: float = 1.0, f: float = 211.0, amp: float = 0.5):
@@ -87,8 +87,8 @@ class TestKernel:
 
 
 class TestOperator:
-    def test_arbitrary_ids_and_planting(self, spark):
-        from datasmith_spark.operators.audio_ops import bitdepth_clips
+    def test_arbitrary_ids_and_planting(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import bitdepth_scan
 
         clean = _tone(sec=0.5)
         bad = bitdepth_variant(clean, "float32", "u-1")
@@ -97,18 +97,18 @@ class TestOperator:
             ("u-1", encode(bad, "float32"), 16000, "float32"),
             ("broken", b"\x07\x01\x02", None, "float32"),
         ]
-        df = spark.createDataFrame(rows, "clip_id string, bytes binary, sr_hz int, codec string")
-        out = {r.clip_id: r for r in bitdepth_clips(df).collect()}
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=["clip_id", "bytes", "sr_hz", "codec"]))
+        out = {r.clip_id: r for r in bitdepth_scan(spark, path).collect()}
         assert out["s3://b/t rack.wav"].keep and out["s3://b/t rack.wav"].eff_bits == 16
         assert not out["u-1"].keep and out["u-1"].depth_fraud
         assert not out["broken"].ok and out["broken"].keep
 
-    def test_plants_recovered_zero_base_flags(self, spark):
+    def test_plants_recovered_zero_base_flags(self, spark, tmp_path):
         from datasmith_spark import datagen
-        from datasmith_spark.operators.audio_ops import bitdepth_clips
+        from datasmith_spark.operators.audio_ops import bitdepth_scan
 
-        clips = datagen.clips_df(spark, 200, n_partitions=4)
-        got = bitdepth_clips(clips, aug_every=40).toPandas()
+        path = write_rows(tmp_path, datagen.clips_pdf(200))
+        got = bitdepth_scan(spark, path, aug_every=40).toPandas()
         plants = got[got.clip_id.str.startswith("bd_")]
         base = got[~got.clip_id.str.startswith("bd_")]
         assert len(plants) >= 2 and plants.depth_fraud.all()

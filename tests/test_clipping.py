@@ -17,7 +17,7 @@ from datasmith_spark.core.clipping import (
     clipping_variant,
 )
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _tone(sr: int = 16000, sec: float = 1.0, f: float = 211.0, amp: float = 0.5):
@@ -109,8 +109,8 @@ class TestKernel:
 
 
 class TestOperator:
-    def test_arbitrary_ids_and_planting(self, spark):
-        from datasmith_spark.operators.audio_ops import clipping_clips
+    def test_arbitrary_ids_and_planting(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import clipping_scan
 
         clean = _tone(sec=0.5)
         bad = clipping_variant(clean, "pcm16", "u-1")
@@ -119,18 +119,18 @@ class TestOperator:
             ("u-1", encode(bad, "pcm16"), 16000, "pcm16"),
             ("broken", b"\x07", None, "pcm16"),
         ]
-        df = spark.createDataFrame(rows, "clip_id string, bytes binary, sr_hz int, codec string")
-        out = {r.clip_id: r for r in clipping_clips(df).collect()}
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=["clip_id", "bytes", "sr_hz", "codec"]))
+        out = {r.clip_id: r for r in clipping_scan(spark, path).collect()}
         assert out["s3://b/t rack.wav"].keep
         assert not out["u-1"].keep and out["u-1"].clipped
         assert not out["broken"].ok and out["broken"].keep
 
-    def test_plants_recovered_zero_base_flags(self, spark):
+    def test_plants_recovered_zero_base_flags(self, spark, tmp_path):
         from datasmith_spark import datagen
-        from datasmith_spark.operators.audio_ops import clipping_clips
+        from datasmith_spark.operators.audio_ops import clipping_scan
 
-        clips = datagen.clips_df(spark, 200, n_partitions=4)
-        got = clipping_clips(clips, aug_every=40).toPandas()
+        path = write_rows(tmp_path, datagen.clips_pdf(200))
+        got = clipping_scan(spark, path, aug_every=40).toPandas()
         plants = got[got.clip_id.str.startswith("cl_")]
         base = got[~got.clip_id.str.startswith("cl_")]
         assert len(plants) >= 3 and plants.clipped.all() and (~plants.keep).all()

@@ -1,15 +1,18 @@
 """Fused five-lane defect gate (q174): one-decode fusion matches the five
-standalone lanes, attribution order, arbitrary ids."""
+standalone lane scans, attribution order, arbitrary ids."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from datasmith_spark.core.audio import encode
 from datasmith_spark.core.clipping import clipping_variant
 from datasmith_spark.core.electrical import electrical_variant
 from datasmith_spark.core.looping import looping_variant
-from datasmith_spark.operators.audio_ops import DEFECT_LANES, defect_gate_clips
+from datasmith_spark.operators.audio_ops import DEFECT_LANES, defect_gate_scan
+
+from .conftest import write_rows
 
 
 def _noisy(n: int = 16000, seed: int = 7) -> np.ndarray:
@@ -17,7 +20,7 @@ def _noisy(n: int = 16000, seed: int = 7) -> np.ndarray:
     return 0.4 * np.sin(np.arange(n) / 9.0) + 0.01 * rng.standard_normal(n)
 
 
-def test_fused_gate_lanes_attribution_and_edges(spark):
+def test_fused_gate_lanes_attribution_and_edges(spark, tmp_path):
     x = _noisy()
     rows = [
         ("clean id, any shape", encode(x, "pcm16"), 16000, "pcm16"),
@@ -26,8 +29,8 @@ def test_fused_gate_lanes_attribution_and_edges(spark):
         ("looped", encode(looping_variant(x, "looped"), "pcm16"), 16000, "pcm16"),
         ("broken", b"\x07", None, "pcm16"),
     ]
-    df = spark.createDataFrame(rows, "clip_id string, bytes binary, sr_hz int, codec string")
-    out = {r.clip_id: r for r in defect_gate_clips(df).collect()}
+    path = write_rows(tmp_path, pd.DataFrame(rows, columns=["clip_id", "bytes", "sr_hz", "codec"]))
+    out = {r.clip_id: r for r in defect_gate_scan(spark, path).collect()}
 
     clean = out["clean id, any shape"]
     assert clean.keep and clean.drop_lane is None
@@ -43,24 +46,15 @@ def test_fused_gate_lanes_attribution_and_edges(spark):
     assert all(getattr(broken, f"{l}_keep") for l in DEFECT_LANES)
 
 
-def test_fused_matches_standalone_lanes(spark):
+def test_fused_matches_standalone_lanes(spark, tmp_path):
     from datasmith_spark import datagen
-    from datasmith_spark.operators.audio_ops import (
-        bitdepth_clips,
-        clipping_clips,
-        electrical_clips,
-        integrity_clips,
-        looping_clips,
-    )
+    from datasmith_spark.operators import audio_ops
 
-    clips = datagen.clips_df(spark, 120, n_partitions=4)
-    fused = defect_gate_clips(clips).toPandas().set_index("clip_id")
+    path = write_rows(tmp_path, datagen.clips_pdf(120))
+    fused = defect_gate_scan(spark, path).toPandas().set_index("clip_id")
     standalone = {
-        "integrity": integrity_clips(clips).toPandas().set_index("clip_id"),
-        "electrical": electrical_clips(clips).toPandas().set_index("clip_id"),
-        "clipping": clipping_clips(clips).toPandas().set_index("clip_id"),
-        "bitdepth": bitdepth_clips(clips).toPandas().set_index("clip_id"),
-        "looping": looping_clips(clips).toPandas().set_index("clip_id"),
+        lane: getattr(audio_ops, f"{lane}_scan")(spark, path).toPandas().set_index("clip_id")
+        for lane in DEFECT_LANES
     }
     for cid, row in fused.iterrows():
         for lane, lane_df in standalone.items():

@@ -16,7 +16,7 @@ from datasmith_spark.core.image_fp import (
 )
 from datasmith_spark.operators.multimodal import decode_image, synth_image_record
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _img(i: int) -> np.ndarray:
@@ -65,8 +65,8 @@ class TestDhashKernel:
 
 
 class TestImageNeardupSpark:
-    def test_planted_variants_recovered_arbitrary_ids(self, spark):
-        from datasmith_spark.operators.image_fp import image_hashes, image_neardup_pairs
+    def test_planted_variants_recovered_arbitrary_ids(self, spark, tmp_path):
+        from datasmith_spark.operators.image_fp import image_hash_scan, image_neardup_pairs
 
         base = [_img(i) for i in range(6)]
         rows = [(f"s3://imgs/photo-{i}.raw", im.tobytes()) for i, im in enumerate(base)]
@@ -82,16 +82,15 @@ class TestImageNeardupSpark:
                 "fmt": "rgb8",
             }
         )
-        images = spark.createDataFrame(pdf)
-        pairs = image_neardup_pairs(image_hashes(images)).collect()
+        pairs = image_neardup_pairs(image_hash_scan(spark, write_rows(tmp_path, pdf))).collect()
         got = {tuple(sorted((r.img_a, r.img_b))) for r in pairs}
         assert ("reupload/a", "s3://imgs/photo-0.raw") in got
         assert ("reupload/b", "s3://imgs/photo-3.raw") in got
         assert len(got) == 2  # no false pairs among 6 unrelated noise images
         assert all(r.hamming <= DH_MAX_HAMMING for r in pairs)
 
-    def test_undecodable_rows_skip_not_crash(self, spark):
-        from datasmith_spark.operators.image_fp import image_hashes
+    def test_undecodable_rows_skip_not_crash(self, spark, tmp_path):
+        from datasmith_spark.operators.image_fp import image_hash_scan
 
         pdf = pd.DataFrame(
             {
@@ -102,7 +101,7 @@ class TestImageNeardupSpark:
                 "fmt": ["rgb8", "png"],
             }
         )
-        out = image_hashes(spark.createDataFrame(pdf)).collect()
+        out = image_hash_scan(spark, write_rows(tmp_path, pdf)).collect()
         assert [r.img_id for r in out] == ["ok"]
 
 

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from datasmith_spark.core.audio import encode
 from datasmith_spark.tables import TableLayer
 
+from .conftest import write_rows
+
 
 @pytest.fixture()
 def ns(spark, tmp_path):
@@ -271,10 +273,10 @@ class TestIncrementalImageDedup:
     store: cross-batch recall of an exposure-variant re-upload, re-ingest
     flags everything as seen, store grows by novel images only."""
 
-    def _hashes(self, spark, imgs):
+    def _hashes(self, spark, tmp_path, imgs):
         import pandas as pd
 
-        from datasmith_spark.operators.image_fp import image_hashes
+        from datasmith_spark.operators.image_fp import image_hash_scan
 
         pdf = pd.DataFrame(
             {
@@ -285,9 +287,9 @@ class TestIncrementalImageDedup:
                 "fmt": "rgb8",
             }
         )
-        return image_hashes(spark.createDataFrame(pdf))
+        return image_hash_scan(spark, write_rows(tmp_path, pdf))
 
-    def test_cross_batch_recall_and_store_growth(self, spark, ns):
+    def test_cross_batch_recall_and_store_growth(self, spark, ns, tmp_path):
         from datasmith_spark.core.image_fp import aug_exposure_variant
         from datasmith_spark.operators.image_fp import ingest_image_batch
 
@@ -300,7 +302,7 @@ class TestIncrementalImageDedup:
         items = list(base.items())
 
         # batch 1: ten originals -> store init, no pairs
-        h1 = self._hashes(spark, items)
+        h1 = self._hashes(spark, tmp_path, items)
         pairs, n_novel, n_dup = ingest_image_batch(spark, tl, "imgstore", h1)
         assert (n_novel, n_dup) == (10, 0) and pairs.count() == 0
 
@@ -311,7 +313,7 @@ class TestIncrementalImageDedup:
             ("web/img-new-b.png", rng.integers(0, 256, (24, 32, 3), dtype=np.uint8)),
         ]
         pairs2, n_novel2, n_dup2 = ingest_image_batch(
-            spark, tl, "imgstore", self._hashes(spark, b2)
+            spark, tl, "imgstore", self._hashes(spark, tmp_path, b2)
         )
         got = [(r["batch_id"], r["seen_id"]) for r in pairs2.collect()]
         assert got == [("reupload/variant", "web/img-3.png")]
@@ -326,7 +328,7 @@ class TestIncrementalImageDedup:
 
         # re-ingest batch 2 wholesale: all three now flagged seen, no growth
         pairs3, n_novel3, n_dup3 = ingest_image_batch(
-            spark, tl, "imgstore", self._hashes(spark, b2)
+            spark, tl, "imgstore", self._hashes(spark, tmp_path, b2)
         )
         assert n_novel3 == 0 and n_dup3 == 3
         assert tl.read(spark, "imgstore").count() == 48

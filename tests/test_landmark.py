@@ -22,7 +22,7 @@ from datasmith_spark.core.landmark import (
     spectrogram16,
 )
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _sig(secs: float = 2.0, seed: int = 11) -> np.ndarray:
@@ -408,12 +408,12 @@ class TestNoiseLane:
     the UNCHANGED landmark match (noisy_variant16 plants at 30 dB SNR)."""
 
     @pytest.fixture(scope="class")
-    def matched(self, spark):
+    def matched(self, spark, tmp_path_factory):
         from datasmith_spark import datagen
-        from datasmith_spark.operators.landmark import landmark_match, landmark_noise_clips
+        from datasmith_spark.operators.landmark import landmark_match, landmark_noise_scan
 
-        clips = datagen.clips_df(spark, 240, n_partitions=4)
-        keys = landmark_noise_clips(clips, every=2, aug_every=40)
+        path = write_rows(tmp_path_factory.mktemp("clips"), datagen.clips_pdf(240))
+        keys = landmark_noise_scan(spark, path, every=2, aug_every=40)
         return landmark_match(keys).toPandas(), keys.toPandas()
 
     def test_planted_noisy_dups_recovered_aligned(self, matched):
@@ -452,11 +452,11 @@ class TestNoiseLane:
         assert 29.0 <= snr <= 31.0, snr
         assert noisy_variant16(np.zeros(16000), "abc") is None  # silent input
 
-    def test_arbitrary_ids_composable(self, spark):
-        """Composable default (every=1, aug_every=0) must accept real-world
-        ids; with aug on and sampled ids, nz_ plants pair with sources."""
+    def test_arbitrary_ids_composable(self, spark, tmp_path):
+        """The default (every=1, aug_every=0) must accept real-world ids;
+        with aug on and sampled ids, nz_ plants pair with sources."""
         from datasmith_spark.core.landmark import noisy_variant16
-        from datasmith_spark.operators.landmark import landmark_match, landmark_noise_clips
+        from datasmith_spark.operators.landmark import landmark_match, landmark_noise_scan
 
         x = _sig(secs=3.0)
         noisy = noisy_variant16(x, "any-key")
@@ -474,7 +474,7 @@ class TestNoiseLane:
                 "transcript": "",
             }
         )
-        keys = landmark_noise_clips(spark.createDataFrame(pdf))
+        keys = landmark_noise_scan(spark, write_rows(tmp_path, pdf))
         got = landmark_match(keys).toPandas()
         rows = {(a, b): dt for a, b, dt in zip(got.clip_a, got.clip_b, got.est_dt)}
         assert ("UUID-1234-noisy", "s3://b/episode 7.flac") in rows

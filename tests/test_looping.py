@@ -14,7 +14,7 @@ from datasmith_spark.core.looping import (
     looping_variant,
 )
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _noisy(n: int = 16000, seed: int = 7) -> np.ndarray:
@@ -69,8 +69,8 @@ class TestKernel:
 
 
 class TestOperator:
-    def test_arbitrary_ids_and_planting(self, spark):
-        from datasmith_spark.operators.audio_ops import looping_clips
+    def test_arbitrary_ids_and_planting(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import looping_scan
 
         clean = _noisy(8000)
         bad = looping_variant(clean, "u-1")
@@ -79,18 +79,18 @@ class TestOperator:
             ("u-1", encode(bad, "float32"), 16000, "float32"),
             ("broken", b"\x07", None, "float32"),
         ]
-        df = spark.createDataFrame(rows, "clip_id string, bytes binary, sr_hz int, codec string")
-        out = {r.clip_id: r for r in looping_clips(df).collect()}
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=["clip_id", "bytes", "sr_hz", "codec"]))
+        out = {r.clip_id: r for r in looping_scan(spark, path).collect()}
         assert out["s3://b/t rack.wav"].keep
         assert not out["u-1"].keep and out["u-1"].looped
         assert not out["broken"].ok and out["broken"].keep
 
-    def test_plants_recovered_zero_base_flags(self, spark):
+    def test_plants_recovered_zero_base_flags(self, spark, tmp_path):
         from datasmith_spark import datagen
-        from datasmith_spark.operators.audio_ops import looping_clips
+        from datasmith_spark.operators.audio_ops import looping_scan
 
-        clips = datagen.clips_df(spark, 200, n_partitions=4)
-        got = looping_clips(clips, aug_every=40).toPandas()
+        path = write_rows(tmp_path, datagen.clips_pdf(200))
+        got = looping_scan(spark, path, aug_every=40).toPandas()
         plants = got[got.clip_id.str.startswith("lp_")]
         base = got[~got.clip_id.str.startswith("lp_")]
         assert len(plants) >= 3 and plants.looped.all() and (~plants.keep).all()

@@ -1,15 +1,16 @@
-"""MFCC + regression-delta kernel and its Spark operator (q160)."""
+"""MFCC + regression-delta kernel and its Spark scan (q160)."""
 
 from __future__ import annotations
 
 import hashlib
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from datasmith_spark.core.resample import _dct_basis, delta, logmel, mfcc
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _sine(freq: float, sr: int, sec: float = 0.5) -> np.ndarray:
@@ -62,16 +63,19 @@ class TestMfccKernel:
 
 class TestMfccOperator:
     @pytest.fixture(scope="class")
-    def clips(self, spark):
-        from datasmith_spark.datagen import clips_df
+    def clips(self, tmp_path_factory):
+        from datasmith_spark.datagen import clips_pdf
 
-        return clips_df(spark, 120, n_partitions=4).cache()
+        pdf = clips_pdf(120)
+        return pdf, write_rows(tmp_path_factory.mktemp("clips"), pdf)
 
     def test_digest_mode_matches_array_mode(self, spark, clips):
-        from datasmith_spark.operators.audio_ops import mfcc_features
+        """The scan's digests are the md5s of the kernel's feature arrays."""
+        from datasmith_spark.operators.audio_ops import _mfcc_pdf, mfcc_digest_scan
 
-        arr = mfcc_features(clips).toPandas().set_index("clip_id")
-        dig = mfcc_features(clips, digest=True).toPandas().set_index("clip_id")
+        pdf, path = clips
+        arr = _mfcc_pdf(pdf, 512, 256, 40, 13, False).set_index("clip_id")
+        dig = mfcc_digest_scan(spark, path).toPandas().set_index("clip_id").loc[arr.index]
         assert (arr[["ok", "n_frames", "n_coef"]] == dig[["ok", "n_frames", "n_coef"]]).all().all()
         for cid, row in arr.iterrows():
             want = hashlib.md5(
@@ -79,20 +83,21 @@ class TestMfccOperator:
             ).hexdigest()
             assert dig.loc[cid].feats_md5 == want
 
-    def test_arbitrary_ids(self, spark):
-        """The composable path must accept real-world clip ids (the r4
-        audio_fp lesson): no datagen naming assumption anywhere."""
+    def test_arbitrary_ids(self, spark, tmp_path):
+        """The scan must accept real-world clip ids (the r4 audio_fp
+        lesson): no datagen naming assumption anywhere."""
         from datasmith_spark.core.audio import encode
-        from datasmith_spark.operators.audio_ops import mfcc_features
+        from datasmith_spark.operators.audio_ops import mfcc_digest_scan
+        from datasmith_spark.operators.scan_decode import CLIP_COLUMNS
 
         pcm = _sine(440, 16000, 0.2)
         rows = [
-            ("s3://bucket/a b/clip.flac", encode(pcm, "pcm16"), 16000, "pcm16"),
-            ("no-suffix", encode(pcm, "pcm16"), 16000, "pcm16"),
-            ("bad", b"\x00\x01", None, "pcm16"),
+            ("s3://bucket/a b/clip.flac", encode(pcm, "pcm16"), 16000, 200, "pcm16", ""),
+            ("no-suffix", encode(pcm, "pcm16"), 16000, 200, "pcm16", ""),
+            ("bad", b"\x00\x01", None, None, "pcm16", ""),
         ]
-        df = spark.createDataFrame(rows, "clip_id string, bytes binary, sr_hz int, codec string")
-        out = {r.clip_id: r for r in mfcc_features(df).collect()}
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=CLIP_COLUMNS))
+        out = {r.clip_id: r for r in mfcc_digest_scan(spark, path).collect()}
         assert out["s3://bucket/a b/clip.flac"].ok and out["no-suffix"].ok
         assert not out["bad"].ok and out["bad"].n_frames == 0
 
@@ -100,8 +105,6 @@ class TestMfccOperator:
         """The committed MFCC fixture (q160's DuckDB oracle input) must
         equal a fresh regeneration on a deterministic row sample."""
         import sys
-
-        import pandas as pd
 
         sys.path.insert(0, f"{REPO}/scripts")
         import make_audio_mfcc_fixture as mmf

@@ -1,4 +1,4 @@
-"""Autocorrelation pitch/voicing kernel and its Spark operator (q164)."""
+"""Autocorrelation pitch/voicing kernel and its Spark scan (q164)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import pytest
 from datasmith_spark.core.audio import encode
 from datasmith_spark.core.pitch import PITCH_SR, frame_lags16, pitch_stats
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _tone(f0: float, sr: int = 16000, sec: float = 1.0, amp: float = 0.4) -> np.ndarray:
@@ -61,16 +61,16 @@ class TestKernel:
 
 
 class TestOperator:
-    def test_arbitrary_ids_and_undecodable(self, spark):
-        from datasmith_spark.operators.audio_ops import pitch_stats_clips
+    def test_arbitrary_ids_and_undecodable(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import pitch_stats_scan
 
         rows = [
             ("s3://b/voice memo.wav", encode(_tone(125, sec=0.5), "pcm16"), 16000, "pcm16"),
             ("no-suffix", encode(_tone(200, sec=0.5), "pcm16"), 16000, "pcm16"),
             ("bad", b"\x00\x01", None, "pcm16"),
         ]
-        df = spark.createDataFrame(rows, "clip_id string, bytes binary, sr_hz int, codec string")
-        out = {r.clip_id: r for r in pitch_stats_clips(df).collect()}
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=["clip_id", "bytes", "sr_hz", "codec"]))
+        out = {r.clip_id: r for r in pitch_stats_scan(spark, path).collect()}
         assert out["s3://b/voice memo.wav"].ok and out["s3://b/voice memo.wav"].f0_hz == 125
         assert out["no-suffix"].f0_hz == 200
         assert not out["bad"].ok and out["bad"].n_frames == 0

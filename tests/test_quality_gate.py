@@ -1,5 +1,5 @@
 """Fused five-lane quality gate (q167): per-lane agreement with the
-standalone operators, conjunction semantics, arbitrary ids."""
+standalone lanes, conjunction semantics, arbitrary ids."""
 
 from __future__ import annotations
 
@@ -9,32 +9,46 @@ import pytest
 
 from datasmith_spark.core.audio import encode
 
+from .conftest import write_rows
+
 
 class TestQualityGate:
     @pytest.fixture(scope="class")
-    def gate(self, spark):
+    def gate(self, spark, tmp_path_factory):
         from datasmith_spark import datagen
-        from datasmith_spark.operators.audio_ops import quality_gate_clips
+        from datasmith_spark.operators.audio_ops import quality_gate_scan
 
-        clips = datagen.clips_df(spark, 160, n_partitions=4).cache()
-        return clips, quality_gate_clips(clips).toPandas().set_index("clip_id")
+        path = write_rows(tmp_path_factory.mktemp("clips"), datagen.clips_pdf(160))
+        return path, quality_gate_scan(spark, path).toPandas().set_index("clip_id")
 
     def test_lanes_agree_with_standalone_operators(self, spark, gate):
         """Fusion must not change a single verdict: each lane column equals
-        the standalone operator's output on the same clips."""
+        the standalone lane's output on the same clips."""
         from datasmith_spark.core.vad import Q41_ACTIVE_DB
-        from datasmith_spark.operators.audio_ops import integrity_clips, vad_clips
+        from datasmith_spark.operators.audio_ops import (
+            integrity_scan,
+            spectral_quality_scan,
+            speaking_rate_scan,
+            vad_trim_scan,
+        )
         from datasmith_spark.operators.text_analysis import transcript_compressibility
 
-        clips, g = gate
+        path, g = gate
         vad = {
             r.clip_id: r.keep
-            for r in vad_clips(clips, active_db=Q41_ACTIVE_DB).collect()
+            for r in vad_trim_scan(spark, path, active_db=Q41_ACTIVE_DB).collect()
         }
-        integ = {r.clip_id: r.keep for r in integrity_clips(clips).collect()}
-        text = {r.clip_id: r.keep for r in transcript_compressibility(clips).collect()}
+        spec = {r.clip_id: r.keep for r in spectral_quality_scan(spark, path).collect()}
+        rate = {r.clip_id: r.rate_keep for r in speaking_rate_scan(spark, path).collect()}
+        integ = {r.clip_id: r.keep for r in integrity_scan(spark, path).collect()}
+        text = {
+            r.clip_id: r.keep
+            for r in transcript_compressibility(spark.read.parquet(path)).collect()
+        }
         for cid, row in g.iterrows():
             assert row.vad_keep == vad[cid], cid
+            assert row.spectral_keep == spec[cid], cid
+            assert row.rate_keep == rate[cid], cid
             assert row.integrity_keep == (integ[cid] if row.ok else False), cid
             assert row.text_keep == text[cid], cid
 
@@ -46,9 +60,11 @@ class TestQualityGate:
         )
         assert (g.keep == want).all()
         assert (~g.loc[~g.ok, "keep"]).all()
+        # the gate neither keeps nor drops every clip
+        assert 0 < g.keep.sum() < len(g)
 
-    def test_arbitrary_ids(self, spark):
-        from datasmith_spark.operators.audio_ops import quality_gate_clips
+    def test_arbitrary_ids(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import quality_gate_scan
 
         t = np.arange(16000) / 16000.0
         x = 0.5 * np.sin(2 * np.pi * 440 * t)
@@ -57,10 +73,8 @@ class TestQualityGate:
              "a perfectly ordinary transcript with plenty of words to pass"),
             ("broken", b"\x01", None, "pcm16", "whatever"),
         ]
-        df = spark.createDataFrame(
-            rows, "clip_id string, bytes binary, sr_hz int, codec string, transcript string"
-        )
-        got = {r.clip_id: r for r in quality_gate_clips(df).collect()}
+        pdf = pd.DataFrame(rows, columns=["clip_id", "bytes", "sr_hz", "codec", "transcript"])
+        got = {r.clip_id: r for r in quality_gate_scan(spark, write_rows(tmp_path, pdf)).collect()}
         assert got["s3://b/x y.wav"].ok
         assert not got["broken"].ok and not got["broken"].keep
 

@@ -20,7 +20,7 @@ from datasmith_spark.core.specsig import (
     tone_peaks16,
 )
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _tones(freqs, secs=3.0, seed=11, noise=0.03):
@@ -112,15 +112,15 @@ class TestKernel:
 
 class TestSparkRecall:
     @pytest.fixture(scope="class")
-    def pairs(self, spark):
+    def pairs(self, spark, tmp_path_factory):
         from datasmith_spark import datagen
         from datasmith_spark.operators.specsig import (
             speed_neardup_pairs,
-            tone_signature_clips,
+            tone_signature_scan,
         )
 
-        clips = datagen.clips_df(spark, 240, n_partitions=4)
-        sigs = tone_signature_clips(clips, every=2, aug_every=40)
+        path = write_rows(tmp_path_factory.mktemp("clips"), datagen.clips_pdf(240))
+        sigs = tone_signature_scan(spark, path, every=2, aug_every=40)
         return speed_neardup_pairs(sigs).toPandas(), sigs.toPandas()
 
     def test_in_scope_plants_recovered_with_rate(self, pairs):
@@ -148,10 +148,10 @@ class TestSparkRecall:
             assert str(got[c].dtype) == "int32", (c, got[c].dtype)
         assert ((got.k_a >= 2) & (got.k_a <= SS_MAXK)).all()
 
-    def test_verify_is_jvm_side_and_no_nested_loop(self, spark):
+    def test_verify_is_jvm_side_and_no_nested_loop(self, spark, tmp_path):
         from datasmith_spark.operators.specsig import (
             speed_neardup_pairs,
-            tone_signature_clips,
+            tone_signature_scan,
         )
 
         pdf = pd.DataFrame(
@@ -164,7 +164,7 @@ class TestSparkRecall:
                 "transcript": [""],
             }
         )
-        sigs = tone_signature_clips(spark.createDataFrame(pdf))
+        sigs = tone_signature_scan(spark, write_rows(tmp_path, pdf))
         plan = (
             speed_neardup_pairs(sigs)._jdf.queryExecution().executedPlan().toString()
         )
@@ -174,10 +174,10 @@ class TestSparkRecall:
         # Python stage is the signature mapInPandas scan itself
         assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") <= 2, plan
 
-    def test_arbitrary_ids_composable(self, spark):
+    def test_arbitrary_ids_composable(self, spark, tmp_path):
         from datasmith_spark.operators.specsig import (
             speed_neardup_pairs,
-            tone_signature_clips,
+            tone_signature_scan,
         )
 
         x = _tones([(470.0, 0.6), (1240.0, 0.4)])
@@ -197,7 +197,7 @@ class TestSparkRecall:
             }
         )
         got = speed_neardup_pairs(
-            tone_signature_clips(spark.createDataFrame(pdf))
+            tone_signature_scan(spark, write_rows(tmp_path, pdf))
         ).toPandas()
         found = {tuple(sorted((a, b))) for a, b in zip(got.clip_a, got.clip_b)}
         assert ("UUID-11aa", "s3://bucket/song.flac") in found

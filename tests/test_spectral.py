@@ -1,4 +1,4 @@
-"""Spectral SNR / effective-bandwidth kernel + Spark operators (q46/q47)."""
+"""Spectral SNR / effective-bandwidth kernel + Spark scans (q46/q47)."""
 
 from __future__ import annotations
 
@@ -18,7 +18,9 @@ from datasmith_spark.core.spectral import (
     spectral_metrics,
 )
 
-from .conftest import REPO
+from datasmith_spark.operators.scan_decode import CLIP_COLUMNS
+
+from .conftest import REPO, write_rows
 
 
 def _tone(sr: int, secs: float, freq: float, amp: float = 0.5) -> np.ndarray:
@@ -89,17 +91,19 @@ class TestSpectralKernel:
 
 class TestSpectralSpark:
     @pytest.fixture(scope="class")
-    def clips(self, spark):
-        from datasmith_spark.datagen import clips_df
+    def clips(self, tmp_path_factory):
+        from datasmith_spark.datagen import clips_pdf
 
-        return clips_df(spark, 120, n_partitions=4).cache()
+        pdf = clips_pdf(120)
+        return pdf, write_rows(tmp_path_factory.mktemp("clips"), pdf)
 
     def test_matches_single_process(self, spark, clips):
         from datasmith_spark.core.audio import decode
-        from datasmith_spark.operators.audio_ops import spectral_quality
+        from datasmith_spark.operators.audio_ops import spectral_quality_scan
 
-        out = spectral_quality(clips).toPandas().set_index("clip_id").sort_index()
-        src = clips.toPandas().set_index("clip_id").sort_index()
+        pdf, path = clips
+        out = spectral_quality_scan(spark, path).toPandas().set_index("clip_id").sort_index()
+        src = pdf.set_index("clip_id").sort_index()
         assert len(out) == len(src) and out.ok.sum() > 100
         for cid, row in src.iterrows():
             sr = None if pd.isna(row.sr_hz) else int(row.sr_hz)
@@ -113,8 +117,8 @@ class TestSpectralSpark:
             assert (None if pd.isna(got.bw_hz) else int(got.bw_hz)) == want_bw, cid
             assert bool(got.keep) == ((pcm is not None) and ok_snr and not narrow)
 
-    def test_rate_lane_arbitrary_ids_and_transcripts(self, spark):
-        from datasmith_spark.operators.audio_ops import speaking_rate
+    def test_rate_lane_arbitrary_ids_and_transcripts(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import speaking_rate_scan
 
         sr = 8000
         voiced = encode(_tone(sr, 10.0, 440.0), "pcm16")  # 10 s active
@@ -125,11 +129,8 @@ class TestSpectralSpark:
             ("ws-only", voiced, sr, 10_000, "pcm16", "   "),
             ("no-audio", b"\x00", sr, 10, "pcm16", "hello there friend"),
         ]
-        df = spark.createDataFrame(
-            rows,
-            "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
-        )
-        out = speaking_rate(df).toPandas().set_index("clip_id")
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=CLIP_COLUMNS))
+        out = speaking_rate_scan(spark, path).toPandas().set_index("clip_id")
         assert bool(out.loc["s3://x/ok clip.wav"].rate_keep)
         assert not bool(out.loc["too-thin"].rate_keep)
         assert not bool(out.loc["impossible"].rate_keep)
@@ -138,19 +139,17 @@ class TestSpectralSpark:
         got = out.loc["no-audio"]
         assert not bool(got.ok) and pd.isna(got.active_ms) and not bool(got.rate_keep)
 
-    def test_batch_size_invariance(self, spark, clips):
-        from datasmith_spark.operators.audio_ops import spectral_quality
+    def test_batch_size_invariance(self, clips):
+        """The kernel is row-wise: any split of the batch gives the same rows."""
+        from datasmith_spark.operators.audio_ops import _spectral_pdf
 
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        old = spark.conf.get(key)
-        try:
-            spark.conf.set(key, "7")
-            a = spectral_quality(clips).toPandas().sort_values("clip_id").reset_index(drop=True)
-            spark.conf.set(key, "1000")
-            b = spectral_quality(clips).toPandas().sort_values("clip_id").reset_index(drop=True)
-        finally:
-            spark.conf.set(key, old)
-        pd.testing.assert_frame_equal(a, b)
+        pdf, _ = clips
+        whole = _spectral_pdf(pdf)
+        parts = pd.concat(
+            [_spectral_pdf(pdf.iloc[i : i + 7]) for i in range(0, len(pdf), 7)],
+            ignore_index=True,
+        )
+        pd.testing.assert_frame_equal(whole, parts)
 
     def test_quality_fixture_is_honest(self):
         """The committed q46/q47 fixture must equal a fresh regeneration on a
@@ -181,54 +180,15 @@ class TestSpectralSpark:
             assert q in QUERIES and q in ORACLE_SQL
 
 
-class TestFusedQuality:
-    def test_fused_matches_per_lane_ops(self, spark):
-        """audio_quality (one decode) == vad_clips + spectral_quality +
-        speaking_rate run separately, column for column."""
-        import pandas as pd
-
-        from datasmith_spark.datagen import clips_df
-        from datasmith_spark.operators.audio_ops import (
-            audio_quality,
-            spectral_quality,
-            speaking_rate,
-            vad_clips,
-        )
-
-        clips = clips_df(spark, 100, n_partitions=4).cache()
-        fused = audio_quality(clips).toPandas().set_index("clip_id").sort_index()
-        vad = vad_clips(clips).toPandas().set_index("clip_id").sort_index()
-        spec = spectral_quality(clips).toPandas().set_index("clip_id").sort_index()
-        rate = speaking_rate(clips).toPandas().set_index("clip_id").sort_index()
-
-        def eq(a, b, name):
-            a = a.astype("object").where(a.notna(), "<null>").astype(str)
-            b = b.astype("object").where(b.notna(), "<null>").astype(str)
-            assert (a == b).all(), name
-
-        for c in ("n_samples", "n_frames", "n_active", "n_clipped"):
-            eq(fused[c], vad[c], c)
-        eq(fused["vad_keep"], vad["keep"], "vad_keep")
-        for c in ("n_harmonic", "snr_log2", "snr_ok", "bw_hz", "narrowband"):
-            eq(fused[c], spec[c], c)
-        for c in ("n_chars", "active_ms", "rate_keep"):
-            eq(fused[c], rate[c], c)
-        want_keep = vad["keep"] & spec["keep"] & rate["rate_keep"]
-        eq(fused["keep"], want_keep, "keep")
-        # the composite keep is the AND of the lane columns, and it neither
-        # keeps nor drops every clip
-        lanes = fused.vad_keep & fused.snr_ok & ~fused.narrowband & fused.rate_keep & fused.ok
-        assert (fused.keep == lanes).all()
-        assert 0 < fused.keep.sum() < len(fused)
-        clips.unpersist()
-
-
 class TestNormalize:
-    def test_peak_lands_on_target(self, spark):
+    def test_peak_lands_on_target(self, spark, tmp_path):
+        import hashlib
+
         from datasmith_spark.core.audio import decode
         from datasmith_spark.operators.audio_ops import (
             NORM_TARGET_PEAK,
-            normalize_clips,
+            _normalize_pdf,
+            normalize_digest_scan,
         )
 
         sr = 8000
@@ -239,10 +199,8 @@ class TestNormalize:
             ("silent", encode(np.zeros(sr), "pcm16"), sr, 1000, "pcm16", "s"),
             ("broken", b"\x00", sr, 10, "pcm16", "b"),
         ]
-        df = spark.createDataFrame(
-            rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string"
-        )
-        out = normalize_clips(df).toPandas().set_index("clip_id")
+        pdf = pd.DataFrame(rows, columns=CLIP_COLUMNS)
+        out = _normalize_pdf(pdf, NORM_TARGET_PEAK, False).set_index("clip_id")
         src = {r[0]: r[1] for r in rows}
         for cid, codec in (("quiet", "pcm16"), ("loud", "pcm16"), ("mulaw", "mulaw")):
             got = out.loc[cid]
@@ -254,6 +212,11 @@ class TestNormalize:
         for cid in ("silent", "broken"):
             assert not bool(out.loc[cid].normalized)
             assert bytes(out.loc[cid].bytes) == src[cid]
+        # the Spark scan emits the digests of exactly these payloads
+        dig = normalize_digest_scan(spark, write_rows(tmp_path, pdf)).toPandas().set_index("clip_id")
+        for cid, row in out.iterrows():
+            assert dig.loc[cid].payload_md5 == hashlib.md5(bytes(row.bytes)).hexdigest(), cid
+            assert bool(dig.loc[cid].normalized) == bool(row.normalized), cid
 
     def test_target_is_exact_binary_fraction(self):
         from datasmith_spark.operators.audio_ops import NORM_TARGET_PEAK
@@ -262,15 +225,15 @@ class TestNormalize:
         assert NORM_TARGET_PEAK == 57.0 / 64.0
         assert NORM_TARGET_PEAK.hex() == "0x1.c800000000000p-1"
 
-    def test_digest_mode_matches_bytes_mode(self, spark):
+    def test_digest_mode_matches_bytes_mode(self):
         import hashlib
 
-        from datasmith_spark.datagen import clips_df
-        from datasmith_spark.operators.audio_ops import normalize_clips
+        from datasmith_spark.datagen import clips_pdf
+        from datasmith_spark.operators.audio_ops import NORM_TARGET_PEAK, _normalize_pdf
 
-        clips = clips_df(spark, 60, n_partitions=2)
-        full = normalize_clips(clips).toPandas().set_index("clip_id")
-        dig = normalize_clips(clips, digest=True).toPandas().set_index("clip_id")
+        clips = clips_pdf(60)
+        full = _normalize_pdf(clips, NORM_TARGET_PEAK, False).set_index("clip_id")
+        dig = _normalize_pdf(clips, NORM_TARGET_PEAK, True).set_index("clip_id")
         assert len(full) == len(dig) == 60
         for cid, row in full.iterrows():
             assert dig.loc[cid].payload_md5 == hashlib.md5(bytes(row.bytes)).hexdigest()
@@ -302,16 +265,17 @@ class TestNormalize:
         assert "q50_normalize_loudness" in ORACLE_SQL
 
 
-def test_quality_gate_composes_with_label_pipeline(spark):
-    """The README composition: audio_quality gate -> left-semi -> the
+def test_quality_gate_composes_with_label_pipeline(spark, tmp_path):
+    """The README composition: quality_gate_scan -> left-semi -> the
     reference label chain; survivors' labels equal the ungated run's labels
     for the same clips (gating composes, it does not perturb)."""
-    from datasmith_spark.datagen import clips_df
-    from datasmith_spark.operators.audio_ops import audio_quality
+    from datasmith_spark.datagen import clips_pdf
+    from datasmith_spark.operators.audio_ops import quality_gate_scan
     from datasmith_spark.pipeline import label_clips
 
-    clips = clips_df(spark, 80, n_partitions=4).cache()
-    q = audio_quality(clips)
+    path = write_rows(tmp_path, clips_pdf(80))
+    clips = spark.read.parquet(path)
+    q = quality_gate_scan(spark, path)
     good = clips.join(q.filter("keep").select("clip_id"), "clip_id", "left_semi")
     gated = label_clips(good, n_parts=8).toPandas().set_index("clip_id").sort_index()
     full = label_clips(clips, n_parts=8).toPandas().set_index("clip_id").sort_index()
@@ -321,4 +285,3 @@ def test_quality_gate_composes_with_label_pipeline(spark):
         a = gated[c].astype("object").where(gated[c].notna(), "<null>").astype(str)
         b = sub[c].astype("object").where(sub[c].notna(), "<null>").astype(str)
         assert (a == b).all(), c
-    clips.unpersist()

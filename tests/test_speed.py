@@ -1,4 +1,5 @@
-"""Speed-perturbation augmentation (operators/audio_ops.py q54 lane)."""
+"""Speed, segment, feature and augmentation lanes of operators/audio_ops.py
+(q54-q57, q63, q64, q71, q78, q84, q85): kernels and their Spark scans."""
 
 from __future__ import annotations
 
@@ -10,8 +11,17 @@ import pytest
 
 from datasmith_spark.core.audio import decode, encode
 from datasmith_spark.operators.audio_ops import SPEED_FACTORS, _speed_pdf
+from datasmith_spark.operators.scan_decode import CLIP_COLUMNS
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
+
+
+def _clips(tmp_path, n: int) -> tuple[pd.DataFrame, str]:
+    """Datagen clips 0..n-1 and the parquet dir holding them."""
+    from datasmith_spark.datagen import clips_pdf
+
+    pdf = clips_pdf(n)
+    return pdf, write_rows(tmp_path, pdf)
 
 
 def _tone_pdf(sr: int = 16000, f: float = 440.0, secs: float = 2.0) -> pd.DataFrame:
@@ -87,18 +97,12 @@ class TestSpeedKernel:
 
 
 class TestSpeedSpark:
-    @pytest.fixture(scope="class")
-    def clips(self, spark):
-        from datasmith_spark.datagen import clips_df
+    def test_spark_matches_kernel(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import speed_digest_scan
 
-        return clips_df(spark, 120, n_partitions=4).cache()
-
-    def test_spark_matches_kernel(self, spark, clips):
-        from datasmith_spark.operators.audio_ops import speed_perturb_clips
-
-        src = clips.toPandas()
+        src, path = _clips(tmp_path, 120)
         got = (
-            speed_perturb_clips(clips, digest=True)
+            speed_digest_scan(spark, path)
             .toPandas()
             .sort_values(["clip_id", "f_num"])
             .reset_index(drop=True)
@@ -112,17 +116,14 @@ class TestSpeedSpark:
         assert list(got.payload_md5) == list(want.payload_md5)
         assert list(got.dur_ms.fillna(-1)) == list(want.dur_ms.fillna(-1))
 
-    def test_arbitrary_clip_ids(self, spark):
-        from datasmith_spark.operators.audio_ops import speed_perturb_clips
+    def test_arbitrary_clip_ids(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import speed_digest_scan
 
         sr = 16000
         x = 0.4 * np.sin(2 * np.pi * 500 * np.arange(sr) / sr)
         rows = [("s3://bucket/real file (1).wav", encode(x, "pcm16"), sr, 1000, "pcm16", "t")]
-        df = spark.createDataFrame(
-            rows,
-            "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
-        )
-        out = speed_perturb_clips(df).toPandas()
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=CLIP_COLUMNS))
+        out = speed_digest_scan(spark, path).toPandas()
         assert len(out) == 3 and out.sp_ok.all()
 
     def test_speed_fixture_is_honest(self):
@@ -249,21 +250,18 @@ class TestSegmentKernel:
             b = fresh[c].astype("object").where(fresh[c].notna(), "<null>").astype(str)
             assert (a == b).all(), c
 
-    def test_spark_matches_kernel(self, spark):
-        from datasmith_spark.datagen import clips_df
-        from datasmith_spark.operators.audio_ops import _segment_pdf, segment_clips
+    def test_spark_matches_kernel(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import _segment_pdf, segment_digest_scan
 
-        clips = clips_df(spark, 80, n_partitions=4)
+        src, path = _clips(tmp_path, 80)
         got = (
-            segment_clips(clips, digest=True)
+            segment_digest_scan(spark, path)
             .toPandas()
             .sort_values(["clip_id", "seg_idx"], na_position="first")
             .reset_index(drop=True)
         )
         want = (
-            _segment_pdf(
-                clips.toPandas(), 1000, 500, 20, -40.0, True
-            )
+            _segment_pdf(src, 1000, 500, 20, -40.0, True)
             .sort_values(["clip_id", "seg_idx"], na_position="first")
             .reset_index(drop=True)
         )
@@ -301,21 +299,20 @@ class TestCmvn:
         a, b = cmvn(f), cmvn(g)
         assert np.allclose(a, b, atol=1e-9)
 
-    def test_spark_matches_kernel_and_fixture_honest(self, spark):
+    def test_spark_matches_kernel_and_fixture_honest(self, spark, tmp_path):
         import sys
 
-        from datasmith_spark.datagen import clips_df
-        from datasmith_spark.operators.audio_ops import _cmvn_pdf, cmvn_features
+        from datasmith_spark.operators.audio_ops import _cmvn_pdf, cmvn_digest_scan
 
-        clips = clips_df(spark, 80, n_partitions=4)
+        src, path = _clips(tmp_path, 80)
         got = (
-            cmvn_features(clips, digest=True)
+            cmvn_digest_scan(spark, path)
             .toPandas()
             .sort_values("clip_id")
             .reset_index(drop=True)
         )
         want = (
-            _cmvn_pdf(clips.toPandas(), 512, 256, 40, True)
+            _cmvn_pdf(src, 512, 256, 40, True)
             .sort_values("clip_id")
             .reset_index(drop=True)
         )
@@ -366,21 +363,20 @@ class TestSpecAugment:
 
         assert spec_augment(np.zeros((0, 40)), "x").shape == (0, 40)
 
-    def test_spark_matches_kernel_and_fixture_honest(self, spark):
+    def test_spark_matches_kernel_and_fixture_honest(self, spark, tmp_path):
         import sys
 
-        from datasmith_spark.datagen import clips_df
-        from datasmith_spark.operators.audio_ops import _specaug_pdf, specaug_features
+        from datasmith_spark.operators.audio_ops import _specaug_pdf, specaug_digest_scan
 
-        clips = clips_df(spark, 80, n_partitions=4)
+        src, path = _clips(tmp_path, 80)
         got = (
-            specaug_features(clips, digest=True)
+            specaug_digest_scan(spark, path)
             .toPandas()
             .sort_values("clip_id")
             .reset_index(drop=True)
         )
         want = (
-            _specaug_pdf(clips.toPandas(), 512, 256, 40, True)
+            _specaug_pdf(src, 512, 256, 40, True)
             .sort_values("clip_id")
             .reset_index(drop=True)
         )
@@ -423,21 +419,20 @@ class TestNoiseAugment:
         with pytest.raises(ValueError):
             add_noise(np.ones(10), "k", snr_db=15)
 
-    def test_spark_matches_kernel_and_fixture_honest(self, spark):
+    def test_spark_matches_kernel_and_fixture_honest(self, spark, tmp_path):
         import sys
 
-        from datasmith_spark.datagen import clips_df
-        from datasmith_spark.operators.audio_ops import _noise_pdf, noise_aug_clips
+        from datasmith_spark.operators.audio_ops import _noise_pdf, noise_digest_scan
 
-        clips = clips_df(spark, 80, n_partitions=4)
+        src, path = _clips(tmp_path, 80)
         got = (
-            noise_aug_clips(clips, digest=True)
+            noise_digest_scan(spark, path)
             .toPandas()
             .sort_values("clip_id")
             .reset_index(drop=True)
         )
         want = (
-            _noise_pdf(clips.toPandas(), 10, True)
+            _noise_pdf(src, 10, True)
             .sort_values("clip_id")
             .reset_index(drop=True)
         )
@@ -498,25 +493,24 @@ class TestTempoPerturb:
         )
         assert list(whole.payload_md5) == list(parts.payload_md5)
 
-    def test_spark_matches_kernel_and_fixture_honest(self, spark):
+    def test_spark_matches_kernel_and_fixture_honest(self, spark, tmp_path):
         import sys
 
-        from datasmith_spark.datagen import clips_df
         from datasmith_spark.operators.audio_ops import (
             TEMPO_FACTORS,
             _tempo_pdf,
-            tempo_perturb_clips,
+            tempo_digest_scan,
         )
 
-        clips = clips_df(spark, 60, n_partitions=4)
+        src, path = _clips(tmp_path, 60)
         got = (
-            tempo_perturb_clips(clips, digest=True)
+            tempo_digest_scan(spark, path)
             .toPandas()
             .sort_values(["clip_id", "f_num"])
             .reset_index(drop=True)
         )
         want = (
-            _tempo_pdf(clips.toPandas(), TEMPO_FACTORS, "pcm16", True)
+            _tempo_pdf(src, TEMPO_FACTORS, "pcm16", True)
             .sort_values(["clip_id", "f_num"])
             .reset_index(drop=True)
         )
@@ -566,14 +560,9 @@ class TestReverbAugment:
         assert reverb(np.zeros(4000), "k", 16000) is None
         assert reverb(self._imp(), "k", 0) is None
 
-    def test_spark_matches_kernel_arbitrary_ids(self, spark):
-        import hashlib
-
-        import pandas as pd
-
-        from datasmith_spark.core.audio import decode, encode
+    def test_spark_matches_kernel_arbitrary_ids(self, spark, tmp_path):
         from datasmith_spark.core.resample import reverb
-        from datasmith_spark.operators.audio_ops import reverb_clips
+        from datasmith_spark.operators.audio_ops import reverb_digest_scan
 
         rng = np.random.default_rng(81)
         rows = []
@@ -583,13 +572,11 @@ class TestReverbAugment:
             else:
                 pcm = np.clip(rng.normal(0, 0.3, 8000), -1, 1)
             rows.append((cid, encode(pcm, "pcm16"), 16000, 500, "pcm16", ""))
-        pdf = pd.DataFrame(
-            rows, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
-        )
+        pdf = pd.DataFrame(rows, columns=CLIP_COLUMNS)
         pdf.loc[3, "bytes"] = b"x"  # undecodable (odd length for pcm16)
         out = {
             r["clip_id"]: r
-            for r in reverb_clips(spark.createDataFrame(pdf), digest=True).collect()
+            for r in reverb_digest_scan(spark, write_rows(tmp_path, pdf)).collect()
         }
         for cid, buf, sr, _, codec, _ in rows:
             if cid == "broken":
@@ -602,8 +589,6 @@ class TestReverbAugment:
         assert not out["silent"]["augmented"] and not out["broken"]["augmented"]
 
     def test_fixture_honesty(self):
-        import pandas as pd
-
         from scripts.make_audio_reverb_fixture import oracle_rows
 
         fx = pd.read_parquet(f"{REPO}/fixtures/oracle_audio_reverb_n4000.parquet")
@@ -617,13 +602,8 @@ class TestTranscode:
     requantization to pcm16, undecodable flag-not-crash, Spark==kernel,
     fixture honesty."""
 
-    def test_passthrough_and_requantize(self, spark):
-        import hashlib
-
-        import pandas as pd
-
-        from datasmith_spark.core.audio import decode, encode
-        from datasmith_spark.operators.audio_ops import transcode_clips
+    def test_passthrough_and_requantize(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import transcode_digest_scan
 
         rng = np.random.default_rng(17)
         pcm = np.clip(rng.normal(0, 0.3, 4000), -1, 1)
@@ -645,7 +625,7 @@ class TestTranscode:
         )
         out = {
             r["clip_id"]: r
-            for r in transcode_clips(spark.createDataFrame(pdf), digest=True).collect()
+            for r in transcode_digest_scan(spark, write_rows(tmp_path, pdf)).collect()
         }
         # target codec: byte-identical passthrough, flagged untranscoded
         assert not out["already"]["transcoded"]
@@ -661,8 +641,6 @@ class TestTranscode:
         assert not out["broken"]["transcoded"]
 
     def test_fixture_honesty(self):
-        import pandas as pd
-
         from scripts.make_audio_transcode_fixture import oracle_rows
 
         fx = pd.read_parquet(
@@ -718,25 +696,24 @@ class TestPitchPerturb:
         )
         assert list(whole.payload_md5) == list(parts.payload_md5)
 
-    def test_spark_matches_kernel_and_fixture_honest(self, spark):
+    def test_spark_matches_kernel_and_fixture_honest(self, spark, tmp_path):
         import sys
 
-        from datasmith_spark.datagen import clips_df
         from datasmith_spark.operators.audio_ops import (
             PITCH_FACTORS,
             _pitch_pdf,
-            pitch_perturb_clips,
+            pitch_digest_scan,
         )
 
-        clips = clips_df(spark, 60, n_partitions=4)
+        src, path = _clips(tmp_path, 60)
         got = (
-            pitch_perturb_clips(clips, digest=True)
+            pitch_digest_scan(spark, path)
             .toPandas()
             .sort_values(["clip_id", "f_num"])
             .reset_index(drop=True)
         )
         want = (
-            _pitch_pdf(clips.toPandas(), PITCH_FACTORS, "pcm16", True)
+            _pitch_pdf(src, PITCH_FACTORS, "pcm16", True)
             .sort_values(["clip_id", "f_num"])
             .reset_index(drop=True)
         )
@@ -764,50 +741,45 @@ class TestAugmentRouter:
     from the standalone lanes (their equality with the committed fixtures
     is each lane's own test; here we pin routing + composition)."""
 
-    def test_routes_partition_the_batch(self, spark):
-        from datasmith_spark.datagen import clips_df
-        from datasmith_spark.operators.audio_ops import augment_route_clips
+    def test_routes_partition_the_batch(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import augment_route_digest_scan
 
-        clips = clips_df(spark, 50, n_partitions=3)
-        out = augment_route_clips(clips).toPandas()
+        _, path = _clips(tmp_path, 50)
+        out = augment_route_digest_scan(spark, path).toPandas()
         assert len(out) == 50 and out.clip_id.is_unique
         # crc32 routing spreads across all five lanes on 50 clips
         assert set(out.aug) == {"noise", "reverb", "speed", "tempo", "pitch"}
 
-    def test_arbitrary_ids(self, spark):
-        from datasmith_spark.operators.audio_ops import augment_route_clips
+    def test_arbitrary_ids(self, spark, tmp_path):
+        from datasmith_spark.operators.audio_ops import augment_route_digest_scan
 
         rows = [
             ("s3://bucket/a.wav", encode(0.3 * np.sin(np.arange(24000) / 9.0), "pcm16"),
              16000, 1500, "pcm16", "hello"),
             ("weird id!", None, 16000, None, "pcm16", None),
         ]
-        df = spark.createDataFrame(
-            rows,
-            "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string",
-        )
-        out = augment_route_clips(df).toPandas()
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=CLIP_COLUMNS))
+        out = augment_route_digest_scan(spark, path).toPandas()
         assert len(out) == 2
         ok = out.set_index("clip_id")["ok"]
         assert bool(ok["s3://bucket/a.wav"]) is True
         assert bool(ok["weird id!"]) is False  # undecodable flags, not crashes
 
-    def test_matches_standalone_lane(self, spark):
+    def test_matches_standalone_lane(self, spark, tmp_path):
         """Routed digests equal the standalone lane digests for the routed
         clips (composition adds nothing and loses nothing)."""
-        from datasmith_spark.datagen import clips_df
         from datasmith_spark.operators.audio_ops import (
-            augment_route_clips,
-            tempo_perturb_clips,
+            augment_route_digest_scan,
+            tempo_digest_scan,
         )
 
-        clips = clips_df(spark, 40, n_partitions=2)
+        _, path = _clips(tmp_path, 40)
         route = lambda cid: int(cid.rsplit("_", 1)[1]) % 5
-        out = augment_route_clips(clips, route_fn=route).toPandas()
+        out = augment_route_digest_scan(spark, path, route_fn=route).toPandas()
         tempo_ids = {c for c in out[out.aug == "tempo"].clip_id}
         assert tempo_ids  # route 3 present in 40 clips
         lane = (
-            tempo_perturb_clips(clips, factors=((11, 10),), digest=True)
+            tempo_digest_scan(spark, path, factors=((11, 10),))
             .toPandas()
             .set_index("clip_id")
         )

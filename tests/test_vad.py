@@ -1,4 +1,4 @@
-"""VAD/trim/clipping kernel + Spark operators + q42/q43 text-quality ops."""
+"""VAD/trim/clipping kernel + Spark scans + q42/q43 text-quality ops."""
 
 from __future__ import annotations
 
@@ -7,9 +7,10 @@ import pandas as pd
 import pytest
 
 from datasmith_spark.core.audio import decode, encode
-from datasmith_spark.core.vad import vad_keep, vad_metrics
+from datasmith_spark.core.vad import ACTIVE_DB, FRAME_MS, vad_keep, vad_metrics
+from datasmith_spark.operators.scan_decode import CLIP_COLUMNS
 
-from .conftest import REPO
+from .conftest import REPO, write_rows
 
 
 def _padded_tone(sr: int, lead_s: float, tone_s: float, tail_s: float,
@@ -65,17 +66,19 @@ class TestVadKernel:
 
 class TestVadSpark:
     @pytest.fixture(scope="class")
-    def clips(self, spark):
-        from datasmith_spark.datagen import clips_df
+    def clips(self, tmp_path_factory):
+        from datasmith_spark.datagen import clips_pdf
 
-        return clips_df(spark, 120, n_partitions=4).cache()
+        pdf = clips_pdf(120)
+        return pdf, write_rows(tmp_path_factory.mktemp("clips"), pdf)
 
     def test_matches_single_process(self, spark, clips):
         from datasmith_spark.core.audio import decode
-        from datasmith_spark.operators.audio_ops import vad_clips
+        from datasmith_spark.operators.audio_ops import vad_trim_scan
 
-        out = vad_clips(clips).toPandas().set_index("clip_id").sort_index()
-        src = clips.toPandas().set_index("clip_id").sort_index()
+        pdf, path = clips
+        out = vad_trim_scan(spark, path).toPandas().set_index("clip_id").sort_index()
+        src = pdf.set_index("clip_id").sort_index()
         assert len(out) == len(src)
         assert out.ok.sum() > 100  # most clips decode
         for cid, row in src.iterrows():
@@ -91,10 +94,10 @@ class TestVadSpark:
             assert (None if pd.isna(got.trim_end_ms) else int(got.trim_end_ms)) == t1
             assert bool(got.keep) == vad_keep(ok, ns, nf, na, nc), cid
 
-    def test_arbitrary_clip_ids(self, spark):
+    def test_arbitrary_clip_ids(self, spark, tmp_path):
         """Real-world ids (no datagen `_<int>` suffix) must work — the exact
         failure mode of the r4 audio_fp defect (VERDICT r4 What's wrong #1)."""
-        from datasmith_spark.operators.audio_ops import vad_clips
+        from datasmith_spark.operators.audio_ops import vad_trim_scan
 
         rows = [
             ("s3://bucket/weird id!.wav", encode(_padded_tone(8000, 0.1, 0.3, 0.1), "pcm16"),
@@ -102,28 +105,24 @@ class TestVadSpark:
             ("no-suffix", b"\x00", 16000, 10, "pcm16", ""),  # misaligned -> ok=false
             ("unicode-ид", encode(np.zeros(1600), "mulaw"), 16000, 100, "mulaw", "x"),
         ]
-        df = spark.createDataFrame(
-            rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string"
-        )
-        out = vad_clips(df).toPandas().set_index("clip_id")
+        path = write_rows(tmp_path, pd.DataFrame(rows, columns=CLIP_COLUMNS))
+        out = vad_trim_scan(spark, path).toPandas().set_index("clip_id")
         assert bool(out.loc["s3://bucket/weird id!.wav"].ok)
         assert not bool(out.loc["no-suffix"].ok)
         assert bool(out.loc["unicode-ид"].ok)
         assert int(out.loc["unicode-ид"].n_active) == 0  # silence
 
-    def test_batch_size_invariance(self, spark, clips):
-        from datasmith_spark.operators.audio_ops import vad_clips
+    def test_batch_size_invariance(self, clips):
+        """The kernel is row-wise: any split of the batch gives the same rows."""
+        from datasmith_spark.operators.audio_ops import _vad_pdf
 
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        old = spark.conf.get(key)
-        try:
-            spark.conf.set(key, "7")
-            a = vad_clips(clips).toPandas().sort_values("clip_id").reset_index(drop=True)
-            spark.conf.set(key, "1000")
-            b = vad_clips(clips).toPandas().sort_values("clip_id").reset_index(drop=True)
-        finally:
-            spark.conf.set(key, old)
-        pd.testing.assert_frame_equal(a, b)
+        pdf, _ = clips
+        whole = _vad_pdf(pdf, FRAME_MS, ACTIVE_DB)
+        parts = pd.concat(
+            [_vad_pdf(pdf.iloc[i : i + 7], FRAME_MS, ACTIVE_DB) for i in range(0, len(pdf), 7)],
+            ignore_index=True,
+        )
+        pd.testing.assert_frame_equal(whole, parts)
 
     def test_vad_fixture_is_honest(self):
         """The committed q41 fixture must equal a fresh regeneration on a
@@ -146,9 +145,11 @@ class TestVadSpark:
 
 
 class TestTrimSpark:
-    def test_trim_is_lossless_byte_cut(self, spark):
+    def test_trim_is_lossless_byte_cut(self, spark, tmp_path):
+        import hashlib
+
         from datasmith_spark.core.vad import active_span_samples
-        from datasmith_spark.operators.audio_ops import trim_clips
+        from datasmith_spark.operators.audio_ops import _trim_pdf, trim_digest_scan
 
         sr = 8000
         x = _padded_tone(sr, 0.5, 1.0, 0.25)
@@ -158,10 +159,8 @@ class TestTrimSpark:
             ("silent", encode(np.zeros(sr), "pcm16"), sr, 1000, "pcm16", "s"),
             ("broken", b"\x00", sr, 10, "pcm16", "b"),
         ]
-        df = spark.createDataFrame(
-            rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, transcript string"
-        )
-        out = trim_clips(df).toPandas().set_index("clip_id")
+        pdf = pd.DataFrame(rows, columns=CLIP_COLUMNS)
+        out = _trim_pdf(pdf, FRAME_MS, ACTIVE_DB, False).set_index("clip_id")
         src = {r[0]: r[1] for r in rows}
         # trimmed payload is an exact byte slice of the source (lossless)
         for cid, codec, isz in (("tone", "pcm16", 2), ("tone-mulaw", "mulaw", 1)):
@@ -174,17 +173,21 @@ class TestTrimSpark:
         for cid in ("silent", "broken"):
             assert not bool(out.loc[cid].trimmed)
             assert bytes(out.loc[cid].bytes) == src[cid]
+        # the Spark scan emits the digests of exactly these payloads
+        dig = trim_digest_scan(spark, write_rows(tmp_path, pdf)).toPandas().set_index("clip_id")
+        for cid, row in out.iterrows():
+            assert dig.loc[cid].payload_md5 == hashlib.md5(bytes(row.bytes)).hexdigest(), cid
+            assert bool(dig.loc[cid].trimmed) == bool(row.trimmed), cid
 
-    def test_digest_mode_matches_bytes_mode(self, spark):
+    def test_digest_mode_matches_bytes_mode(self):
         import hashlib
 
-        from datasmith_spark.operators.audio_ops import trim_clips
+        from datasmith_spark.datagen import clips_pdf
+        from datasmith_spark.operators.audio_ops import _trim_pdf
 
-        from datasmith_spark.datagen import clips_df
-
-        clips = clips_df(spark, 60, n_partitions=2)
-        full = trim_clips(clips).toPandas().set_index("clip_id")
-        dig = trim_clips(clips, digest=True).toPandas().set_index("clip_id")
+        clips = clips_pdf(60)
+        full = _trim_pdf(clips, FRAME_MS, ACTIVE_DB, False).set_index("clip_id")
+        dig = _trim_pdf(clips, FRAME_MS, ACTIVE_DB, True).set_index("clip_id")
         assert len(full) == len(dig) == 60
         for cid, row in full.iterrows():
             assert dig.loc[cid].payload_md5 == hashlib.md5(bytes(row.bytes)).hexdigest()
