@@ -1643,10 +1643,11 @@ def _quality_gate_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def quality_gate_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     """Fused five-lane audio+text quality gate (q167): the one-stop keep
-    decision with per-lane attribution. At 10^12 clips the decode pass is the dominant
-    cost, and this operator pays it ONCE for five verdicts instead of five
-    times — the fusion you actually run in production, with the per-lane
-    queries (q41/q46/q47/q163/q166) as its audited components."""
+    decision with per-lane attribution. At 10^12 clips the decode pass is
+    the dominant cost, and this operator pays it ONCE for five verdicts
+    instead of five times — the fusion you actually run in production, with
+    the per-lane queries (q41/q46/q47/q163/q166) as its audited
+    components."""
     return manifest_scan(
         spark,
         input_dir,

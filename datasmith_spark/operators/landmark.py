@@ -163,8 +163,9 @@ def landmark_scan(
     spark: SparkSession, input_dir: str, every: int = 1, aug_every: int = 0
 ) -> DataFrame:
     """(clip_id, lm_hash, t) rows over a parquet directory via the fused
-    manifest scan (audio bytes never enter the JVM — q157's path). Kernel-bound like the
-    fingerprint scans (resample+FFT dominates reads)."""
+    manifest scan (audio bytes never enter the JVM — q157's path).
+    Kernel-bound like the fingerprint scans (resample+FFT dominates
+    reads)."""
     return manifest_scan(spark, input_dir, lambda pdf: _lm_rows(pdf, every, aug_every), LM_KEYS_DDL)
 
 

@@ -59,7 +59,7 @@ SS_HYP_RADIX = 4096  # hypothesis code = ai * RADIX + bj (bins < RADIX)
 def _sig_rows(pdf: pd.DataFrame, every: int, aug_every: int) -> pd.DataFrame:
     """One pandas batch of clips -> (clip_id, peaks, k) signature rows
     (+ planted speed variants under sp_ ids every aug_every-th clip).
-    Composable default (every=1, aug_every=0) accepts ARBITRARY clip ids."""
+    The default (every=1, aug_every=0) accepts ARBITRARY clip ids."""
     from .audio_fp import clip_index
     from .landmark import _head16
 

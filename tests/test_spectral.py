@@ -17,7 +17,6 @@ from datasmith_spark.core.spectral import (
     speaking_rate_keep,
     spectral_metrics,
 )
-
 from datasmith_spark.operators.scan_decode import CLIP_COLUMNS
 
 from .conftest import REPO, write_rows
